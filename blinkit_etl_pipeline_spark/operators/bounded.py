@@ -9,8 +9,8 @@ adaptive plan runs ``getFinalPhysicalPlan()``, which EXECUTES every
 upstream query stage (shuffles, broadcast builds) before returning the
 RDD — so each round's plan-compile blocks on a chain of stage-barrier
 jobs whose replanning has nothing to adapt (the sizes are known bounded
-a priori). Measured on the round-shaped probe (tools/probe_tordd_r14.py,
-local[32]): construct 0.75 s/checkpoint with AQE vs 0.27 s without,
+a priori). Measured on a round-shaped probe (OPTIMIZATION_r14.md, "The
+per-checkpoint toRdd floor"; local[32]): construct 0.75 s/checkpoint with AQE vs 0.27 s without,
 with the deferred stages then pipelining inside the ONE final
 materialization job.
 

@@ -9,9 +9,11 @@ affected curated tables wholesale. ``ns_incr_revenue`` /
 module extends the same algebra (operators/ivm.py partials +
 operators/incremental.py store lifecycle) to the other four curated
 tables, so a file drop refreshes each affected table at a cost ∝ the
-drop, never ∝ history. The streaming composition — file-source
-bookmark stream routed per source prefix into ONLY the affected
-stores — lives in ``streaming/curated_ingest.py``.
+drop, never ∝ history. Which job feeds which store is declared once,
+in ``runner.JOB_TABLE`` (each entry's curated outputs name their
+``SPECS`` table); the streaming composition — file-source bookmark
+stream routed per source prefix into ONLY the affected stores — lives
+in ``streaming/curated_ingest.py`` and reads the same table.
 
 Per-table derivations (every sum int64-quantized BEFORE aggregation —
 ivm module doc; cents lattice for money, 1e-6 lattice for ratios):
@@ -50,8 +52,9 @@ ivm module doc; cents lattice for money, 1e-6 lattice for ratios):
   (``AVG`` skips nulls; dividing by the row count would diverge).
 
 With these two, every curated table the batch runner writes has an
-incremental twin — ``runner.handle_new_file_incremental`` composes
-them with the C1 routing table into the event-driven mode.
+incremental twin — ``runner.handle_new_file_incremental`` folds a
+drop through each routed job's ``JOB_TABLE`` transform into these
+stores, the event-driven mode of the same C1 routing.
 
 Delta-slice contract (what a "file drop" may contain): the upstream
 transforms dedup on (campaign_id, date), require unique order_id, and

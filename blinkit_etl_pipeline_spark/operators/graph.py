@@ -413,7 +413,7 @@ def pagerank_delta(
     full recompute instead. On the bounded-degree localized-churn
     class the operator exists for (web/citation graphs), the frontier
     stays a sliver and the delta path beats the rerun outright
-    (tools/scale_pagerank_incr_r9.py; PLANS.md r9). On a cluster the
+    (PLANS.md r9, "the delta-path win demonstrated"). On a cluster the
     cached edge-list scans become file-pruned reads of the
     src-clustered edge store.
 
@@ -608,7 +608,7 @@ def pagerank_delta(
 
         with bounded_plan(e_old.sparkSession):
             delta_state, ds = _pr_delta_rounds(
-                iterations, p1, fold1, dl, e_old, state, changed, aff,
+                iterations, p1, dl, e_old, state, changed, aff,
                 ds, delta_state, base, r0, wsrc, frontier_cap,
                 _check_flags,
                 e_old_unpersist=lambda: [
@@ -656,7 +656,7 @@ def pagerank_delta(
 
 
 def _pr_delta_rounds(
-    iterations, p1, fold1, dl, e_old, state, changed, aff, ds,
+    iterations, p1, dl, e_old, state, changed, aff, ds,
     delta_state, base, r0, wsrc, frontier_cap, _check_flags,
     e_old_unpersist,
 ):

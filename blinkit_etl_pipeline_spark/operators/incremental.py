@@ -27,6 +27,7 @@ batch side always has its own).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3578,6 +3579,13 @@ def graph_search_published(
         ]
         seed_scored = _score_pairs(seed_pairs)
 
+    def _desc(cos) -> tuple:
+        """Spark's ``desc()`` order as a sort key: NaN is the largest
+        double and nulls (zero-norm cosines with ANSI off) sort last."""
+        if cos is None:
+            return (2, 0.0)
+        return (0, 0.0) if math.isnan(cos) else (1, -cos)
+
     def _top(rows_py: list, limit: int) -> dict:
         """Per-query top-`limit` by (cos DESC, neighbor ASC) — the
         window `w` in Python (exact double compare, same tie order)."""
@@ -3585,7 +3593,7 @@ def graph_search_published(
         for qid, nid, cos in rows_py:
             byq.setdefault(qid, []).append((nid, cos))
         return {
-            qid: sorted(rs, key=lambda r: (-r[1], r[0]))[:limit]
+            qid: sorted(rs, key=lambda r: (*_desc(r[1]), r[0]))[:limit]
             for qid, rs in byq.items()
         }
 

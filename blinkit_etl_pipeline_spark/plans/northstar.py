@@ -5717,8 +5717,8 @@ def q_graph_pagerank_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set, which is exactly what the oracle recomputes. Depth 4 on
     a sixteenth of the order graph keeps the maintenance gauge
     affordable (the bootstrap+delta pair costs ~2 full runs on a
-    dense graph — tools/scale_iterative_r8.py carries the full-depth
-    full-graph scale rows); the mechanism is depth- and
+    dense graph — PLANS.md "r8 iterative-family scale rows" carries
+    the full-depth full-graph scale rows); the mechanism is depth- and
     size-independent. Streaming twin: streaming/pagerank_ingest.py
     persists the same state through the IVM agg store."""
     from ..operators import graph

@@ -16,17 +16,27 @@ reference ``lambda/blinkit-etl-orchestrator.py``):
   no inference pass.
 - **C5 job bracket** (01:21-22,108): no-op in plain Spark.
 
-Each job writes its medallion zones (processed/ partitioned by date
-parts, curated/ unpartitioned — sources/sinks.py) under ``out_dir``,
-mirroring the reference's S3 bucket layout.
+What each of the five Glue-style jobs owns is declared once, in
+``JOB_TABLE``: its transform from source frames to rows, its processed
+sink (partitioned by date parts, sources/sinks.py) and its curated
+outputs (aggregate, curated sink, analyst view, IVM store). Generic
+executors read the table — ``refresh_job`` for the batch refresh under
+``out_dir`` (the reference's S3 bucket layout), ``fold_drop`` for a
+file drop into the IVM stores (``handle_new_file_incremental`` here,
+``streaming/curated_ingest.py`` for the file-stream router). The
+job-keyed names the rest of the program uses (``JOBS``,
+``CURATED_TABLES``, ``CURATED_VIEWS``, ``ALL_JOBS``, ``JOB_*``) are
+derived from it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from .operators import agg, derive
@@ -40,13 +50,123 @@ from .pipelines import (
 from .sources import metrics, readers, sinks
 from .sources.testdata import register_blinkit
 
-JOB_SALES = "sales-revenue-etl"
-JOB_DELIVERY = "delivery-performance-etl"
-JOB_FEEDBACK = "customer-feedback-etl"
-JOB_MARKETING = "marketing-roi-etl"
-JOB_INVENTORY = "inventory-reconciliation-etl"
+#: source name (``orders``, ``order_items``, ``products``, …) → frame
+Inputs = Mapping[str, DataFrame]
 
-ALL_JOBS = (JOB_SALES, JOB_DELIVERY, JOB_FEEDBACK, JOB_MARKETING, JOB_INVENTORY)
+
+@dataclass(frozen=True)
+class Processed:
+    """A job's processed sink: ``processed/<dir>``, partitioned and
+    clustered by ``sort_cols``; ``date_col`` derives the partition
+    columns at write time (reference 05:108-110)."""
+
+    dir: str
+    sort_cols: tuple[str, ...]
+    partition_cols: tuple[str, ...] = ("year", "month", "day")
+    date_col: str | None = None
+
+
+@dataclass(frozen=True)
+class Curated:
+    """One curated output: ``agg.<name>`` over the job's rows, written to
+    ``curated/<name>`` and registered as the ``curated_<name>`` view;
+    ``table`` is its IVM store (``operators/curated.SPECS`` key).
+    ``aggregate`` replaces ``agg.<name>`` where the batch job cleans
+    its rows first."""
+
+    name: str
+    table: str
+    aggregate: Callable[[DataFrame], DataFrame] | None = None
+
+    @property
+    def view(self) -> str:
+        return f"curated_{self.name}"
+
+    def build(self, rows: DataFrame) -> DataFrame:
+        # late lookup through the module, so patched aggregates apply
+        return (self.aggregate or getattr(agg, self.name))(rows)
+
+
+@dataclass(frozen=True)
+class JobSpec:
+    """One Glue-style job: the transform that turns source frames (a
+    batch's full tables or a drop's rows) into the rows every sink of
+    the job reads."""
+
+    name: str
+    transform: Callable[[SparkSession, Inputs], DataFrame]
+    curated: tuple[Curated, ...]
+    processed: Processed | None = None
+
+
+def _reconcile(spark: SparkSession, t: Inputs) -> DataFrame:
+    if "inventory" in t:  # one frame tagged by `snapshot`, the drop layout
+        tagged = t["inventory"]
+        old = tagged.filter(F.col("snapshot") == "old").drop("snapshot")
+        new = tagged.filter(F.col("snapshot") == "new").drop("snapshot")
+    else:
+        old, new = t["inventory_old"], t["inventory_new"]
+    return inventory_recon.reconcile(old, new, t["products"])
+
+
+JOB_TABLE: tuple[JobSpec, ...] = (
+    JobSpec(
+        "sales-revenue-etl",
+        lambda spark, t: sales_revenue.sales_fact(
+            t["orders"], t["order_items"], t["products"]
+        ),
+        (Curated("revenue_by_category", "revenue_by_category"),),
+        # sort by product_id: analytic reads filter/join on product &
+        # category, so clustered row groups prune on min/max stats
+        Processed("sales_transactions", ("product_id",)),
+    ),
+    JobSpec(
+        "delivery-performance-etl",
+        lambda spark, t: t["orders"],
+        (
+            Curated(
+                "delivery_partner_performance",
+                "delivery_partner",
+                # the batch job drops null keys and dedups order_id
+                # first; on a drop the store's prepare step drops the
+                # null keys and the slice contract makes order_id unique
+                lambda rows: delivery_performance.partner_performance(rows),
+            ),
+        ),
+    ),
+    JobSpec(
+        "customer-feedback-etl",
+        lambda spark, t: customer_feedback.enriched_feedback(
+            t["feedback"], t["customers"], t["orders"], readers.rating_icons(spark)
+        ),
+        (Curated("area_feedback_metrics", "area_feedback"),),
+        Processed("customer_feedback", ("area",), ("year", "month")),
+    ),
+    JobSpec(
+        "marketing-roi-etl",
+        lambda spark, t: marketing_roi.marketing_kpis(t["marketing"]),
+        (Curated("campaign_performance_summary", "campaign_summary"),),
+        Processed("marketing_performance", ("campaign_id",), ("year", "month")),
+    ),
+    JobSpec(
+        "inventory-reconciliation-etl",
+        _reconcile,
+        (
+            Curated("category_inventory_impact", "category_impact"),
+            Curated("product_inventory_discrepancies", "product_discrepancies"),
+        ),
+        Processed(
+            "inventory_reconciliation", ("product_id",), ("year", "month"), "date"
+        ),
+    ),
+)
+
+JOB_SPECS = {spec.name: spec for spec in JOB_TABLE}
+ALL_JOBS = JOB_SALES, JOB_DELIVERY, JOB_FEEDBACK, JOB_MARKETING, JOB_INVENTORY = tuple(JOB_SPECS)
+#: job → curated stores it maintains (inventory writes two, reference job 05)
+CURATED_TABLES = {s.name: tuple(c.table for c in s.curated) for s in JOB_TABLE}
+#: store table → analyst view name (C4)
+CURATED_VIEWS = {c.table: c.view for s in JOB_TABLE for c in s.curated}
 
 # lambda:45-53 — substring routing; order/product → sales AND delivery
 # (the reference runs both because 02 consumed the same inputs).
@@ -95,112 +215,45 @@ def determine_jobs_to_run(filename: str) -> list[str]:
     return out or list(ALL_JOBS)
 
 
-def _curated_view(spark: SparkSession, df_path: str, view: str) -> None:
-    """C4: register a written curated table for analyst SQL."""
-    spark.read.parquet(df_path).createOrReplaceTempView(view)
-
-
-def run_sales_revenue(spark: SparkSession, conf: RunnerConfig) -> int | None:
+def refresh_job(spec: JobSpec, spark: SparkSession, conf: RunnerConfig) -> int | None:
+    """One batch job: transform the full inputs, write the processed
+    sink and every curated output, register the curated views (C4).
+    Returns the processed sink's row count, or None without one."""
     t = register_blinkit(spark, conf.sf_dir)
-    fact = sales_revenue.sales_fact(t["b_orders"], t["b_order_items"], t["b_products"])
-    fact, obs = metrics.with_row_count(fact, "sales_fact_rows")
-    # dual sink: persist at the fan-out so processed+curated share one compute
-    fact.persist(StorageLevel.MEMORY_AND_DISK)
+    rows = spec.transform(spark, {k.removeprefix("b_"): v for k, v in t.items()})
+    p, obs = spec.processed, None
+    # several sinks: persist at the fan-out so they share one compute
+    shared = (p is not None) + len(spec.curated) > 1
+    if shared:
+        rows.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # sort by product_id: analytic reads filter/join on product &
-        # category, so clustered row groups prune on min/max stats
-        sinks.write_partitioned(
-            fact,
-            f"{conf.out_dir}/processed/sales_transactions",
-            sort_cols=("product_id",),
-        )
-        curated = agg.revenue_by_category(fact)
-        path = f"{conf.out_dir}/curated/revenue_by_category"
-        sinks.write_curated(curated, path)
-        _curated_view(spark, path, "curated_revenue_by_category")
-        return metrics.get_count(obs)
+        if p is not None:
+            dated = rows if p.date_col is None else derive.with_date_parts(
+                rows, p.date_col, day="day" in p.partition_cols
+            )
+            # observe the written frame, above the cache: the count
+            # rides the write job and the curated aggregates share the
+            # cached rows unobserved
+            dated, obs = metrics.with_row_count(dated, f"{p.dir}_rows")
+            sinks.write_partitioned(
+                dated,
+                f"{conf.out_dir}/processed/{p.dir}",
+                partition_cols=p.partition_cols,
+                sort_cols=p.sort_cols,
+            )
+        for c in spec.curated:
+            path = f"{conf.out_dir}/curated/{c.name}"
+            sinks.write_curated(c.build(rows), path)
+            spark.read.parquet(path).createOrReplaceTempView(c.view)
+        return None if obs is None else metrics.get_count(obs)
     finally:
-        fact.unpersist()
+        if shared:
+            rows.unpersist()
 
 
-def run_delivery_performance(spark: SparkSession, conf: RunnerConfig) -> None:
-    t = register_blinkit(spark, conf.sf_dir)
-    curated = delivery_performance.partner_performance(t["b_orders"])
-    path = f"{conf.out_dir}/curated/delivery_partner_performance"
-    sinks.write_curated(curated, path)
-    _curated_view(spark, path, "curated_delivery_partner_performance")
-
-
-def run_customer_feedback(spark: SparkSession, conf: RunnerConfig) -> None:
-    t = register_blinkit(spark, conf.sf_dir)
-    enriched = customer_feedback.enriched_feedback(
-        t["b_feedback"], t["b_customers"], t["b_orders"], readers.rating_icons(spark)
-    )
-    enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        sinks.write_partitioned(
-            enriched, f"{conf.out_dir}/processed/customer_feedback",
-            partition_cols=("year", "month"),
-            sort_cols=("area",),
-        )
-        curated = agg.area_feedback_metrics(enriched)
-        path = f"{conf.out_dir}/curated/area_feedback_metrics"
-        sinks.write_curated(curated, path)
-        _curated_view(spark, path, "curated_area_feedback_metrics")
-    finally:
-        enriched.unpersist()
-
-
-def run_marketing_roi(spark: SparkSession, conf: RunnerConfig) -> None:
-    t = register_blinkit(spark, conf.sf_dir)
-    kpis = marketing_roi.marketing_kpis(t["b_marketing"])
-    kpis.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        sinks.write_partitioned(
-            kpis, f"{conf.out_dir}/processed/marketing_performance",
-            partition_cols=("year", "month"),
-            sort_cols=("campaign_id",),
-        )
-        curated = agg.campaign_performance_summary(kpis)
-        path = f"{conf.out_dir}/curated/campaign_performance_summary"
-        sinks.write_curated(curated, path)
-        _curated_view(spark, path, "curated_campaign_performance_summary")
-    finally:
-        kpis.unpersist()
-
-
-def run_inventory_recon(spark: SparkSession, conf: RunnerConfig) -> None:
-    t = register_blinkit(spark, conf.sf_dir)
-    recon = inventory_recon.reconcile(
-        t["b_inventory_old"], t["b_inventory_new"], t["b_products"]
-    )
-    recon.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # reference 05:108-110: partition cols derived from `date` at write
-        sinks.write_partitioned(
-            derive.with_date_parts(recon, "date", day=False),
-            f"{conf.out_dir}/processed/inventory_reconciliation",
-            partition_cols=("year", "month"),
-            sort_cols=("product_id",),
-        )
-        impact = agg.category_inventory_impact(recon)
-        p1 = f"{conf.out_dir}/curated/category_inventory_impact"
-        sinks.write_curated(impact, p1)
-        _curated_view(spark, p1, "curated_category_inventory_impact")
-        discrepancies = agg.product_inventory_discrepancies(recon)
-        p2 = f"{conf.out_dir}/curated/product_inventory_discrepancies"
-        sinks.write_curated(discrepancies, p2)
-        _curated_view(spark, p2, "curated_product_inventory_discrepancies")
-    finally:
-        recon.unpersist()
-
-
+#: job → batch runner; a mutable dict so a caller can wrap or replace a job
 JOBS: dict[str, Callable[[SparkSession, RunnerConfig], int | None]] = {
-    JOB_SALES: run_sales_revenue,
-    JOB_DELIVERY: run_delivery_performance,
-    JOB_FEEDBACK: run_customer_feedback,
-    JOB_MARKETING: run_marketing_roi,
-    JOB_INVENTORY: run_inventory_recon,
+    s.name: partial(refresh_job, s) for s in JOB_TABLE
 }
 
 
@@ -237,7 +290,7 @@ def handle_new_file(
 # inputs — the reference's behavior (lambda:55-81 triggers Glue jobs
 # that rebuild wholesale). In incremental mode the identical C1 routing
 # decides which jobs react, but each routed job folds ONLY the drop's
-# rows — transformed by the SAME pipeline code — into its curated
+# rows — transformed by the SAME JobSpec transform — into its curated
 # tables' IVM stores (operators/curated.py specs), so a file landing
 # costs ∝ the file at any history size. C2/C3 statuses and the C4
 # refresh contract (views re-register if ≥1 job succeeded) carry over
@@ -247,85 +300,36 @@ def handle_new_file(
 # Slice contract (operators/curated.py module doc): each drop must be
 # slice-complete on its tables' dedup/join grains — an order's items
 # arrive with the order, an inventory drop carries both snapshots for
-# its (product, date) slices (tagged by a `snapshot` column), and a
-# given order/feedback/campaign-day row arrives exactly once across
-# drops. `batch_id` (default: the filename, i.e. the raw object key)
-# makes redelivered events no-ops at every routed store.
-
-#: job → curated stores it maintains (same fan-out as the batch jobs'
-#: curated sinks; inventory writes two tables, reference job 05)
-CURATED_TABLES: dict[str, tuple[str, ...]] = {
-    JOB_SALES: ("revenue_by_category",),
-    JOB_DELIVERY: ("delivery_partner",),
-    JOB_FEEDBACK: ("area_feedback",),
-    JOB_MARKETING: ("campaign_summary",),
-    JOB_INVENTORY: ("category_impact", "product_discrepancies"),
-}
-
-#: store table → analyst view name (C4), matching the batch sinks
-CURATED_VIEWS: dict[str, str] = {
-    "revenue_by_category": "curated_revenue_by_category",
-    "area_feedback": "curated_area_feedback_metrics",
-    "campaign_summary": "curated_campaign_performance_summary",
-    "delivery_partner": "curated_delivery_partner_performance",
-    "category_impact": "curated_category_inventory_impact",
-    "product_discrepancies": "curated_product_inventory_discrepancies",
-}
-
-
-def _sales_delta(spark: SparkSession, inputs) -> DataFrame:
-    return sales_revenue.sales_fact(
-        inputs["orders"], inputs["order_items"], inputs["products"]
-    )
-
-
-def _delivery_delta(spark: SparkSession, inputs) -> DataFrame:
-    return inputs["orders"]
-
-
-def _feedback_delta(spark: SparkSession, inputs) -> DataFrame:
-    return customer_feedback.enriched_feedback(
-        inputs["feedback"],
-        inputs["customers"],
-        inputs["orders"],
-        readers.rating_icons(spark),
-    )
-
-
-def _marketing_delta(spark: SparkSession, inputs) -> DataFrame:
-    return marketing_roi.marketing_kpis(inputs["marketing"])
-
-
-def _inventory_delta(spark: SparkSession, inputs) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    old = inputs["inventory_old"]
-    new = inputs.get("inventory_new")
-    if new is None:  # single tagged frame, the streaming-drop layout
-        tagged = old
-        old = tagged.filter(F.col("snapshot") == "old").drop("snapshot")
-        new = tagged.filter(F.col("snapshot") == "new").drop("snapshot")
-    rows = inventory_recon.reconcile(old, new, inputs["products"])
-    # feeds two stores: materialize once or each ingest re-pays the
-    # full-outer join (r8 lesson, same as streaming/curated_ingest.py)
-    return rows.localCheckpoint(eager=True)
-
-
-#: job → drop-transform producing the delta rows its stores ingest —
-#: the SAME pipeline transforms the batch jobs run, applied to the drop
-INCR_DELTAS: dict[str, Callable[[SparkSession, dict], DataFrame]] = {
-    JOB_SALES: _sales_delta,
-    JOB_DELIVERY: _delivery_delta,
-    JOB_FEEDBACK: _feedback_delta,
-    JOB_MARKETING: _marketing_delta,
-    JOB_INVENTORY: _inventory_delta,
-}
+# its (product, date) slices, and a given order/feedback/campaign-day
+# row arrives exactly once across drops. `batch_id` (default: the
+# filename, i.e. the raw object key) makes redelivered events no-ops at
+# every routed store.
 
 
 def curated_store_path(store_root: str, table: str) -> str:
     from .operators import curated
 
     return curated.store_path(store_root, table)
+
+
+def fold_drop(
+    spark: SparkSession, job: str, inputs: Inputs, store_root: str, batch_id: str
+) -> None:
+    """Fold one drop's rows, through ``job``'s transform, into each of
+    its curated IVM stores."""
+    from .operators import curated
+
+    spec = JOB_SPECS[job]
+    rows = spec.transform(spark, inputs)
+    if len(spec.curated) > 1:
+        # feeds several stores: materialize once or each ingest re-pays
+        # the transform (the inventory full-outer join, r8 lesson)
+        rows = rows.localCheckpoint(eager=True)
+    for c in spec.curated:
+        curated.ingest_curated_deltas(
+            spark, curated_store_path(store_root, c.table), c.table, rows,
+            batch_id=batch_id,
+        )
 
 
 def handle_new_file_incremental(
@@ -339,46 +343,34 @@ def handle_new_file_incremental(
     """Entry point A, incremental form: one new raw file → routed jobs,
     each folding the drop into its curated IVM stores. ``inputs`` maps
     source names (orders / order_items / products / feedback /
-    customers / marketing / inventory_old[/inventory_new]) to the
-    drop's frames — fact sources carry ONLY the drop's rows; dimension
+    customers / marketing / inventory_old + inventory_new, or one
+    ``inventory`` frame tagged by a ``snapshot`` column) to the drop's
+    frames — fact sources carry ONLY the drop's rows; dimension
     sources (products, customers) carry the current dim. A job whose
     inputs are missing fails without stopping later jobs (C3), and the
     C4 view refresh runs for every table of every succeeded job."""
-    from .operators import curated
+    from .operators import curated, snapshot
 
     bid = batch_id if batch_id is not None else filename
     report = RunReport()
     for job in determine_jobs_to_run(filename):
         try:
-            rows = INCR_DELTAS[job](spark, inputs)
-            for table in CURATED_TABLES[job]:
-                curated.ingest_curated_deltas(
-                    spark,
-                    curated_store_path(store_root, table),
-                    table,
-                    rows,
-                    batch_id=f"{job}::{bid}",
-                )
+            fold_drop(spark, job, inputs, store_root, f"{job}::{bid}")
             report.statuses[job] = "succeeded"
         except Exception as exc:  # noqa: BLE001 — status contract
             report.statuses[job] = "failed"
             report.errors[job] = f"{type(exc).__name__}: {exc}"
-    if "succeeded" in set(report.statuses.values()):
-        from .operators import snapshot
-
-        for job, status in report.statuses.items():
-            if status != "succeeded":
+    for job, status in report.statuses.items():
+        if status != "succeeded":
+            continue
+        for c in JOB_SPECS[job].curated:
+            path = curated_store_path(store_root, c.table)
+            # a first-ever drop can legitimately fold to zero delta
+            # rows (e.g. an inventory drop with no discrepancies):
+            # the job succeeded but no store exists yet to publish
+            if snapshot.current_version(path) is None:
                 continue
-            for table in CURATED_TABLES[job]:
-                path = curated_store_path(store_root, table)
-                # a first-ever drop can legitimately fold to zero delta
-                # rows (e.g. an inventory drop with no discrepancies):
-                # the job succeeded but no store exists yet to publish
-                if snapshot.current_version(path) is None:
-                    continue
-                curated.read_curated(
-                    spark, path, table
-                ).createOrReplaceTempView(CURATED_VIEWS[table])
+            curated.read_curated(spark, path, c.table).createOrReplaceTempView(c.view)
     return report
 
 

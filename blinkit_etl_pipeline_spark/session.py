@@ -24,6 +24,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(ram_bytes: int | None) -> str:
+    """Driver heap for ``ram_bytes`` of physical RAM: 16g, but never
+    more than three quarters of the box (the JVM's off-heap, the Python
+    workers and the OS need the rest). Unknown RAM keeps 16g."""
+    cap_mib = 16 * 1024
+    if ram_bytes:
+        cap_mib = min(cap_mib, ram_bytes * 3 // 4 // (1 << 20))
+    return f"{cap_mib}m"
+
+
+def physical_ram_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return None
+
+
 def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
     """Build (or reuse) the engine SparkSession."""
     cpus = default_parallelism()
@@ -45,7 +62,9 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
         # before the box's RAM is used; on a real cluster the
         # submitter's --driver-memory/--executor-memory win instead
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(physical_ram_bytes()),
         )
         # catalog state (bucketed tables, derby metastore) out of the repo
         .config("spark.sql.warehouse.dir", "/tmp/blinkit-spark-warehouse")

@@ -13,15 +13,16 @@ pieces, and each refresh costs ∝ the drop:
   one stream per source prefix (``marketing/ orders/ inventory/
   feedback/`` — the Lambda's key-prefix match, expressed as source
   paths);
-- the **per-pipeline transforms**, shared verbatim with the batch
-  runner (``marketing_roi.marketing_kpis``,
-  ``inventory_recon.reconcile``);
-- the **IVM agg stores** (``operators/curated.py`` specs over
-  ``operators/incremental.py`` stores): each micro-batch folds signed
-  partials into ONLY its routed stores — marketing →
-  campaign_summary; orders → delivery_partner; inventory →
-  category_impact + product_discrepancies (one reconcile feeds both,
-  the reference's job 05 writing two curated tables).
+- the **job table** (``runner.JOB_TABLE``): each source prefix maps
+  to one job and reuses that job's transform and IVM stores
+  (``operators/curated.py`` specs over ``operators/incremental.py``
+  stores), exactly what the batch runner and
+  ``runner.handle_new_file_incremental`` run — marketing →
+  campaign_summary; orders → delivery_partner; feedback →
+  area_feedback; inventory → category_impact + product_discrepancies
+  (one reconcile feeds both, the reference's job 05 writing two
+  curated tables). Each micro-batch folds signed partials into ONLY
+  its routed stores.
 
 Exactly-once: the foreachBatch epoch id is stable across
 crash-redelivery and the store guard is batch-grained, so a replayed
@@ -41,42 +42,23 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .. import runner
 from ..operators import curated
-from ..pipelines import inventory_recon, marketing_roi
 from .file_source import run_available_now
 
-#: source prefix → curated stores it refreshes (the Lambda routing
-#: table, lambda:45-53)
-ROUTES: dict[str, tuple[str, ...]] = {
-    "marketing": ("campaign_summary",),
-    "orders": ("delivery_partner",),
-    "inventory": ("category_impact", "product_discrepancies"),
-    "feedback": ("area_feedback",),
+#: source prefix → the job whose transform and stores it drives (the
+#: Lambda routing table, lambda:45-53, one stream per prefix)
+SOURCE_JOBS: dict[str, str] = {
+    "marketing": runner.JOB_MARKETING,
+    "orders": runner.JOB_DELIVERY,
+    "inventory": runner.JOB_INVENTORY,
+    "feedback": runner.JOB_FEEDBACK,
 }
-
 
 #: canonical store layout — shared with the batch runner
 store_path = curated.store_path
-
-
-def _ingest(
-    spark: SparkSession,
-    store_root: str,
-    source: str,
-    delta_rows: DataFrame,
-    batch_id: int,
-) -> None:
-    for table in ROUTES[source]:
-        curated.ingest_curated_deltas(
-            spark,
-            store_path(store_root, table),
-            table,
-            delta_rows,
-            batch_id=f"{source}-epoch-{batch_id}",
-        )
 
 
 def run_curated_maintenance(
@@ -106,49 +88,28 @@ def run_curated_maintenance(
     instead — a file stream carries one source, not a join of
     three."""
 
+    dims = {"products": products, "customers": customers, "orders": orders_dim}
+
     def mk_process(source: str):
         def process(batch_df: DataFrame, batch_id: int) -> None:
             if not batch_df.columns or batch_df.isEmpty():
                 return
-            sess = batch_df.sparkSession
-            if source == "marketing":
-                rows = marketing_roi.marketing_kpis(batch_df)
-            elif source == "orders":
-                rows = batch_df
-            elif source == "feedback":
-                if customers is None or orders_dim is None:
-                    raise ValueError(
-                        "feedback drop arrived but customers/orders "
-                        "dimensions were not supplied"
-                    )
-                from ..pipelines import customer_feedback
-                from ..sources import readers
-
-                rows = customer_feedback.enriched_feedback(
-                    batch_df, customers, orders_dim,
-                    readers.rating_icons(sess),
+            inputs = {k: v for k, v in dims.items() if v is not None}
+            inputs[source] = batch_df
+            try:
+                runner.fold_drop(
+                    batch_df.sparkSession, SOURCE_JOBS[source], inputs,
+                    store_root, f"{source}-epoch-{batch_id}",
                 )
-            else:  # inventory: both snapshots in one drop, tagged
-                if products is None:
-                    raise ValueError(
-                        "inventory drop arrived but no products "
-                        "dimension was supplied"
-                    )
-                old = batch_df.filter(F.col("snapshot") == "old").drop(
-                    "snapshot"
-                )
-                new = batch_df.filter(F.col("snapshot") == "new").drop(
-                    "snapshot"
-                )
-                rows = inventory_recon.reconcile(old, new, products)
-                # the reconcile feeds two stores: materialize once or
-                # each ingest re-pays the full-outer join (r8 lesson)
-                rows = rows.localCheckpoint(eager=True)
-            _ingest(sess, store_root, source, rows, batch_id)
+            except KeyError as exc:
+                raise ValueError(
+                    f"{source} drop arrived but the {exc} dimension "
+                    "was not supplied"
+                ) from exc
 
         return process
 
-    for source in ROUTES:
+    for source in SOURCE_JOBS:
         src_dir = os.path.join(raw_dir, source)
         if not os.path.isdir(src_dir):
             continue  # source never provisioned — nothing to route

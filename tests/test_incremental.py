@@ -2532,6 +2532,48 @@ def test_publish_graph_and_frontier_priced_search(spark, tmp_path):
         incremental.publish_graph(spark, gs, vs, pub, k=6)
 
 
+def test_published_search_zero_norm_matches_from_store(spark, tmp_path):
+    """A zero-norm embedding has no cosine: with ANSI off ``qcos``
+    scores it null (NaN where a float kernel divides). The published
+    path's driver-side beam cut must order such scores the way Spark's
+    DESC window does (NaN largest, null last, then neighbor ascending),
+    or its walk pool, and so its answer, drifts from
+    graph_search_from_store."""
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    zero_ids = (5, 11, 17, 23)
+    emb = emb.select(
+        "vec_id",
+        F.when(
+            F.col("vec_id").isin(*zero_ids),
+            F.transform("embedding", lambda x: F.lit(0.0).cast("float")),
+        ).otherwise(F.col("embedding")).alias("embedding"),
+    )
+    vs, gs, ps, pub = (str(tmp_path / n) for n in ("v", "g", "p", "pub"))
+
+    def rows(df):
+        # repr is exact for doubles and total over None
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        incremental.ingest_knn_graph(
+            spark, vs, gs, emb, k=5, payload_store=ps
+        )
+        incremental.publish_graph(spark, gs, vs, pub, k=5)
+        batch = [5, 11, 0, 1, 2, 3, 4, 6, 8, 9]
+        got = rows(incremental.graph_search_published(
+            spark, pub, batch, k=5, beam=3, rounds=2
+        ))
+        want = rows(incremental.graph_search_from_store(
+            spark, gs, vs, batch, k=5, beam=3, rounds=2
+        ))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert any("None" in r for r in want)
+    assert got == want
+
+
 def test_open_graph_serving_published_store(spark, tmp_path):
     """r12: a serving session over a publish_graph store skips the
     per-open fold + undirect and stays bit-equal to the per-call

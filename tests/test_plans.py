@@ -58,7 +58,7 @@ ARROW_WHITELIST = {
     # hides behind the LogicalRDD leaf in the RETURNED plan (it still
     # executes lazily inside the timed call, at first materialization)
     # — the ns_knn_graph case, now uniform across the family
-    # (plans/r13/*_after.txt: 0 python nodes). The kernel's PRESENCE
+    # (OPTIMIZATION_r13.md §3: 0 python nodes). The kernel's PRESENCE
     # is still pinned: the checkpoint-aware sweep below explains every
     # pre-checkpoint frame, where the walk family's seed kernel is
     # visible again (ARROW_CONSTRUCTION below).

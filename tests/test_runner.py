@@ -69,3 +69,97 @@ def test_stack_size_on_both_sides(spark):
     conf = spark.sparkContext.getConf()
     assert "-Xss8m" in (conf.get("spark.driver.extraJavaOptions") or "")
     assert "-Xss8m" in (conf.get("spark.executor.extraJavaOptions") or "")
+
+
+def test_driver_memory_default_fits_the_box():
+    """The driver heap defaults to 16g, capped at three quarters of
+    physical RAM (a 16g heap on a 15 GB box invites the OOM killer)."""
+    from blinkit_etl_pipeline_spark import session
+
+    gib = 1 << 30
+    assert session.default_driver_memory(15 * gib) == "11520m"
+    assert session.default_driver_memory(64 * gib) == "16384m"
+    assert session.default_driver_memory(None) == "16384m"
+    assert session.physical_ram_bytes() > 0
+
+
+# ---------------------------------------------------------------------------
+# The job table: one declaration drives batch, incremental and streaming
+# ---------------------------------------------------------------------------
+
+
+def _curated_views(spark) -> set[str]:
+    return {
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("curated_")
+    }
+
+
+def _drop_curated_views(spark) -> None:
+    for view in _curated_views(spark):
+        spark.catalog.dropTempView(view)
+
+
+@pytest.fixture(scope="module")
+def batch_run(spark, tmp_path_factory):
+    """One batch refresh over the smoke data: (report, out_dir, views)."""
+    out = tmp_path_factory.mktemp("batch")
+    _drop_curated_views(spark)
+    conf = runner.RunnerConfig(sf_dir=SF_SMOKE, out_dir=str(out))
+    report = runner.run_jobs_sequential(spark, conf, list(runner.ALL_JOBS))
+    return report, out, _curated_views(spark)
+
+
+def test_job_table_tables_have_ivm_specs():
+    from blinkit_etl_pipeline_spark.operators import curated
+
+    for spec in runner.JOB_TABLE:
+        assert spec.curated, spec.name
+        for c in spec.curated:
+            assert c.table in curated.SPECS, (spec.name, c.table)
+    assert len(runner.CURATED_VIEWS) == 6
+
+
+def test_streaming_prefixes_route_to_job_stores():
+    from blinkit_etl_pipeline_spark.streaming import curated_ingest
+
+    routed = {
+        source: runner.CURATED_TABLES[job]
+        for source, job in curated_ingest.SOURCE_JOBS.items()
+    }
+    assert routed == {
+        "marketing": ("campaign_summary",),
+        "orders": ("delivery_partner",),
+        "inventory": ("category_impact", "product_discrepancies"),
+        "feedback": ("area_feedback",),
+    }
+
+
+def test_batch_and_incremental_register_the_same_views(
+    spark, batch_run, tmp_path
+):
+    report, _, batch_views = batch_run
+    assert report.overall == "ok", report.errors
+    assert batch_views == set(runner.CURATED_VIEWS.values())
+
+    from blinkit_etl_pipeline_spark.sources.testdata import register_blinkit
+
+    t = register_blinkit(spark, SF_SMOKE)
+    inputs = {k.removeprefix("b_"): v for k, v in t.items()}
+    _drop_curated_views(spark)
+    # an unrecognized name routes every job (C1 catch-all)
+    r = runner.handle_new_file_incremental(
+        spark, str(tmp_path / "stores"), "full_dump.parquet", inputs
+    )
+    assert r.overall == "ok", r.errors
+    assert _curated_views(spark) == batch_views
+
+
+def test_row_counts_match_processed_sinks(spark, batch_run):
+    report, out, _ = batch_run
+    with_sink = [s for s in runner.JOB_TABLE if s.processed is not None]
+    assert set(report.row_counts) == {s.name for s in with_sink}
+    for spec in with_sink:
+        sink = out / "processed" / spec.processed.dir
+        assert report.row_counts[spec.name] == spark.read.parquet(str(sink)).count()
+        assert report.row_counts[spec.name] > 0, spec.name

@@ -625,7 +625,7 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
     stores = str(tmp_path / "stores")
     ckpt = str(tmp_path / "ckpt")
 
-    # only the sources this test drops (feedback joined ROUTES in the
+    # only the sources this test drops (feedback joined the routing in the
     # r10 addendum and has its own routing test)
     dropped_tables = (
         "campaign_summary", "delivery_partner",
