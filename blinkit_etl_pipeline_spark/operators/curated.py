@@ -61,10 +61,12 @@ transforms dedup on (campaign_id, date), require unique order_id, and
 reconcile on (product_id, date) — a drop must be SLICE-COMPLETE on
 its table's dedup/join grain and each slice must arrive exactly once
 (one file per source per day, the reference's raw-bucket layout).
-Redelivery of a whole drop is absorbed at BATCH granularity by the
-store's ``batch_id`` guard; rows carry ``__sign`` (+1/−1) when a CDC
-feed supplies retractions, and deletes must be exact negations of
-prior inserts (the ivm contract).
+Redelivery of a whole drop is absorbed at BATCH granularity: each
+store's snapshot manifest lists the batch ids it has committed, so a
+redelivered ``batch_id`` is a no-op decided from metadata alone (no
+Spark job, whatever the store's history); rows carry ``__sign``
+(+1/−1) when a CDC feed supplies retractions, and deletes must be
+exact negations of prior inserts (the ivm contract).
 """
 
 from __future__ import annotations

@@ -181,8 +181,9 @@ def _ingest_rows(
     spark: SparkSession,
     store_table: str,
     rows: DataFrame,
-    id_col: str,
+    id_col: str | None,
     *,
+    batch_id: str | None = None,
     stats_col: str | None = None,
     seen_fn=None,
     augment_fn=None,
@@ -191,12 +192,20 @@ def _ingest_rows(
     compact_target: int,
     compact_keep_versions: int,
 ) -> int:
-    """Shared idempotent-append lifecycle for ALL the index stores
-    (LSH signatures, PQ/IVFPQ codes, BM25 postings): redelivery guard
-    on ``id_col`` (``seen_fn(store_df)`` overrides how seen ids are
-    derived), eager materialization, atomic CAS append with
-    auto-rebase, auto-compaction. One implementation, so a protocol
-    fix lands once and the next index format is a plug-in.
+    """Shared idempotent-append lifecycle for ALL the stores (LSH
+    signatures, PQ/IVFPQ codes, BM25 postings, the batch-keyed agg/
+    sketch partials): redelivery guard, eager materialization, atomic
+    CAS append with auto-rebase, auto-compaction. One implementation,
+    so a protocol fix lands once and the next index format is a
+    plug-in.
+
+    Two guards. Id-keyed stores anti-join the batch on ``id_col``
+    against the live store (``seen_fn(store_df)`` overrides how seen
+    ids are derived). Batch-keyed stores pass ``batch_id`` (and
+    ``id_col=None``): the snapshot manifest records committed batch
+    ids, so a redelivery is answered by :func:`snapshot.has_batch`
+    without starting a Spark job, and the append itself re-checks the
+    id on every rebase (:func:`snapshot.append_snapshot`).
 
     ``augment_fn(rows)`` — when given — maps the POST-guard batch to
     the rows actually appended (e.g. adding per-batch stats partials);
@@ -210,21 +219,26 @@ def _ingest_rows(
     never re-fires the hook."""
     exists = snapshot.current_version(store_table) is not None
     store: DataFrame | None = None
-    if exists:
-        # the store handed to searches (pre_commit_fn) is the LIVE
-        # view: retracted docs never surface as match partners
-        store = _exclude_tombstoned(
-            spark, store_table,
-            snapshot.read_snapshot(spark, store_table), id_col,
-        )
-        seen = (
-            seen_fn(store) if seen_fn is not None
-            else store.select(id_col).distinct()
-        )
-        rows = rows.join(seen, id_col, "left_anti")
-    # retraction is terminal: a retracted id in a new batch is refused,
-    # not re-indexed (takedown contract — see the retraction section)
-    rows = _exclude_tombstoned(spark, store_table, rows, id_col)
+    if batch_id is not None:
+        if snapshot.has_batch(store_table, batch_id):
+            return snapshot.current_version(store_table)
+    else:
+        if exists:
+            # the store handed to searches (pre_commit_fn) is the LIVE
+            # view: retracted docs never surface as match partners
+            store = _exclude_tombstoned(
+                spark, store_table,
+                snapshot.read_snapshot(spark, store_table), id_col,
+            )
+            seen = (
+                seen_fn(store) if seen_fn is not None
+                else store.select(id_col).distinct()
+            )
+            rows = rows.join(seen, id_col, "left_anti")
+        # retraction is terminal: a retracted id in a new batch is
+        # refused, not re-indexed (takedown contract — see the
+        # retraction section)
+        rows = _exclude_tombstoned(spark, store_table, rows, id_col)
     rows = rows.localCheckpoint(eager=True)
     if rows.isEmpty():
         return snapshot.current_version(store_table) or 0
@@ -233,10 +247,12 @@ def _ingest_rows(
     if augment_fn is not None:
         rows = augment_fn(rows)
     if exists:
-        version = snapshot.append_snapshot(rows, store_table)
+        version = snapshot.append_snapshot(
+            rows, store_table, batch_id=batch_id
+        )
     else:
         version = snapshot.write_snapshot(
-            rows, store_table, stats_col=stats_col
+            rows, store_table, stats_col=stats_col, batch_id=batch_id
         )
     _maybe_compact(
         spark, store_table, compact_threshold, compact_target,
@@ -2282,20 +2298,19 @@ def ingest_agg_deltas(
     """Maintain a materialized sum/count aggregate from one signed
     delta batch (operators/ivm.py algebra): fold the batch to per-key
     partials — work ∝ THIS batch, never ∝ history — and append them
-    under ``batch_id``. Redelivery is idempotent at BATCH granularity
-    (the guard anti-joins on ``batch_id``, so a redelivered feed
-    appends nothing); the append is the same atomic CAS commit every
-    index store uses. ``sums`` maps output column → int64-quantized
-    measure (quantize BEFORE the sum — see ivm module doc); a
-    ``__sign`` column (+1 insert / −1 delete) makes deletes exact
-    negations. Returns the committed store version."""
+    as the commit of ``batch_id``. Redelivery is idempotent at BATCH
+    granularity: the store's manifest lists every committed batch id,
+    so a redelivered feed appends nothing and starts no Spark job; the
+    append is the same atomic CAS commit every index store uses.
+    ``sums`` maps output column → int64-quantized measure (quantize
+    BEFORE the sum — see ivm module doc); a ``__sign`` column (+1
+    insert / −1 delete) makes deletes exact negations. Returns the
+    committed store version."""
     from . import ivm
 
-    partials = ivm.delta_partials(batch, keys, sums).withColumn(
-        "batch_id", F.lit(batch_id).cast("string")
-    )
     return _ingest_rows(
-        spark, store_table, partials, "batch_id",
+        spark, store_table, ivm.delta_partials(batch, keys, sums), None,
+        batch_id=batch_id,
         compact_threshold=compact_threshold,
         compact_target=compact_target,
         compact_keep_versions=compact_keep_versions,
@@ -2311,8 +2326,7 @@ def read_agg_store(
     """Merge-on-read of the materialized view: Σ partials per key —
     one aggregate over a store sized by (keys × batches), never a
     base-table scan. Keys whose live count folded to zero (fully
-    retracted) disappear, and fold-compaction marker rows (all-zero)
-    are absorbed by the same rule."""
+    retracted) disappear."""
     from . import ivm
 
     return ivm.merge_partials(
@@ -2320,46 +2334,21 @@ def read_agg_store(
     )
 
 
-def compact_agg_store(
-    spark: SparkSession,
-    store_table: str,
-    keys: list[str],
-    sum_cols: list[str],
-) -> int:
-    """Fold the partial history to ONE row per live key (the agg
-    store's real compaction — file-level compaction alone leaves row
-    count growing with batches). Seen batch ids survive as all-zero
-    marker rows (one per batch, ~bytes each), so the redelivery guard
-    stays exact across folds. CAS-committed with rebase retries like
-    every store rewrite; a concurrent ingest winning the race re-runs
-    the fold against its rows."""
-    from . import ivm
-
-    cur = snapshot.current_version(store_table)
-    if cur is None:
-        raise snapshot.SnapshotError(f"no snapshot table at {store_table}")
+def _compact_folded(spark: SparkSession, store_table: str, fold_fn) -> int:
+    """Shared fold-compaction scaffold for the batch-keyed stores (agg
+    partials, HLL registers, CMS counters, drift buckets):
+    CAS-committed rewrite with rebase retries; ``fold_fn(base)``
+    produces the folded live rows. The commit carries the base's
+    batch-id set forward in the manifest, so the redelivery guard
+    stays exact across folds. A concurrent ingest winning the race
+    re-runs the fold against its rows."""
     last_err: Exception | None = None
     for _ in range(snapshot.COMMIT_RETRIES):
         manifest = snapshot.read_manifest(store_table)
-        base = snapshot.read_snapshot(spark, store_table)
-        folded = ivm.merge_partials(base, keys, sum_cols).withColumn(
-            "batch_id", F.lit(None).cast("string")
+        base = snapshot.read_snapshot(
+            spark, store_table, manifest["version"]
         )
-        key_fields = {
-            f.name: f.dataType
-            for f in base.schema.fields
-            if f.name in keys
-        }
-        markers = base.select("batch_id").distinct().select(
-            *[
-                F.lit(None).cast(key_fields[k]).alias(k)
-                for k in keys
-            ],
-            *[F.lit(0).cast("long").alias(c) for c in sum_cols],
-            F.lit(0).cast("long").alias(ivm.COUNT_COL),
-            "batch_id",
-        )
-        rows = folded.unionByName(markers).localCheckpoint(eager=True)
+        rows = fold_fn(base).localCheckpoint(eager=True)
         files = snapshot._write_data_files(
             rows, store_table, manifest.get("stats_col")
         )
@@ -2373,6 +2362,23 @@ def compact_agg_store(
         except snapshot.CommitConflictError as e:
             last_err = e
     raise last_err
+
+
+def compact_agg_store(
+    spark: SparkSession,
+    store_table: str,
+    keys: list[str],
+    sum_cols: list[str],
+) -> int:
+    """Fold the partial history to ONE row per live key (the agg
+    store's real compaction — file-level compaction alone leaves row
+    count growing with batches); see :func:`_compact_folded`."""
+    from . import ivm
+
+    return _compact_folded(
+        spark, store_table,
+        lambda base: ivm.merge_partials(base, keys, sum_cols),
+    )
 
 
 def graph_search_from_store(
@@ -3643,45 +3649,6 @@ def graph_search_published(
 # Incremental COUNT DISTINCT via HLL-register stores (r10 addendum)
 # ---------------------------------------------------------------------------
 
-def _compact_folded(
-    spark: SparkSession, store_table: str, fold_fn, marker_fn
-) -> int:
-    """Shared fold-compaction scaffold for the semilattice sketch
-    stores (HLL registers, CMS counters): CAS-committed rewrite with
-    rebase retries; ``fold_fn(base)`` produces the folded live rows
-    (batch_id NULL), ``marker_fn(base)`` the per-batch guard markers
-    that keep redelivery exact across folds. A concurrent ingest
-    winning the race re-runs the fold against its rows."""
-    cur = snapshot.current_version(store_table)
-    if cur is None:
-        raise snapshot.SnapshotError(f"no snapshot table at {store_table}")
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        manifest = snapshot.read_manifest(store_table)
-        base = snapshot.read_snapshot(spark, store_table)
-        rows = (
-            fold_fn(base)
-            .withColumn("batch_id", F.lit(None).cast("string"))
-            .unionByName(marker_fn(base))
-            .localCheckpoint(eager=True)
-        )
-        files = snapshot._write_data_files(
-            rows, store_table, manifest.get("stats_col")
-        )
-        try:
-            return snapshot._commit(
-                store_table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-            )
-        except snapshot.CommitConflictError as e:
-            last_err = e
-    raise last_err
-
-
-
-
 def ingest_hll_registers(
     spark: SparkSession,
     store_table: str,
@@ -3700,20 +3667,19 @@ def ingest_hll_registers(
     stops being affordable: store size there grows with live key
     COMBINATIONS, while HLL registers bound it at ≤512 rows per group
     whatever the cardinality. Each drop folds to its (group, bucket,
-    max rank) register partials — work ∝ the drop — and appends under
-    ``batch_id`` (idempotent redelivery, CAS commit, the agg-store
-    lifecycle). Registers are a MAX-semilattice (the bkq/knn fold
-    argument), so merge-on-read over any batch split equals the
+    max rank) register partials — work ∝ the drop — and appends as the
+    commit of ``batch_id`` (idempotent redelivery, CAS commit, the
+    agg-store lifecycle). Registers are a MAX-semilattice (the bkq/knn
+    fold argument), so merge-on-read over any batch split equals the
     one-shot sketch — value-exactly, since the deterministic h32 hash
-    is shared with the oracle. Inserts only: max() cannot retract
-    (the documented HLL trade; exact deletes need the cascade)."""
+    is shared with the oracle. Inserts only: max() cannot retract (the
+    documented HLL trade; exact deletes need the cascade)."""
     from . import sketch
 
-    regs = sketch.hll_registers(
-        batch, list(group_cols), value_col
-    ).withColumn("batch_id", F.lit(batch_id).cast("string"))
+    regs = sketch.hll_registers(batch, list(group_cols), value_col)
     return _ingest_rows(
-        spark, store_table, regs, "batch_id",
+        spark, store_table, regs, None,
+        batch_id=batch_id,
         compact_threshold=compact_threshold,
         compact_target=compact_target,
         compact_keep_versions=compact_keep_versions,
@@ -3734,7 +3700,6 @@ def hll_distinct_from_store(
 
     regs = (
         snapshot.read_snapshot(spark, store_table)
-        .filter(F.col("bucket").isNotNull())  # compaction markers
         .groupBy(*group_cols, "bucket")
         .agg(F.max("m_rank").alias("m_rank"))
     )
@@ -3762,7 +3727,6 @@ def hll_cumulative_from_store(
 
     regs = (
         snapshot.read_snapshot(spark, store_table)
-        .filter(F.col("bucket").isNotNull())
         .groupBy(date_col, "bucket")
         .agg(F.max("m_rank").alias("m_rank"))
     )
@@ -3780,34 +3744,13 @@ def compact_hll_store(
     spark: SparkSession, store_table: str, group_cols: list[str]
 ) -> int:
     """Fold the register history to one row per (group, bucket) —
-    lossless by the max semilattice. Seen batch ids survive as
-    null-bucket marker rows (the agg-store convention), so the
-    redelivery guard stays exact across folds."""
-
-    def fold(base: DataFrame) -> DataFrame:
-        return (
-            base.filter(F.col("bucket").isNotNull())
-            .groupBy(*group_cols, "bucket")
-            .agg(F.max("m_rank").alias("m_rank"))
-        )
-
-    def markers(base: DataFrame) -> DataFrame:
-        key_fields = {
-            f.name: f.dataType
-            for f in base.schema.fields
-            if f.name in group_cols
-        }
-        return base.select("batch_id").distinct().select(
-            *[
-                F.lit(None).cast(key_fields[k]).alias(k)
-                for k in group_cols
-            ],
-            F.lit(None).cast("int").alias("bucket"),
-            F.lit(None).cast("int").alias("m_rank"),
-            "batch_id",
-        )
-
-    return _compact_folded(spark, store_table, fold, markers)
+    lossless by the max semilattice (see :func:`_compact_folded`)."""
+    return _compact_folded(
+        spark, store_table,
+        lambda base: base.groupBy(*group_cols, "bucket").agg(
+            F.max("m_rank").alias("m_rank")
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3828,22 +3771,21 @@ def ingest_cms_cells(
 ) -> int:
     """Maintain a Count-Min frequency sketch from signed delta drops:
     each batch folds to its own (seed, cell, Σsign) counter partials —
-    ≤ d·w = 1024 rows whatever the drop size — and appends under
-    ``batch_id`` (idempotent redelivery, CAS commit). Counters are
-    LINEAR in the input multiset, so unlike the HLL register store
-    this one retracts exactly: a ``__sign = −1`` drop that negates
-    prior inserts leaves the merged sketch identical to one built on
-    the survivors (the ivm delete contract, pytest-pinned). The
-    merged sketch answers frequency probes at any corpus size from
-    ≤1024 live counters."""
+    ≤ d·w = 1024 rows whatever the drop size — and appends as the
+    commit of ``batch_id`` (idempotent redelivery, CAS commit).
+    Counters are LINEAR in the input multiset, so unlike the HLL
+    register store this one retracts exactly: a ``__sign = −1`` drop
+    that negates prior inserts leaves the merged sketch identical to
+    one built on the survivors (the ivm delete contract,
+    pytest-pinned). The merged sketch answers frequency probes at any
+    corpus size from ≤1024 live counters."""
     from . import sketch
 
     sign_col = "__sign" if "__sign" in batch.columns else None
-    cells = sketch.cms_cells(batch, value_col, sign_col).withColumn(
-        "batch_id", F.lit(batch_id).cast("string")
-    )
+    cells = sketch.cms_cells(batch, value_col, sign_col)
     return _ingest_rows(
-        spark, store_table, cells, "batch_id",
+        spark, store_table, cells, None,
+        batch_id=batch_id,
         compact_threshold=compact_threshold,
         compact_target=compact_target,
         compact_keep_versions=compact_keep_versions,
@@ -3853,8 +3795,7 @@ def ingest_cms_cells(
 def cms_cells_from_store(spark: SparkSession, store_table: str) -> DataFrame:
     """The live sketch: Σ counters per (seed, cell) over the partial
     history (≤ d·w·batches rows pre-compaction, corpus-independent);
-    zero-folded cells drop out (fully-retracted values + compaction
-    markers share the absorber)."""
+    zero-folded cells (fully-retracted values) drop out."""
     cells = (
         snapshot.read_snapshot(spark, store_table)
         .groupBy("seed", "cell")
@@ -3878,25 +3819,13 @@ def cms_probe_from_store(
 
 def compact_cms_store(spark: SparkSession, store_table: str) -> int:
     """Fold the counter history to ≤ d·w live rows — lossless by
-    counter linearity. Seen batch ids survive as zero-counter marker
-    rows, absorbed by the read's ≠0 filter."""
-
-    def fold(base: DataFrame) -> DataFrame:
-        return (
-            base.groupBy("seed", "cell")
-            .agg(F.sum("counter").cast("bigint").alias("counter"))
-            .filter(F.col("counter") != 0)
-        )
-
-    def markers(base: DataFrame) -> DataFrame:
-        return base.select("batch_id").distinct().select(
-            F.lit(None).cast("int").alias("seed"),
-            F.lit(None).cast("int").alias("cell"),
-            F.lit(0).cast("bigint").alias("counter"),
-            "batch_id",
-        )
-
-    return _compact_folded(spark, store_table, fold, markers)
+    counter linearity (see :func:`_compact_folded`)."""
+    return _compact_folded(
+        spark, store_table,
+        lambda base: base.groupBy("seed", "cell")
+        .agg(F.sum("counter").cast("bigint").alias("counter"))
+        .filter(F.col("counter") != 0),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3919,18 +3848,19 @@ def ingest_drift_buckets(
     at 100 TB means a corpus pass just to ask "did anything move?".
     Here each batch folds to its own ``(feature, bucket, Σcnt)``
     partials — bounded by the feature × bucket space, never the drop —
-    and appends under ``batch_id`` (idempotent redelivery, CAS commit,
-    the CMS-counter lifecycle). Counts are LINEAR, so any version of
-    the store is the exact histogram of everything ingested up to that
-    version, and the histogram of the ARRIVALS between two versions is
-    a subtraction — no corpus rescans, ever. ``buckets`` carries
-    ``(feature, bucket, cnt)``; signed ``cnt`` retracts exactly (the
-    ivm delete contract)."""
+    and appends as the commit of ``batch_id`` (idempotent redelivery,
+    CAS commit, the CMS-counter lifecycle). Counts are LINEAR, so any
+    version of the store is the exact histogram of everything ingested
+    up to that version, and the histogram of the ARRIVALS between two
+    versions is a subtraction — no corpus rescans, ever. ``buckets``
+    carries ``(feature, bucket, cnt)``; signed ``cnt`` retracts
+    exactly (the ivm delete contract)."""
     folded = buckets.groupBy("feature", "bucket").agg(
         F.sum("cnt").cast("long").alias("cnt")
-    ).withColumn("batch_id", F.lit(batch_id).cast("string"))
+    )
     return _ingest_rows(
-        spark, store_table, folded, "batch_id",
+        spark, store_table, folded, None,
+        batch_id=batch_id,
         compact_threshold=compact_threshold,
         compact_target=compact_target,
         compact_keep_versions=compact_keep_versions,
@@ -3941,12 +3871,11 @@ def drift_counts_from_store(
     spark: SparkSession, store_table: str, version: int | None = None
 ) -> DataFrame:
     """The folded histogram as of ``version`` (default latest):
-    ``(feature, bucket, cnt)`` with compaction markers and
-    fully-retracted buckets absorbed by the ≠0 filter."""
+    ``(feature, bucket, cnt)`` with fully-retracted buckets absorbed
+    by the ≠0 filter."""
     base = snapshot.read_snapshot(spark, store_table, version)
     return (
-        base.filter(F.col("bucket").isNotNull())
-        .groupBy("feature", "bucket")
+        base.groupBy("feature", "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
         .filter(F.col("cnt") != 0)
     )
@@ -4010,31 +3939,18 @@ def drift_pair_from_store(
 
 def compact_drift_store(spark: SparkSession, store_table: str) -> int:
     """Fold the partial history to one live row per (feature, bucket)
-    — lossless by count linearity. Seen batch ids survive as
-    null-bucket zero-count markers (the CMS convention). NOTE: folding
-    collapses version history, so pin ``ref_version`` semantics by
-    compacting only ABOVE the reference pin or re-pinning after — the
-    arrivals subtraction needs the ref version readable
+    — lossless by count linearity (see :func:`_compact_folded`).
+    NOTE: folding collapses version history, so pin ``ref_version``
+    semantics by compacting only ABOVE the reference pin or re-pinning
+    after — the arrivals subtraction needs the ref version readable
     (`snapshot.read_snapshot(…, ref_version)` still works while the
     version's manifest survives ``compact_keep_versions``)."""
-
-    def fold(base: DataFrame) -> DataFrame:
-        return (
-            base.filter(F.col("bucket").isNotNull())
-            .groupBy("feature", "bucket")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .filter(F.col("cnt") != 0)
-        )
-
-    def markers(base: DataFrame) -> DataFrame:
-        return base.select("batch_id").distinct().select(
-            F.lit(None).cast("string").alias("feature"),
-            F.lit(None).cast("string").alias("bucket"),
-            F.lit(0).cast("bigint").alias("cnt"),
-            "batch_id",
-        )
-
-    return _compact_folded(spark, store_table, fold, markers)
+    return _compact_folded(
+        spark, store_table,
+        lambda base: base.groupBy("feature", "bucket")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .filter(F.col("cnt") != 0),
+    )
 
 
 def ivf_occupancy_partial(

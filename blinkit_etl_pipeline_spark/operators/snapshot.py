@@ -43,6 +43,19 @@ written before the link lands, so any visible manifest is complete; an
 incomplete/foreign claim file surfaces as a loud SnapshotError, not a
 silent lost update.
 
+Redelivery (exactly-once per batch): every manifest carries
+``batch_ids``, the set of batch ids committed into that version — the
+``txn``/SetTransaction idea of the Delta Lake log. An
+``append_snapshot(..., batch_id=X)`` whose base already lists X is a
+no-op returning the base version, re-checked on every rebase, so two
+overlapping deliveries of one batch land once. :func:`has_batch`
+answers "was X committed?" from the manifest alone (no Spark job, cost
+independent of the store's history). Content-preserving rewrites
+(compaction, merge, retraction purges) carry the base's set forward;
+:func:`rollback_snapshot` restores the target version's set, so a
+rolled-back batch can be ingested again; a full-overwrite
+:func:`write_snapshot` resets it to the caller's id (or empty).
+
 Scope (honest): local/posix paths (os.link exclusivity; S3 would need
 conditional PUT, as early Delta did), one clustering key for file
 stats.
@@ -126,6 +139,11 @@ def read_manifest(table: str, version: int | None = None) -> dict:
     return manifest
 
 
+def _batch_ids(manifest: dict) -> list[str]:
+    # manifests written before the batch-id set existed list none
+    return manifest.get("batch_ids", [])
+
+
 def _file_stats(path: str, stats_col: str | None) -> dict:
     entry: dict = {"path": path}
     if stats_col is not None:
@@ -200,6 +218,7 @@ def _commit(
     stats_col: str | None,
     expected_version: int | None = None,
     schema: str | None = None,
+    batch_ids: Sequence[str] | None = None,
 ) -> int:
     """Compare-and-swap commit: claim version N+1 by hard-linking the
     fully-written manifest into place — ``os.link`` fails atomically if
@@ -209,12 +228,18 @@ def _commit(
     version, so the caller rebases instead of silently skipping the
     winner's changes. ``expected_version=0`` asserts the table does
     not exist yet (atomic CREATE: exactly one of several racing
-    creators lands as v1; the rest conflict and can re-read)."""
+    creators lands as v1; the rest conflict and can re-read).
+    ``batch_ids`` is the new version's committed-batch set; None
+    carries forward the set of the version this commit supersedes."""
     prev = current_version(table)
     if expected_version is not None:
         want = None if expected_version == 0 else expected_version
         if prev != want:
             raise CommitConflictError(table, prev)
+    if batch_ids is None:
+        batch_ids = (
+            [] if prev is None else _batch_ids(read_manifest(table, prev))
+        )
     version = 1 if prev is None else prev + 1
     os.makedirs(os.path.join(table, MANIFEST_DIR), exist_ok=True)
     manifest = {
@@ -222,6 +247,7 @@ def _commit(
         "ts": time.time(),
         "stats_col": stats_col,
         "files": files,
+        "batch_ids": sorted(batch_ids),
     }
     if schema is not None:
         manifest["schema"] = schema
@@ -299,36 +325,67 @@ def _read_files(spark: SparkSession, manifest: dict, paths) -> DataFrame:
 
 
 
+def has_batch(table: str, batch_id: str) -> bool:
+    """Was ``batch_id`` committed into the table's current version?
+    Answered from the manifest alone — no Spark job, and the cost does
+    not grow with the store's history."""
+    v = current_version(table)
+    return v is not None and batch_id in _batch_ids(read_manifest(table, v))
+
+
 def write_snapshot(
-    df: DataFrame, table: str, *, stats_col: str | None = None
+    df: DataFrame,
+    table: str,
+    *,
+    stats_col: str | None = None,
+    batch_id: str | None = None,
 ) -> int:
     """Create version 1 (or a full-overwrite new version) from ``df``.
+    The new version's batch-id set is ``[batch_id]`` (empty if None).
 
     Content doesn't depend on the base, so a lost version race only
     needs re-allocation — data files are written once."""
     files = _write_data_files(df, table, stats_col)
     schema = df.schema.json()
+    batch_ids = [] if batch_id is None else [batch_id]
     for _ in range(COMMIT_RETRIES):
         try:
-            return _commit(table, files, stats_col=stats_col, schema=schema)
+            return _commit(
+                table, files, stats_col=stats_col, schema=schema,
+                batch_ids=batch_ids,
+            )
         except CommitConflictError:
             continue
-    return _commit(table, files, stats_col=stats_col, schema=schema)
+    return _commit(
+        table, files, stats_col=stats_col, schema=schema, batch_ids=batch_ids
+    )
 
 
 def append_snapshot(
-    df: DataFrame, table: str, *, stats_col: str | None = None
+    df: DataFrame,
+    table: str,
+    *,
+    stats_col: str | None = None,
+    batch_id: str | None = None,
 ) -> int:
     """New version = previous version's files (by reference) + ``df``'s
     new files. No existing file is read or rewritten; on a commit
     conflict the (immutable, already-written) new files are re-composed
     onto the winner's manifest and retried — appends from concurrent
-    writers all land, in some serial order."""
+    writers all land, in some serial order.
+
+    With ``batch_id``, the append is exactly-once per id: a base
+    (first or rebased) whose manifest already lists the id makes this
+    call a no-op that returns the base version; otherwise the id joins
+    the new version's batch-id set."""
     new_files: list[dict] | None = None
     written_stats: str | None = None
     last_err: CommitConflictError | None = None
     for _ in range(COMMIT_RETRIES):
         manifest = read_manifest(table)
+        base_ids = _batch_ids(manifest)
+        if batch_id is not None and batch_id in base_ids:
+            return manifest["version"]
         effective_stats = stats_col or manifest.get("stats_col")
         if new_files is not None and written_stats != effective_stats:
             # the winner changed the table's stats_col under us: our
@@ -346,6 +403,9 @@ def append_snapshot(
                 stats_col=manifest.get("stats_col"),
                 expected_version=manifest["version"],
                 schema=_schema_union(manifest.get("schema"), df.schema),
+                batch_ids=(
+                    base_ids if batch_id is None else base_ids + [batch_id]
+                ),
             )
         except CommitConflictError as e:
             last_err = e
@@ -428,7 +488,9 @@ def rollback_snapshot(table: str, version: int) -> int:
     survives through the new name); and if the expire wins the race
     BEFORE the link, ``os.link`` raises and the rollback fails loudly
     — never a silently-torn version. The source manifest itself is
-    immutable, so a version-number race only re-allocates the commit."""
+    immutable, so a version-number race only re-allocates the commit.
+    The new version's batch-id set is ``version``'s, so batches
+    committed after it can be ingested again."""
     manifest = read_manifest(table, version)
     commit_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(table, DATA_DIR, f"rb-{commit_id}")
@@ -463,6 +525,7 @@ def rollback_snapshot(table: str, version: int) -> int:
                 files,
                 stats_col=manifest.get("stats_col"),
                 schema=manifest.get("schema"),
+                batch_ids=_batch_ids(manifest),
             )
         except CommitConflictError:
             continue
@@ -471,6 +534,7 @@ def rollback_snapshot(table: str, version: int) -> int:
         files,
         stats_col=manifest.get("stats_col"),
         schema=manifest.get("schema"),
+        batch_ids=_batch_ids(manifest),
     )
 
 

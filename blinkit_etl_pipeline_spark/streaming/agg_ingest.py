@@ -10,7 +10,9 @@ shares the stores' CAS/compaction/retraction lifecycle).
 
 Exactly-once: the foreachBatch epoch id is stable across
 crash-redelivery, and the agg store's guard is batch-grained — a
-replayed epoch folds to the same ``batch_id`` and appends nothing.
+replayed epoch carries the same ``batch_id``, which the store's
+manifest already lists (folds carry the set forward), so it appends
+nothing.
 Rows must carry ``__sign`` (+1 insert / −1 delete; a CDC feed maps
 op→sign before this sink) and pre-quantized measures (ivm module
 doc).

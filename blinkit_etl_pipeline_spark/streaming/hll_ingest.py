@@ -2,14 +2,15 @@
 registers → per-group distinct estimates on demand.
 
 The streaming twin of ``operators/sketch.py::hll_distinct`` (same
-layering as ``bkq_ingest``): each micro-batch folds to its own
-(group, bucket, max-rank) register partials — ≤512 rows per group
-touched by the batch, work ∝ batch — and appends under the CAS commit
-protocol keyed by the epoch id, so crash-redelivered epochs append
-nothing. Registers are a max-semilattice: reads fold the history with
-a plain groupBy-max, and the streamed estimate equals the one-shot
-batch sketch over everything that arrived, for ANY arrival order and
-batch split (``tests/test_streaming.py``).
+layering as ``bkq_ingest``): each micro-batch folds to its own (group,
+bucket, max-rank) register partials — ≤512 rows per group touched by
+the batch, work ∝ batch — and appends under the CAS commit protocol
+keyed by the epoch id; the store's manifest lists committed epoch ids,
+so crash-redelivered epochs append nothing. Registers are a
+max-semilattice: reads fold the history with a plain groupBy-max, and
+the streamed estimate equals the one-shot batch sketch over everything
+that arrived, for ANY arrival order and batch split
+(``tests/test_streaming.py``).
 """
 
 from __future__ import annotations

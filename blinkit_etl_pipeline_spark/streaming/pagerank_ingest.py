@@ -15,17 +15,18 @@ snapshot tables hold the whole state —
 
 Batch order matters INSIDE an epoch: state deltas commit BEFORE edge
 deltas, and every apply starts by asking the stores which commits of
-this epoch already exist (``_seen`` — per-batch marker rows survive
-compaction). Unlike the additive ingests (agg_ingest, lsh_ingest),
-the delta computation READS the stores it maintains, so a replay
-against already-updated stores would compute garbage (and trip the
-over-delete guard); the up-front check turns every replay into
+this epoch already exist (``snapshot.has_batch`` — each manifest lists
+its committed batch ids, compaction carries them forward, and the
+check reads no store data). Unlike the additive ingests (agg_ingest,
+lsh_ingest), the delta computation READS the stores it maintains, so a
+replay against already-updated stores would compute garbage (and trip
+the over-delete guard); the up-front check turns every replay into
 exactly the remaining commits: edges-present → no-op; state-present →
 finish the edge commit only; neither → full apply. Committing edges
-first would instead let a replay ingest a state delta computed
-against the wrong edge set. Bootstrap detection keys on the EDGE
-store for the same reason (it is the last store an epoch touches, so
-its presence implies a complete bootstrap).
+first would instead let a replay ingest a state delta computed against
+the wrong edge set. Bootstrap detection keys on the EDGE store for the
+same reason (it is the last store an epoch touches, so its presence
+implies a complete bootstrap).
 
 Contract (inherited from ``pagerank_delta``, guards raise): the first
 batch is insert-only and defines the graph; later batches must not add
@@ -45,25 +46,6 @@ from .file_source import run_available_now
 
 _EDGE_KEYS = ["src", "dst"]
 _STATE_KEYS = ["node", "it"]
-
-
-def _seen(spark: SparkSession, store: str, batch_id: str) -> bool:
-    """Has ``batch_id`` been committed to ``store``? (Compaction keeps
-    per-batch marker rows, so this survives folds.) Needed BEFORE the
-    delta computation: a redelivered epoch replayed against the
-    already-updated stores would re-delete already-deleted edges and
-    trip pagerank_delta's over-delete guard — the ingest-level
-    redelivery guard sits too late for an operator that READS the
-    stores it maintains."""
-    if snapshot.current_version(store) is None:
-        return False
-    return (
-        snapshot.read_snapshot(spark, store)
-        .filter(F.col("batch_id") == batch_id)
-        .limit(1)
-        .count()
-        > 0
-    )
 
 
 def live_edges(spark: SparkSession, edge_store: str) -> DataFrame:
@@ -97,7 +79,11 @@ def apply_edge_batch(
     """Fold one signed edge batch into both stores (idempotent per
     ``batch_id``). First-ever batch bootstraps via the full
     ``pagerank_state`` run; every later batch pays only the delta
-    propagation."""
+    propagation. The replay check runs BEFORE the delta computation:
+    a redelivered epoch replayed against the already-updated stores
+    would re-delete already-deleted edges and trip pagerank_delta's
+    over-delete guard — the ingest-level redelivery guard sits too
+    late for an operator that READS the stores it maintains."""
     if snapshot.current_version(edge_store) is None:
         if "__sign" in batch.columns and (
             batch.filter(F.col("__sign") < 0).limit(1).count()
@@ -107,7 +93,7 @@ def apply_edge_batch(
                 "(it defines the graph)"
             )
         edges = batch.select("src", "dst")
-        if not _seen(spark, state_store, batch_id):
+        if not snapshot.has_batch(state_store, batch_id):
             # (a replayed crashed bootstrap skips straight to edges)
             state, n = graph.pagerank_state(edges, iterations)
             # Pin format props BEFORE the state commit (module
@@ -146,10 +132,9 @@ def apply_edge_batch(
             batch_id=batch_id,
         )
         return
-    if _seen(spark, edge_store, batch_id):
+    if snapshot.has_batch(edge_store, batch_id):
         return  # epoch fully applied (edges commit last)
-    skip_state = _seen(spark, state_store, batch_id)
-    if skip_state:
+    if snapshot.has_batch(state_store, batch_id):
         # crash landed between the state and edge commits: the state
         # already holds this epoch's deltas — just finish the edges
         incremental.ingest_agg_deltas(

@@ -9,26 +9,38 @@ from __future__ import annotations
 
 import threading
 
-from blinkit_etl_pipeline_spark.operators.bounded import bounded_plan
+from blinkit_etl_pipeline_spark.operators.bounded import (
+    BOUNDED_SHUFFLE_PARTITIONS,
+    bounded_plan,
+)
 
 KEY = "spark.sql.adaptive.enabled"
+PARTS = "spark.sql.shuffle.partitions"
 
 
 def test_restores_on_exit_and_exception(spark):
     spark.conf.set(KEY, "true")
-    parts = spark.conf.get("spark.sql.shuffle.partitions")
-    with bounded_plan(spark):
-        assert spark.conf.get(KEY) == "false"
-        # bounded frames get a bounded static partition count
-        assert spark.conf.get("spark.sql.shuffle.partitions") != parts
-    assert spark.conf.get(KEY) == "true"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    saved = spark.conf.get(PARTS)
+    # a session value distinct from the bracket's, whatever the core
+    # count the session was sized to
+    parts = str(BOUNDED_SHUFFLE_PARTITIONS + 1)
+    spark.conf.set(PARTS, parts)
     try:
         with bounded_plan(spark):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get(KEY) == "true"
+            assert spark.conf.get(KEY) == "false"
+            # bounded frames get a bounded static partition count
+            assert spark.conf.get(PARTS) != parts
+            assert spark.conf.get(PARTS) == str(BOUNDED_SHUFFLE_PARTITIONS)
+        assert spark.conf.get(KEY) == "true"
+        assert spark.conf.get(PARTS) == parts
+        try:
+            with bounded_plan(spark):
+                raise RuntimeError("boom")
+        except RuntimeError:
+            pass
+        assert spark.conf.get(KEY) == "true"
+    finally:
+        spark.conf.set(PARTS, saved)
 
 
 def test_nested_brackets_restore_only_at_outer_exit(spark):

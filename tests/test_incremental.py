@@ -3,6 +3,8 @@ persisted signature store, redelivery idempotence, versioned index."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from blinkit_etl_pipeline_spark.operators import incremental, snapshot
@@ -1086,12 +1088,14 @@ def test_agg_store_fold_compaction_preserves_view_and_guard(
     incremental.compact_agg_store(spark, store, ["cat"], ["amt"])
     after = _read_view(spark, store)
     assert before == after
-    # partial rows folded to one per live key (+ one marker per batch)
+    # partial rows folded to one per live key; the seen batch ids
+    # live in the manifest, not in the data
     folded = snapshot.read_snapshot(spark, store)
-    data_rows = folded.filter(F.col("cat").isNotNull()).count()
-    assert data_rows == len(after)
-    markers = folded.filter(F.col("cat").isNull())
-    assert markers.count() == 6
+    assert folded.count() == len(after)
+    assert folded.select("cat").distinct().count() == len(after)
+    assert snapshot.read_manifest(store)["batch_ids"] == [
+        f"b{i}" for i in range(6)
+    ]
     # the redelivery guard survives the fold: old batch ids still bounce
     incremental.ingest_agg_deltas(
         spark, store,
@@ -1099,6 +1103,96 @@ def test_agg_store_fold_compaction_preserves_view_and_guard(
         batch_id="b3",
     )
     assert _read_view(spark, store) == after
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{os.urandom(6).hex()}"
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_agg_store_redelivery_starts_no_spark_job(spark, tmp_path):
+    """The batch-id guard is answered from the manifest: redelivering a
+    committed batch starts no Spark job, however many batches the
+    store has seen."""
+    store = str(tmp_path / "aggstore_guard")
+    sums = {"amt": F.col("amount_q")}
+
+    def ingest(i):
+        incremental.ingest_agg_deltas(
+            spark, store, _sales_rows(spark, [("k%d" % i, 10 + i, 1)]),
+            ["cat"], sums, batch_id=f"b{i}",
+        )
+
+    assert _jobs_started(spark, lambda: ingest(0)) > 0  # probe sees jobs
+    assert _jobs_started(spark, lambda: ingest(0)) == 0
+    for i in range(1, 20):
+        ingest(i)
+    view = _read_view(spark, store)
+    assert len(view) == 20
+    assert _jobs_started(spark, lambda: ingest(0)) == 0
+    assert _jobs_started(spark, lambda: ingest(19)) == 0
+    assert _read_view(spark, store) == view
+
+
+def test_agg_store_overlapping_redelivery_lands_once(
+    spark, tmp_path, monkeypatch
+):
+    """Two deliveries of one batch overlap: the second runs to
+    completion between the first's guard check and its commit. The
+    append re-checks the batch id against the base it commits on, so
+    the batch lands once."""
+    store = str(tmp_path / "aggstore_race")
+    sums = {"amt": F.col("amount_q")}
+    batch = _sales_rows(spark, [("a", 10, 1), ("b", 5, 1)])
+    incremental.ingest_agg_deltas(
+        spark, store, _sales_rows(spark, [("a", 100, 1)]), ["cat"], sums,
+        batch_id="b0",
+    )
+    real_append = snapshot.append_snapshot
+    raced = []
+
+    def racing_append(df, table, **kw):
+        if not raced:
+            raced.append(table)
+            incremental.ingest_agg_deltas(
+                spark, store, batch, ["cat"], sums, batch_id="b1"
+            )
+        return real_append(df, table, **kw)
+
+    monkeypatch.setattr(snapshot, "append_snapshot", racing_append)
+    incremental.ingest_agg_deltas(
+        spark, store, batch, ["cat"], sums, batch_id="b1"
+    )
+    assert raced == [store]
+    assert _read_view(spark, store) == {"a": (110, 2), "b": (5, 1)}
+
+
+def test_agg_store_rollback_reopens_the_guard(spark, tmp_path):
+    """Rolling back to a version before batch X restores that
+    version's batch-id set, so ingesting X again applies it."""
+    store = str(tmp_path / "aggstore_rollback")
+    sums = {"amt": F.col("amount_q")}
+    v1 = incremental.ingest_agg_deltas(
+        spark, store, _sales_rows(spark, [("a", 100, 1)]), ["cat"], sums,
+        batch_id="b0",
+    )
+    x = _sales_rows(spark, [("a", 10, 1), ("b", 5, 1)])
+    incremental.ingest_agg_deltas(spark, store, x, ["cat"], sums,
+                                  batch_id="x")
+    snapshot.rollback_snapshot(store, v1)
+    assert _read_view(spark, store) == {"a": (100, 1)}
+    incremental.ingest_agg_deltas(spark, store, x, ["cat"], sums,
+                                  batch_id="x")
+    assert _read_view(spark, store) == {"a": (110, 2), "b": (5, 1)}
 
 
 def test_streaming_agg_ingest_maintains_view(spark, tmp_path):

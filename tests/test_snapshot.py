@@ -4,6 +4,8 @@ copy-on-write MERGE with range pruning, vacuum."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -35,6 +37,70 @@ def test_snapshot_versions_time_travel_and_rollback(spark, tmp_path):
     assert S.read_snapshot(spark, t, version=2).count() == 150  # history intact
 
 
+def test_manifest_batch_ids_guard_appends_and_follow_rewrites(
+    spark, tmp_path
+):
+    """Each version lists its committed batch ids: an append of a
+    listed id is a no-op, content-preserving rewrites carry the set,
+    rollback restores the target version's set and a full overwrite
+    resets it."""
+    t = str(tmp_path / "txn")
+    assert not S.has_batch(t, "b1")
+    v1 = S.write_snapshot(_mk(spark, 0, 10, "a"), t, stats_col="k",
+                          batch_id="b1")
+    v2 = S.append_snapshot(_mk(spark, 10, 20, "b"), t, batch_id="b2")
+    assert S.read_manifest(t)["batch_ids"] == ["b1", "b2"]
+    assert S.append_snapshot(_mk(spark, 10, 20, "b"), t, batch_id="b2") == v2
+    assert S.current_version(t) == v2
+    assert S.read_snapshot(spark, t).count() == 20
+    S.append_snapshot(_mk(spark, 20, 25, "c"), t)  # no id: set unchanged
+    S.compact_snapshot(spark, t, target_files=1)
+    S.merge_snapshot(
+        spark, t, spark.createDataFrame([(5, "U")], "k bigint, v string"),
+        ["k"],
+    )
+    assert S.has_batch(t, "b1") and S.has_batch(t, "b2")
+    S.rollback_snapshot(t, v1)
+    assert S.has_batch(t, "b1") and not S.has_batch(t, "b2")
+    S.write_snapshot(_mk(spark, 0, 5, "d"), t, stats_col="k")
+    assert S.read_manifest(t)["batch_ids"] == []
+
+
+def test_concurrent_appends_of_one_batch_id_land_once(spark, tmp_path):
+    """More racing appenders than cores deliver the same batch id: each
+    CAS rebase re-checks the base's batch-id set, so exactly one
+    append lands and the rest return without committing."""
+    t = str(tmp_path / "race")
+    S.write_snapshot(_mk(spark, 0, 10, "a"), t, stats_col="k",
+                     batch_id="b0")
+    frame = _mk(spark, 10, 20, "b").localCheckpoint(eager=True)
+    errors: list[Exception] = []
+
+    def deliver():
+        try:
+            S.append_snapshot(frame, t, batch_id="b1")
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    workers = [
+        threading.Thread(target=deliver)
+        for _ in range(len(os.sched_getaffinity(0)) + 2)
+    ]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(120)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(w.is_alive() for w in workers)
+    assert errors == []
+    assert S.read_manifest(t)["batch_ids"] == ["b0", "b1"]
+    assert S.read_snapshot(spark, t).count() == 20
+
+
 def test_snapshot_reader_isolation_across_commits(spark, tmp_path):
     """A reader that resolved version N keeps a consistent view while a
     new commit lands — the immutable-files property plain overwrite
@@ -58,6 +124,9 @@ def test_snapshot_reader_isolation_across_commits(spark, tmp_path):
 
 def test_merge_snapshot_rewrites_only_intersecting_files(spark, tmp_path):
     t = str(tmp_path / "cow")
+    # pin the file granularity: the default file count follows the
+    # session's parallelism and is a single file on small machines
+    S.ensure_table_properties(t, {"target_file_rows": 1_000})
     S.write_snapshot(_mk(spark, 0, 10_000, "a"), t, stats_col="k")
     m1 = S.read_manifest(t)
     assert len(m1["files"]) > 1, "need multiple files for pruning to show"
