@@ -56,13 +56,8 @@ _STATE: dict = {}
 
 #: static partition count for bracketed exchanges — contract-bounded
 #: frames (|Q|·beam·k, |Q|·C, frontier caps) need single-digit
-#: partitions at ANY corpus size; env-overridable for deployments
-#: whose bounded contracts are larger
-import os
-
-BOUNDED_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_BOUNDED_PARTS", "4")
-)
+#: partitions at ANY corpus size
+BOUNDED_SHUFFLE_PARTITIONS = 4
 
 
 @contextmanager

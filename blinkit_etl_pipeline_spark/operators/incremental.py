@@ -45,9 +45,6 @@ def ingest_and_find_dups(
     n: int = 3,
     min_bands: int = 1,
     on_pairs=None,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> tuple[DataFrame, int]:
     """Check ``new_docs`` against the store AND within itself, then
     append the batch's signatures as a new store version.
@@ -77,15 +74,15 @@ def ingest_and_find_dups(
     **Store maintenance**: every append adds a file set, so after
     thousands of batches the manifest and file count — and with them
     ingest latency (file listing + per-file open cost) — would grow
-    unboundedly. When the post-append manifest exceeds
-    ``compact_threshold`` files, the store is compacted
+    unboundedly. Every ingest applies one compaction policy
+    (:func:`_maybe_compact`): when the post-append manifest lists more
+    than :data:`COMPACT_THRESHOLD` files, the store is compacted
     (:func:`snapshot.compact_snapshot` — CAS-committed, so a racing
-    ingest is never dropped) down to ``compact_target`` files and
-    versions older than ``compact_keep_versions`` are vacuumed. Net:
-    file count and manifest size stay O(threshold) at any batch count,
-    bounded-history time travel. ``compact_threshold=None`` disables
-    (unbounded growth, full time travel). The returned version is the
-    batch's own append commit.
+    ingest is never dropped) down to :data:`COMPACT_TARGET` files and
+    only the newest :data:`COMPACT_KEEP_VERSIONS` versions are kept.
+    Net: file count and manifest size stay O(threshold) at any batch
+    count, with bounded-history time travel. The returned version is
+    the batch's own append commit.
     """
     empty = spark.createDataFrame(
         [], "doc_a long, doc_b long, bands_matched int"
@@ -124,9 +121,6 @@ def ingest_and_find_dups(
         spark, store_table, band_frame(minhash_signatures(new_docs, n=n)),
         "doc_id",
         pre_commit_fn=pre_commit,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
     return result["pairs"], version
 
@@ -152,28 +146,34 @@ def overlap_store_ops(thunks):
         return [f.result() for f in futs]
 
 
-def _maybe_compact(
-    spark: SparkSession,
-    store_table: str,
-    compact_threshold: int | None,
-    compact_target: int,
-    compact_keep_versions: int,
-) -> None:
-    """Shared store maintenance: compact + vacuum when the manifest
-    exceeds the file threshold. ``keep_last`` is clamped to >= 2 so the
-    batch's own append commit (the version every ingest just returned)
-    always survives its own maintenance pass — keep_versions=1 would
-    expire it immediately, leaving callers a dangling version handle."""
-    if (
-        compact_threshold is not None
-        and len(snapshot.read_manifest(store_table)["files"])
-        > compact_threshold
-    ):
+#: the store compaction policy every ingest shares: a store whose
+#: manifest lists more than COMPACT_THRESHOLD files is rewritten (file
+#: compaction, or the k-NN graph's top-k fold) and vacuumed down to its
+#: newest COMPACT_KEEP_VERSIONS versions — at least 2, so the batch's
+#: own append commit (the version every ingest just returned) survives
+#: its own maintenance pass
+COMPACT_THRESHOLD = 64
+COMPACT_TARGET = 8
+COMPACT_KEEP_VERSIONS = 2
+
+
+def _over_compact_threshold(store_table: str) -> bool:
+    return (
+        len(snapshot.read_manifest(store_table)["files"]) > COMPACT_THRESHOLD
+    )
+
+
+def _maybe_compact(spark: SparkSession, store_table: str) -> None:
+    """Shared store maintenance: when the manifest lists more than
+    :data:`COMPACT_THRESHOLD` files, compact to :data:`COMPACT_TARGET`
+    files and vacuum all but the newest :data:`COMPACT_KEEP_VERSIONS`
+    versions."""
+    if _over_compact_threshold(store_table):
         snapshot.compact_snapshot(
-            spark, store_table, target_files=compact_target
+            spark, store_table, target_files=COMPACT_TARGET
         )
         snapshot.expire_snapshots(
-            store_table, keep_last=max(compact_keep_versions, 2)
+            store_table, keep_last=COMPACT_KEEP_VERSIONS
         )
 
 
@@ -188,16 +188,17 @@ def _ingest_rows(
     seen_fn=None,
     augment_fn=None,
     pre_commit_fn=None,
-    compact_threshold: int | None,
-    compact_target: int,
-    compact_keep_versions: int,
 ) -> int:
     """Shared idempotent-append lifecycle for ALL the stores (LSH
     signatures, PQ/IVFPQ codes, BM25 postings, the batch-keyed agg/
-    sketch partials): redelivery guard, eager materialization, atomic
-    CAS append with auto-rebase, auto-compaction. One implementation,
-    so a protocol fix lands once and the next index format is a
-    plug-in.
+    sketch partials): redelivery guard, eager materialization, one
+    atomic CAS append with auto-rebase (it also creates a missing store
+    as version 1, clustered by ``stats_col`` — racing first ingests
+    both land), then the shared compaction policy
+    (:func:`_maybe_compact`: more than :data:`COMPACT_THRESHOLD` files
+    → :data:`COMPACT_TARGET` files, :data:`COMPACT_KEEP_VERSIONS`
+    versions kept). One implementation, so a protocol fix lands once
+    and the next index format is a plug-in.
 
     Two guards. Id-keyed stores anti-join the batch on ``id_col``
     against the live store (``seen_fn(store_df)`` overrides how seen
@@ -217,13 +218,12 @@ def _ingest_rows(
     between hook and append redelivers the batch and recomputes
     identical results; a crash after the append finds no fresh ids and
     never re-fires the hook."""
-    exists = snapshot.current_version(store_table) is not None
     store: DataFrame | None = None
     if batch_id is not None:
         if snapshot.has_batch(store_table, batch_id):
             return snapshot.current_version(store_table)
     else:
-        if exists:
+        if snapshot.current_version(store_table) is not None:
             # the store handed to searches (pre_commit_fn) is the LIVE
             # view: retracted docs never surface as match partners
             store = _exclude_tombstoned(
@@ -246,18 +246,10 @@ def _ingest_rows(
         pre_commit_fn(store, rows)
     if augment_fn is not None:
         rows = augment_fn(rows)
-    if exists:
-        version = snapshot.append_snapshot(
-            rows, store_table, batch_id=batch_id
-        )
-    else:
-        version = snapshot.write_snapshot(
-            rows, store_table, stats_col=stats_col, batch_id=batch_id
-        )
-    _maybe_compact(
-        spark, store_table, compact_threshold, compact_target,
-        compact_keep_versions,
+    version = snapshot.append_snapshot(
+        rows, store_table, stats_col=stats_col, batch_id=batch_id
     )
+    _maybe_compact(spark, store_table)
     return version
 
 
@@ -268,9 +260,6 @@ def ingest_pq_codes(
     codebook,
     *,
     dim: int = 64,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """PQ twin of :func:`ingest_and_find_dups`'s store side: encode a
     batch of embeddings to 8-byte codes against the SHIPPED codebook
@@ -289,12 +278,7 @@ def ingest_pq_codes(
     codes = vector.pq_encode(
         new_emb.dropDuplicates(["vec_id"]), codebook, dim=dim
     )
-    return _ingest_rows(
-        spark, store_table, codes, "vec_id",
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
-    )
+    return _ingest_rows(spark, store_table, codes, "vec_id")
 
 
 def ingest_ivfpq_codes(
@@ -305,9 +289,6 @@ def ingest_ivfpq_codes(
     pq_codebook,
     *,
     dim: int = 64,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Stored-IVFPQ ingest: one Arrow pass assigns each new vector to
     its coarse inverted list AND encodes its PQ codes
@@ -329,9 +310,6 @@ def ingest_ivfpq_codes(
     return _ingest_rows(
         spark, store_table, codes, "vec_id",
         stats_col="centroid_id",
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
 
 
@@ -680,8 +658,6 @@ def ingest_knn_graph(
     nbits: int = 4,
     ntables: int = 8,
     dim: int = 64,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
     payload_store: str | None = None,
     pairing_slices: int | None = None,
     attrs: list[str] | None = None,
@@ -761,7 +737,6 @@ def ingest_knn_graph(
         payload_store=payload_store,
         payload_cols=["vec_id", "qvec", "qq", *(attrs or [])],
         vec_cols=None,
-        compact_threshold=compact_threshold,
         pairing_slices=pairing_slices,
     )
 
@@ -776,7 +751,6 @@ def _ingest_knn_core(
     payload_store: str | None,
     payload_cols: list[str],
     vec_cols: list[str] | None,
-    compact_threshold: int | None,
     pairing_slices: int | None = None,
 ) -> int:
     """The shared knn-store ingest lifecycle (r11 review: one
@@ -837,12 +811,8 @@ def _ingest_knn_core(
         ).withColumn("__new", F.lit(0))
         tagged = tagged.unionByName(stored)
     if pairing_slices is not None and pairing_slices > 1:
-        import time as _time
-
-        slice_debug = os.environ.get("SPARK_GRAFT_SLICE_WALLS") == "1"
         edges = None
         for s in range(pairing_slices):
-            t0 = _time.perf_counter()
             cand_s = (
                 tagged.filter(F.col("tb") % pairing_slices == s)
                 .groupBy("t", "bucket")
@@ -863,12 +833,6 @@ def _ingest_knn_core(
                 .select("u", "v", "cos_raw")
                 .localCheckpoint(eager=True)
             )
-            if slice_debug:  # scale-evidence instrumentation only
-                print(
-                    f"[pairing slice {s + 1}/{pairing_slices}] "
-                    f"{_time.perf_counter() - t0:.1f}s",
-                    flush=True,
-                )
     else:
         cand = tagged.groupBy("t", "bucket").applyInPandas(
             _knn_cross_fn(store_k), schema="u long, v long, cos_raw double"
@@ -908,10 +872,8 @@ def _ingest_knn_core(
     else:
         _default_file_target(vec_store)
         snapshot.write_snapshot(vec_rows, vec_store, stats_col="tb")
-    if compact_threshold is not None:
-        m = snapshot.read_manifest(graph_store)
-        if len(m["files"]) >= compact_threshold:
-            compact_knn_store(spark, graph_store, store_k)
+    if _over_compact_threshold(graph_store):
+        compact_knn_store(spark, graph_store, store_k)
     return gv
 
 
@@ -927,8 +889,6 @@ def ingest_knn_graph_sq8(
     nbits: int = 4,
     ntables: int = 8,
     dim: int = 64,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
     payload_store: str | None = None,
     pairing_slices: int | None = None,
 ) -> int:
@@ -984,7 +944,6 @@ def ingest_knn_graph_sq8(
         payload_store=payload_store,
         payload_cols=["vec_id", "codes"],
         vec_cols=["vec_id", "t", "bucket", "tb", "codes"],
-        compact_threshold=compact_threshold,
         pairing_slices=pairing_slices,
     )
 
@@ -1083,36 +1042,16 @@ def compact_knn_store(
     spark: SparkSession, graph_store: str, k: int
 ) -> int:
     """Fold the candidate history to ≤k rows per node — lossless by
-    the top-k merge semilattice (the compact_bkq_store argument).
-    CAS-committed with rebase retries."""
+    the top-k merge semilattice (the compact_bkq_store argument);
+    committed by :func:`snapshot.rewrite_snapshot`."""
     from . import vector
 
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        manifest = snapshot.read_manifest(graph_store)
-        base = snapshot.read_snapshot(spark, graph_store)
-        folded = (
-            vector._directed_topk(base.dropDuplicates(["u", "v"]), k)
-            .select("u", "v", "cos_raw")
-            .localCheckpoint(eager=True)
-        )
-        files = snapshot._write_data_files(
-            folded, graph_store, manifest.get("stats_col")
-        )
-        try:
-            return snapshot._commit(
-                graph_store,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-                schema=manifest.get("schema"),
-            )
-        except snapshot.CommitConflictError as e:
-            last_err = e
-    raise snapshot.SnapshotError(
-        f"compact_knn_store: lost the commit race "
-        f"{snapshot.COMMIT_RETRIES} times at {graph_store}"
-    ) from last_err
+    return snapshot.rewrite_snapshot(
+        spark, graph_store,
+        lambda base: vector._directed_topk(
+            base.dropDuplicates(["u", "v"]), k
+        ).select("u", "v", "cos_raw"),
+    )
 
 
 #: tkey clustering constants for the postings store. Real token keys
@@ -1140,10 +1079,6 @@ def ingest_bm25_postings(
     spark: SparkSession,
     store_table: str,
     new_docs: DataFrame,
-    *,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Incremental BM25 index ingest: tokenize a document batch ONCE
     into postings + per-doc length sentinels (``functions.text.
@@ -1200,9 +1135,6 @@ def ingest_bm25_postings(
             ).select("doc_id").distinct()
         ),
         augment_fn=_augment,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
 
 
@@ -1222,10 +1154,6 @@ def ingest_bigram_postings(
     spark: SparkSession,
     store_table: str,
     new_docs: DataFrame,
-    *,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Collocation-index companion to :func:`ingest_bm25_postings`
     (VERDICT r9 task #7): persist a document batch's per-doc
@@ -1267,9 +1195,6 @@ def ingest_bigram_postings(
         spark, store_table, rows, "doc_id",
         stats_col="bkey",
         augment_fn=_augment,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
 
 
@@ -1472,9 +1397,6 @@ def ingest_and_find_dup_spans(
     *,
     k: int = 10,
     on_spans=None,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> tuple[DataFrame, int]:
     """Span-granularity twin of :func:`ingest_and_find_dups` — the
     incremental form of :func:`dedup.span_dedup` (Lee et al. 2022),
@@ -1586,9 +1508,6 @@ def ingest_and_find_dup_spans(
         "doc_id",
         stats_col="h",
         pre_commit_fn=pre_commit,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
     return result["spans"], version
 
@@ -1905,29 +1824,18 @@ def purge_retracted(
         raise snapshot.SnapshotError(f"no snapshot table at {store_table}")
     if tb is None:
         return cur, 0
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        manifest = snapshot.read_manifest(store_table)
-        base = snapshot.read_snapshot(spark, store_table)
+    removed = 0
+
+    def fold(base: DataFrame) -> DataFrame:
+        nonlocal removed  # of the attempt that commits (the last one)
         live = base.join(F.broadcast(tb), id_col, "left_anti")
         if rebuild_fn is not None:
             live = rebuild_fn(live)
         live = live.localCheckpoint(eager=True)
         removed = base.count() - live.count()
-        files = snapshot._write_data_files(
-            live, store_table, manifest.get("stats_col")
-        )
-        try:
-            version = snapshot._commit(
-                store_table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-            )
-            return version, removed
-        except snapshot.CommitConflictError as e:
-            last_err = e  # concurrent ingest won — re-run against it
-    raise last_err
+        return live
+
+    return snapshot.rewrite_snapshot(spark, store_table, fold), removed
 
 
 def purge_bm25_store(
@@ -2020,9 +1928,6 @@ def ingest_sq8_codes(
     new_emb: DataFrame,
     *,
     stats=None,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """SQ8 twin of :func:`ingest_pq_codes`: encode a batch to
     byte-per-dimension codes and append them to a snapshot store. The
@@ -2037,12 +1942,7 @@ def ingest_sq8_codes(
 
     stats = _sq8_pin_stats(store_table, new_emb, stats)
     codes = vector.sq8_encode(new_emb.dropDuplicates(["vec_id"]), stats)
-    return _ingest_rows(
-        spark, store_table, codes, "vec_id",
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
-    )
+    return _ingest_rows(spark, store_table, codes, "vec_id")
 
 
 def sq8_store_probe(
@@ -2078,9 +1978,6 @@ def ingest_bkq_sketch(
     value_col: str,
     *,
     k: int | None = None,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Persist one batch's per-day bottom-k quantile sketches
     (operators/sketch.py::bkq_sketch) into a snapshot store — the
@@ -2151,20 +2048,15 @@ def ingest_bkq_sketch(
         "__sid",
         F.concat(F.col("day").cast("string"), F.lit("|"), F.col("h")),
     )
-    return _ingest_rows(
-        spark, store_table, rows, "__sid",
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
-    )
+    return _ingest_rows(spark, store_table, rows, "__sid")
 
 
 def compact_bkq_store(spark: SparkSession, store_table: str) -> int:
     """Fold the candidate history to the k smallest rows per day —
     the bkq analogue of :func:`compact_agg_store` (file-level
     compaction alone leaves row count growing with batches). Lossless
-    for every read by the bottom-k merge algebra. CAS-committed with
-    rebase retries."""
+    for every read by the bottom-k merge algebra; committed by
+    :func:`snapshot.rewrite_snapshot`."""
     from .sketch import bkq_merge
 
     props = snapshot.table_properties(store_table)
@@ -2173,27 +2065,9 @@ def compact_bkq_store(spark: SparkSession, store_table: str) -> int:
             f"no bkq_k pinned at {store_table} — not a bkq sketch store"
         )
     k = int(props["bkq_k"])
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        manifest = snapshot.read_manifest(store_table)
-        base = snapshot.read_snapshot(spark, store_table)
-        folded = bkq_merge(base, ["day"], k).localCheckpoint(eager=True)
-        files = snapshot._write_data_files(
-            folded, store_table, manifest.get("stats_col")
-        )
-        try:
-            return snapshot._commit(
-                store_table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-            )
-        except snapshot.CommitConflictError as e:
-            last_err = e
-    raise snapshot.SnapshotError(
-        f"compact_bkq_store: lost the commit race "
-        f"{snapshot.COMMIT_RETRIES} times at {store_table}"
-    ) from last_err
+    return snapshot.rewrite_snapshot(
+        spark, store_table, lambda base: bkq_merge(base, ["day"], k)
+    )
 
 
 def rebuild_bkq_store(
@@ -2291,9 +2165,6 @@ def ingest_agg_deltas(
     sums,
     *,
     batch_id: str,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Maintain a materialized sum/count aggregate from one signed
     delta batch (operators/ivm.py algebra): fold the batch to per-key
@@ -2311,9 +2182,6 @@ def ingest_agg_deltas(
     return _ingest_rows(
         spark, store_table, ivm.delta_partials(batch, keys, sums), None,
         batch_id=batch_id,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
     )
 
 
@@ -2334,36 +2202,6 @@ def read_agg_store(
     )
 
 
-def _compact_folded(spark: SparkSession, store_table: str, fold_fn) -> int:
-    """Shared fold-compaction scaffold for the batch-keyed stores (agg
-    partials, HLL registers, CMS counters, drift buckets):
-    CAS-committed rewrite with rebase retries; ``fold_fn(base)``
-    produces the folded live rows. The commit carries the base's
-    batch-id set forward in the manifest, so the redelivery guard
-    stays exact across folds. A concurrent ingest winning the race
-    re-runs the fold against its rows."""
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        manifest = snapshot.read_manifest(store_table)
-        base = snapshot.read_snapshot(
-            spark, store_table, manifest["version"]
-        )
-        rows = fold_fn(base).localCheckpoint(eager=True)
-        files = snapshot._write_data_files(
-            rows, store_table, manifest.get("stats_col")
-        )
-        try:
-            return snapshot._commit(
-                store_table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-            )
-        except snapshot.CommitConflictError as e:
-            last_err = e
-    raise last_err
-
-
 def compact_agg_store(
     spark: SparkSession,
     store_table: str,
@@ -2372,10 +2210,12 @@ def compact_agg_store(
 ) -> int:
     """Fold the partial history to ONE row per live key (the agg
     store's real compaction — file-level compaction alone leaves row
-    count growing with batches); see :func:`_compact_folded`."""
+    count growing with batches). :func:`snapshot.rewrite_snapshot`
+    carries the batch-id set forward, so the redelivery guard stays
+    exact across folds."""
     from . import ivm
 
-    return _compact_folded(
+    return snapshot.rewrite_snapshot(
         spark, store_table,
         lambda base: ivm.merge_partials(base, keys, sum_cols),
     )
@@ -3657,9 +3497,6 @@ def ingest_hll_registers(
     value_col: str,
     *,
     batch_id: str,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Maintain per-group COUNT(DISTINCT) sketches from append-only
     drops — the 100 TB answer when the exact distinct-cascade
@@ -3678,11 +3515,7 @@ def ingest_hll_registers(
 
     regs = sketch.hll_registers(batch, list(group_cols), value_col)
     return _ingest_rows(
-        spark, store_table, regs, None,
-        batch_id=batch_id,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
+        spark, store_table, regs, None, batch_id=batch_id
     )
 
 
@@ -3744,8 +3577,8 @@ def compact_hll_store(
     spark: SparkSession, store_table: str, group_cols: list[str]
 ) -> int:
     """Fold the register history to one row per (group, bucket) —
-    lossless by the max semilattice (see :func:`_compact_folded`)."""
-    return _compact_folded(
+    lossless by the max semilattice (see :func:`compact_agg_store`)."""
+    return snapshot.rewrite_snapshot(
         spark, store_table,
         lambda base: base.groupBy(*group_cols, "bucket").agg(
             F.max("m_rank").alias("m_rank")
@@ -3765,9 +3598,6 @@ def ingest_cms_cells(
     value_col: str,
     *,
     batch_id: str,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Maintain a Count-Min frequency sketch from signed delta drops:
     each batch folds to its own (seed, cell, Σsign) counter partials —
@@ -3784,11 +3614,7 @@ def ingest_cms_cells(
     sign_col = "__sign" if "__sign" in batch.columns else None
     cells = sketch.cms_cells(batch, value_col, sign_col)
     return _ingest_rows(
-        spark, store_table, cells, None,
-        batch_id=batch_id,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
+        spark, store_table, cells, None, batch_id=batch_id
     )
 
 
@@ -3819,8 +3645,8 @@ def cms_probe_from_store(
 
 def compact_cms_store(spark: SparkSession, store_table: str) -> int:
     """Fold the counter history to ≤ d·w live rows — lossless by
-    counter linearity (see :func:`_compact_folded`)."""
-    return _compact_folded(
+    counter linearity (see :func:`compact_agg_store`)."""
+    return snapshot.rewrite_snapshot(
         spark, store_table,
         lambda base: base.groupBy("seed", "cell")
         .agg(F.sum("counter").cast("bigint").alias("counter"))
@@ -3838,9 +3664,6 @@ def ingest_drift_buckets(
     buckets: DataFrame,
     *,
     batch_id: str,
-    compact_threshold: int | None = 64,
-    compact_target: int = 8,
-    compact_keep_versions: int = 2,
 ) -> int:
     """Maintain PSI bucket-count partials from append-only drops —
     the store-shaped half of the drift monitor (VERDICT r10 #3):
@@ -3859,11 +3682,7 @@ def ingest_drift_buckets(
         F.sum("cnt").cast("long").alias("cnt")
     )
     return _ingest_rows(
-        spark, store_table, folded, None,
-        batch_id=batch_id,
-        compact_threshold=compact_threshold,
-        compact_target=compact_target,
-        compact_keep_versions=compact_keep_versions,
+        spark, store_table, folded, None, batch_id=batch_id
     )
 
 
@@ -3939,13 +3758,14 @@ def drift_pair_from_store(
 
 def compact_drift_store(spark: SparkSession, store_table: str) -> int:
     """Fold the partial history to one live row per (feature, bucket)
-    — lossless by count linearity (see :func:`_compact_folded`).
+    — lossless by count linearity (see :func:`compact_agg_store`).
     NOTE: folding collapses version history, so pin ``ref_version``
     semantics by compacting only ABOVE the reference pin or re-pinning
     after — the arrivals subtraction needs the ref version readable
-    (`snapshot.read_snapshot(…, ref_version)` still works while the
-    version's manifest survives ``compact_keep_versions``)."""
-    return _compact_folded(
+    (`snapshot.read_snapshot(…, ref_version)` still works until
+    :func:`snapshot.expire_snapshots` vacuums it; ingest compaction
+    keeps the newest :data:`COMPACT_KEEP_VERSIONS`)."""
+    return snapshot.rewrite_snapshot(
         spark, store_table,
         lambda base: base.groupBy("feature", "bucket")
         .agg(F.sum("cnt").cast("long").alias("cnt"))

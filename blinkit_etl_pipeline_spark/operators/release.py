@@ -149,9 +149,7 @@ def ingest_release(
     # drop's ingest wall is the slowest store's append, not the sum
     av, uv, bv, bid = incremental.overlap_store_ops([
         lambda: incremental._ingest_rows(
-            spark, s["attrs"], attrs_frame(docs), "doc_id",
-            compact_threshold=64, compact_target=8,
-            compact_keep_versions=2,
+            spark, s["attrs"], attrs_frame(docs), "doc_id"
         ),
         lambda: incremental.ingest_bm25_postings(spark, s["unigram"], docs),
         lambda: incremental.ingest_bigram_postings(spark, s["bigram"], docs),

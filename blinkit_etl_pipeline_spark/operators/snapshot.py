@@ -43,6 +43,17 @@ written before the link lands, so any visible manifest is complete; an
 incomplete/foreign claim file surfaces as a loud SnapshotError, not a
 silent lost update.
 
+Writers: :func:`append_snapshot` is the one commit call of the
+incremental stores. On a missing table it creates version 1 through
+the atomic ``expected_version=0`` commit; a creator that loses that
+race rebases onto the winner as an append, so two first ingests both
+land (a full-overwrite :func:`write_snapshot` there would drop the
+winner's batch). :func:`rewrite_snapshot` is the one fold-rewrite
+loop: it reads the base at the manifest's version, replaces the rows
+with ``fold_fn(base)`` and commits under ``expected_version`` with the
+folded frame's schema, re-running the fold against the winner on a
+conflict. Every fold compaction and retraction purge goes through it.
+
 Redelivery (exactly-once per batch): every manifest carries
 ``batch_ids``, the set of batch ids committed into that version — the
 ``txn``/SetTransaction idea of the Delta Lake log. An
@@ -374,6 +385,12 @@ def append_snapshot(
     onto the winner's manifest and retried — appends from concurrent
     writers all land, in some serial order.
 
+    A missing table is created as version 1 through the atomic
+    ``expected_version=0`` commit, clustered by ``stats_col``; a creator
+    that loses that race rebases onto the winner as an append, so two
+    first writers both land. An existing table keeps its own stats_col
+    (``stats_col`` only applies at creation).
+
     With ``batch_id``, the append is exactly-once per id: a base
     (first or rebased) whose manifest already lists the id makes this
     call a no-op that returns the base version; otherwise the id joins
@@ -382,30 +399,63 @@ def append_snapshot(
     written_stats: str | None = None
     last_err: CommitConflictError | None = None
     for _ in range(COMMIT_RETRIES):
-        manifest = read_manifest(table)
+        base = current_version(table)
+        manifest = (
+            {"version": 0, "files": [], "stats_col": stats_col}
+            if base is None
+            else read_manifest(table, base)
+        )
         base_ids = _batch_ids(manifest)
         if batch_id is not None and batch_id in base_ids:
             return manifest["version"]
-        effective_stats = stats_col or manifest.get("stats_col")
-        if new_files is not None and written_stats != effective_stats:
-            # the winner changed the table's stats_col under us: our
-            # files carry min/max of the OLD column — committing them
-            # under the new stats_col would let pruning silently skip
-            # matching rows. Rewrite against the rebased column.
-            new_files = None
-        if new_files is None:
-            new_files = _write_data_files(df, table, effective_stats)
-            written_stats = effective_stats
+        table_stats = manifest.get("stats_col")
+        if new_files is None or written_stats != table_stats:
+            # first attempt, or the winner created/rewrote the table
+            # under another stats_col: files carrying min/max of the
+            # wrong column would let pruning skip matching rows
+            new_files = _write_data_files(df, table, table_stats)
+            written_stats = table_stats
         try:
             return _commit(
                 table,
-                list(manifest["files"]) + new_files,
-                stats_col=manifest.get("stats_col"),
+                manifest["files"] + new_files,
+                stats_col=table_stats,
                 expected_version=manifest["version"],
                 schema=_schema_union(manifest.get("schema"), df.schema),
                 batch_ids=(
                     base_ids if batch_id is None else base_ids + [batch_id]
                 ),
+            )
+        except CommitConflictError as e:
+            last_err = e
+    raise last_err
+
+
+def rewrite_snapshot(spark: SparkSession, table: str, fold_fn) -> int:
+    """Replace the current version's rows with ``fold_fn(base)`` — the
+    one rewrite loop behind every fold compaction and retraction purge.
+
+    The base is read at the manifest's version and the rewrite commits
+    under ``expected_version``: a concurrent commit landing mid-rewrite
+    conflicts and the fold re-runs against the winner, so appended rows
+    are never dropped. The new version records the folded frame's
+    schema, keeps the table's stats_col, and carries the base's
+    batch-id set forward. ``fold_fn`` must be content-preserving for
+    every read the store serves (a merge-semilattice fold, a tombstone
+    purge); it may run more than once."""
+    last_err: CommitConflictError | None = None
+    for _ in range(COMMIT_RETRIES):
+        manifest = read_manifest(table)
+        base = read_snapshot(spark, table, manifest["version"])
+        rows = fold_fn(base).localCheckpoint(eager=True)
+        files = _write_data_files(rows, table, manifest.get("stats_col"))
+        try:
+            return _commit(
+                table,
+                files,
+                stats_col=manifest.get("stats_col"),
+                expected_version=manifest["version"],
+                schema=rows.schema.json(),
             )
         except CommitConflictError as e:
             last_err = e

@@ -7800,7 +7800,6 @@ def q_knn_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, vstore, gstore, emb,
         k=KNN_GRAPH_K, store_k=KNN_GRAPH_K,
         nbits=ANN_NBITS, ntables=ANN_NTABLES,
-        compact_threshold=None,
     )
     incremental.retract_docs(
         spark, vstore, list(KNN_BACKFILL_GONE), id_col="vec_id"

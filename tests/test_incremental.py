@@ -142,17 +142,22 @@ def test_streaming_lsh_ingest_detects_cross_drop_dups(spark, tmp_path):
     assert spark.read.parquet(log).count() == len(pairs)  # unchanged
 
 
-def test_fifty_batch_ingest_stays_bounded_with_compaction(spark, tmp_path):
+def test_fifty_batch_ingest_stays_bounded_with_compaction(
+    spark, tmp_path, monkeypatch
+):
     """Sustained ingest: 50 batches with auto-compaction must keep the
     store's file count and manifest count bounded (the unbounded-growth
     failure mode is one file set per batch forever), keep ingest wall
     time from trending up, and stay CORRECT — a near-dup of a batch-1
     document ingested last must still surface through the compacted
-    store."""
+    store. The policy constants are lowered so 50 batches run several
+    compaction cycles."""
     import time as _time
 
     store = str(tmp_path / "sigstore50")
     threshold, target = 12, 2
+    monkeypatch.setattr(incremental, "COMPACT_THRESHOLD", threshold)
+    monkeypatch.setattr(incremental, "COMPACT_TARGET", target)
     max_files_seen = 0
     walls = []
     for b in range(50):
@@ -168,10 +173,7 @@ def test_fifty_batch_ingest_stays_bounded_with_compaction(spark, tmp_path):
             ],
         )
         t0 = _time.perf_counter()
-        incremental.ingest_and_find_dups(
-            spark, store, docs,
-            compact_threshold=threshold, compact_target=target,
-        )
+        incremental.ingest_and_find_dups(spark, store, docs)
         walls.append(_time.perf_counter() - t0)
         n_files = len(snapshot.read_manifest(store)["files"])
         max_files_seen = max(max_files_seen, n_files)
@@ -198,10 +200,7 @@ def test_fifty_batch_ingest_stays_bounded_with_compaction(spark, tmp_path):
     # correctness through compaction: near-dup of a batch-1 doc found
     probe = _docs(spark, [(99999, "batch 0 doc 1 unique filler words "
                            + " ".join(f"tok0x1y{j}" for j in range(12)))])
-    pairs, _ = incremental.ingest_and_find_dups(
-        spark, store, probe,
-        compact_threshold=threshold, compact_target=target,
-    )
+    pairs, _ = incremental.ingest_and_find_dups(spark, store, probe)
     assert (1, 99999) in {
         (r["doc_a"], r["doc_b"]) for r in pairs.collect()
     }
@@ -275,6 +274,9 @@ def test_stored_ivfpq_prunes_files_and_matches_fused_scan(spark, tmp_path):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     store = str(tmp_path / "ivfpqstore")
+    # pin the file granularity: the default file count follows the
+    # session's parallelism and is one file per batch on small machines
+    snapshot.ensure_table_properties(store, {"target_file_rows": 5})
     for lo, hi in [(0, 40), (40, 80), (80, 120)]:
         incremental.ingest_ivfpq_codes(
             spark, store,
@@ -416,6 +418,9 @@ def test_bm25_store_probe_prunes_files_and_matches_full_scan(spark, tmp_path):
             for i in range(lo, hi)
         ])
 
+    # pin the file granularity: the default file count follows the
+    # session's parallelism and is one file per batch on small machines
+    snapshot.ensure_table_properties(store, {"target_file_rows": 20})
     for lo, hi in [(0, 20), (20, 40), (40, 60)]:
         incremental.ingest_bm25_postings(spark, store, batch(lo, hi))
 
@@ -585,6 +590,9 @@ def test_span_store_probe_prunes_files_and_scores_coverage(spark, tmp_path):
     the manifest files."""
     store = str(tmp_path / "spanprobe")
     k = 4
+    # pin the file granularity: the default file count follows the
+    # session's parallelism and is one file per batch on small machines
+    snapshot.ensure_table_properties(store, {"target_file_rows": 6})
     # three batches of docs with private token streams (no cross dups)
     for b in range(3):
         docs = _docs(spark, [
@@ -1195,6 +1203,147 @@ def test_agg_store_rollback_reopens_the_guard(spark, tmp_path):
     assert _read_view(spark, store) == {"a": (110, 2), "b": (5, 1)}
 
 
+def _race_next_commit(monkeypatch, racer):
+    """Run ``racer`` to completion just before the next snapshot
+    commit (once); the returned list records the raced table."""
+    real_commit = snapshot._commit
+    raced = []
+
+    def racing_commit(table, files, **kw):
+        if not raced:
+            raced.append(table)
+            racer()
+        return real_commit(table, files, **kw)
+
+    monkeypatch.setattr(snapshot, "_commit", racing_commit)
+    return raced
+
+
+def test_agg_store_racing_first_ingests_both_land(
+    spark, tmp_path, monkeypatch
+):
+    """Two first ingests race on creating a missing store: batch b runs
+    to completion just before batch a's first commit. a's create
+    conflicts on the atomic ``expected_version=0`` commit and rebases
+    as an append, so both batches land (a full-overwrite create would
+    silently drop b)."""
+    store = str(tmp_path / "aggstore_create_race")
+    sums = {"amt": F.col("amount_q")}
+    b = _sales_rows(spark, [("a", 10, 1), ("b", 5, 1)])
+    raced = _race_next_commit(
+        monkeypatch,
+        lambda: incremental.ingest_agg_deltas(
+            spark, store, b, ["cat"], sums, batch_id="b"
+        ),
+    )
+    incremental.ingest_agg_deltas(
+        spark, store, _sales_rows(spark, [("a", 100, 1)]), ["cat"], sums,
+        batch_id="a",
+    )
+    assert raced == [store]
+    assert _read_view(spark, store) == {"a": (110, 2), "b": (5, 1)}
+    assert snapshot.read_manifest(store)["batch_ids"] == ["a", "b"]
+
+
+def test_agg_store_racing_first_ingests_of_one_batch_land_once(
+    spark, tmp_path, monkeypatch
+):
+    """The same creation race with both deliveries carrying one batch
+    id: the rebased create finds the id in the winner's manifest and
+    appends nothing."""
+    store = str(tmp_path / "aggstore_create_race_once")
+    sums = {"amt": F.col("amount_q")}
+    x = _sales_rows(spark, [("a", 10, 1), ("b", 5, 1)])
+    raced = _race_next_commit(
+        monkeypatch,
+        lambda: incremental.ingest_agg_deltas(
+            spark, store, x, ["cat"], sums, batch_id="x"
+        ),
+    )
+    v = incremental.ingest_agg_deltas(
+        spark, store, x, ["cat"], sums, batch_id="x"
+    )
+    assert raced == [store]
+    assert v == snapshot.current_version(store)
+    assert snapshot.read_manifest(store)["batch_ids"] == ["x"]
+    assert _read_view(spark, store) == {"a": (10, 1), "b": (5, 1)}
+
+
+def test_store_rewrites_record_the_written_schema(spark, tmp_path):
+    """A fold compaction or retraction purge commits the rewritten
+    frame's schema into the new manifest — equal to the written files'
+    schema — and every read returns the same columns and rows before
+    and after the rewrite."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    def fields(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    def snap(df):
+        return df.columns, sorted(map(tuple, df.collect()), key=repr)
+
+    def check(store, rewrite, read):
+        before = snap(read())
+        raw_cols = snapshot.read_snapshot(spark, store).columns
+        v = rewrite()
+        m = snapshot.read_manifest(store)
+        assert m["version"] == v
+        written = spark.read.parquet(*[e["path"] for e in m["files"]])
+        assert fields(StructType.fromJson(json.loads(m["schema"]))) == (
+            fields(written.schema)
+        )
+        assert snap(read()) == before
+        assert snapshot.read_snapshot(spark, store).columns == raw_cols
+
+    agg = str(tmp_path / "agg")
+    sums = {"amt": F.col("amount_q")}
+    for i, rows in enumerate([
+        [("a", 100, 1), ("b", 30, 1)], [("a", 5, 1), ("c", 7, 1)],
+        [("b", 30, -1)],
+    ]):
+        incremental.ingest_agg_deltas(
+            spark, agg, _sales_rows(spark, rows), ["cat"], sums,
+            batch_id=f"b{i}",
+        )
+    check(
+        agg,
+        lambda: incremental.compact_agg_store(spark, agg, ["cat"], ["amt"]),
+        lambda: incremental.read_agg_store(spark, agg, ["cat"], ["amt"]),
+    )
+
+    bkq = str(tmp_path / "bkq")
+    for lo in (0, 40, 80):
+        incremental.ingest_bkq_sketch(
+            spark, bkq,
+            spark.range(lo, lo + 40).select(
+                (F.col("id") % 3).cast("int").alias("day"),
+                F.col("id").alias("event_id"),
+                (F.col("id") * 7 % 50).cast("double").alias("value"),
+            ),
+            "day", "event_id", "value", k=8,
+        )
+    check(
+        bkq,
+        lambda: incremental.compact_bkq_store(spark, bkq),
+        lambda: incremental.bkq_store_cumulative_quantiles(spark, bkq),
+    )
+
+    sig = str(tmp_path / "sig")
+    for lo in (0, 3):
+        incremental.ingest_and_find_dups(spark, sig, _docs(spark, [
+            (i, f"doc {i} " + " ".join(f"w{i}x{j}" for j in range(8)))
+            for i in range(lo, lo + 3)
+        ]))
+    incremental.retract_docs(spark, sig, [1, 4])
+    check(
+        sig,
+        lambda: incremental.purge_retracted(spark, sig)[0],
+        lambda: incremental.read_store_live(spark, sig),
+    )
+
+
 def test_streaming_agg_ingest_maintains_view(spark, tmp_path):
     """Signed delta files drain into the agg store exactly once per
     epoch; the live view tracks the running aggregate. Contract note:
@@ -1583,6 +1732,9 @@ def test_collocations_for_terms_pruned_probe(spark, tmp_path):
     ).filter(F.col("doc_id") < 90)
     pstore = str(tmp_path / "postings")
     bstore = str(tmp_path / "bigrams")
+    # pin the file granularity: the default file count follows the
+    # session's parallelism and is one file per batch on small machines
+    snapshot.ensure_table_properties(bstore, {"target_file_rows": 50})
     for m in (0, 1, 2):
         batch = docs.filter(F.col("doc_id") % 3 == m)
         incremental.ingest_bm25_postings(spark, pstore, batch)
@@ -1872,7 +2024,6 @@ def test_backfill_knn_depth_restores_exactness(spark, tmp_path):
     # store_k = k: ZERO slack, so any retracted stored mate drains a node
     incremental.ingest_knn_graph(
         spark, vstore, gstore, emb, k=5, store_k=5,
-        compact_threshold=None,
     )
     v0 = snapshot.current_version(gstore)
     assert incremental.backfill_knn_depth(
@@ -2408,8 +2559,7 @@ def test_slim_knn_layout_backfill(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     vs, gs, ps = (str(tmp_path / n) for n in ("v", "g", "p"))
     incremental.ingest_knn_graph(
-        spark, vs, gs, emb, k=5, store_k=5, compact_threshold=None,
-        payload_store=ps,
+        spark, vs, gs, emb, k=5, store_k=5, payload_store=ps,
     )
     gone = [
         int(r["v"])

@@ -168,6 +168,9 @@ def test_full_outer_via_union_reengages_aqe_skew_split(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+        # the session default follows the core count; at 4 partitions
+        # the hot key's partition is not split
+        "spark.sql.shuffle.partitions": "16",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

@@ -66,24 +66,19 @@ def test_manifest_batch_ids_guard_appends_and_follow_rewrites(
     assert S.read_manifest(t)["batch_ids"] == []
 
 
-def test_concurrent_appends_of_one_batch_id_land_once(spark, tmp_path):
-    """More racing appenders than cores deliver the same batch id: each
-    CAS rebase re-checks the base's batch-id set, so exactly one
-    append lands and the rest return without committing."""
-    t = str(tmp_path / "race")
-    S.write_snapshot(_mk(spark, 0, 10, "a"), t, stats_col="k",
-                     batch_id="b0")
-    frame = _mk(spark, 10, 20, "b").localCheckpoint(eager=True)
+def _race_threads(fn) -> list[Exception]:
+    """Run ``fn`` on more threads than cores with a short switch
+    interval; returns the exceptions they raised."""
     errors: list[Exception] = []
 
-    def deliver():
+    def run():
         try:
-            S.append_snapshot(frame, t, batch_id="b1")
-        except Exception as e:  # surfaced by the assertion below
+            fn()
+        except Exception as e:  # surfaced by the caller's assertion
             errors.append(e)
 
     workers = [
-        threading.Thread(target=deliver)
+        threading.Thread(target=run)
         for _ in range(len(os.sched_getaffinity(0)) + 2)
     ]
     old_interval = sys.getswitchinterval()
@@ -96,9 +91,40 @@ def test_concurrent_appends_of_one_batch_id_land_once(spark, tmp_path):
     finally:
         sys.setswitchinterval(old_interval)
     assert not any(w.is_alive() for w in workers)
+    return errors
+
+
+def test_concurrent_appends_of_one_batch_id_land_once(spark, tmp_path):
+    """More racing appenders than cores deliver the same batch id: each
+    CAS rebase re-checks the base's batch-id set, so exactly one
+    append lands and the rest return without committing."""
+    t = str(tmp_path / "race")
+    S.write_snapshot(_mk(spark, 0, 10, "a"), t, stats_col="k",
+                     batch_id="b0")
+    frame = _mk(spark, 10, 20, "b").localCheckpoint(eager=True)
+    errors = _race_threads(
+        lambda: S.append_snapshot(frame, t, batch_id="b1")
+    )
     assert errors == []
     assert S.read_manifest(t)["batch_ids"] == ["b0", "b1"]
     assert S.read_snapshot(spark, t).count() == 20
+
+
+def test_concurrent_first_appends_create_the_table_once(spark, tmp_path):
+    """More racing appenders than cores deliver one batch id into a
+    table that does not exist yet: exactly one creates version 1
+    through the atomic ``expected_version=0`` commit, the rest rebase
+    onto it and find the id already committed."""
+    t = str(tmp_path / "create_race")
+    frame = _mk(spark, 0, 10, "a").localCheckpoint(eager=True)
+    errors = _race_threads(
+        lambda: S.append_snapshot(frame, t, stats_col="k", batch_id="b1")
+    )
+    assert errors == []
+    m = S.read_manifest(t)
+    assert (m["version"], m["stats_col"], m["batch_ids"]) == (1, "k", ["b1"])
+    assert all("min" in e for e in m["files"])
+    assert S.read_snapshot(spark, t).count() == 10
 
 
 def test_snapshot_reader_isolation_across_commits(spark, tmp_path):
