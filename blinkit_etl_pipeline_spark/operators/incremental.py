@@ -848,30 +848,21 @@ def _ingest_knn_core(
         # duplicate payload rows are absorbed by the read's vec_id
         # dedup — identical bytes, the edge-append argument
         pay = rows.filter(F.col("t") == 0).select(*payload_cols)
-        if snapshot.current_version(payload_store) is None:
-            _default_file_target(payload_store)
-            snapshot.write_snapshot(pay, payload_store, stats_col="vec_id")
-        else:
-            snapshot.append_snapshot(pay, payload_store)
-    if snapshot.current_version(graph_store) is None:
-        _default_file_target(graph_store)
-        # u-clustered candidate history (r12): per-node history reads
-        # (incremental publish maintenance, refinement of a node set)
-        # prune to the nodes' files instead of scanning every append
-        gv = snapshot.write_snapshot(edges, graph_store, stats_col="u")
-    else:
-        gv = snapshot.append_snapshot(edges, graph_store)
+        _default_file_target(payload_store)
+        snapshot.append_snapshot(pay, payload_store, stats_col="vec_id")
+    _default_file_target(graph_store)
+    # u-clustered candidate history (r12): per-node history reads
+    # (incremental publish maintenance, refinement of a node set)
+    # prune to the nodes' files instead of scanning every append
+    gv = snapshot.append_snapshot(edges, graph_store, stats_col="u")
     if payload_store is not None:
         vec_rows = rows.select("vec_id", "t", "bucket", "tb")
     elif vec_cols is not None:
         vec_rows = rows.select(*vec_cols)
     else:
         vec_rows = rows
-    if exists:
-        snapshot.append_snapshot(vec_rows, vec_store, stats_col="tb")
-    else:
-        _default_file_target(vec_store)
-        snapshot.write_snapshot(vec_rows, vec_store, stats_col="tb")
+    _default_file_target(vec_store)
+    snapshot.append_snapshot(vec_rows, vec_store, stats_col="tb")
     if _over_compact_threshold(graph_store):
         compact_knn_store(spark, graph_store, store_k)
     return gv
@@ -1668,9 +1659,10 @@ def retract_docs(
     future ingest stops seeing these ids immediately; physical bytes
     are reclaimed later by :func:`purge_retracted`. Idempotent
     (re-retracting appends nothing) and CAS-safe against concurrent
-    retractors — creation races resolve through the snapshot layer's
-    atomic-create commit (``expected_version=0``), append races through
-    its rebase loop. ``ids`` is a DataFrame with ``id_col`` or an
+    retractors: :func:`snapshot.append_snapshot` creates the tombstone
+    table atomically and rebases racing appends, so every retraction
+    lands (two overlapping ones may both list an id; reads take
+    distinct ids). ``ids`` is a DataFrame with ``id_col`` or an
     iterable of ints. Returns the tombstone-table version."""
     # guard the column name BEFORE writing anything: a doc_id-default
     # retraction against a vec_id-keyed store would create a
@@ -1699,26 +1691,16 @@ def retract_docs(
         frame = spark.createDataFrame(
             [(int(i),) for i in ids], f"{id_col} long"
         ).distinct()
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        cur = snapshot.current_version(t)
-        try:
-            if cur is None:
-                files = snapshot._write_data_files(frame, t, id_col)
-                return snapshot._commit(
-                    t, files, stats_col=id_col, expected_version=0
-                )
-            fresh = frame.join(
-                snapshot.read_snapshot(spark, t).select(id_col),
-                id_col,
-                "left_anti",
-            ).localCheckpoint(eager=True)
-            if fresh.isEmpty():
-                return cur
-            return snapshot.append_snapshot(fresh, t)
-        except snapshot.CommitConflictError as e:
-            last_err = e  # another retractor moved the table — re-read
-    raise last_err
+    cur = snapshot.current_version(t)
+    if cur is not None:
+        frame = frame.join(
+            snapshot.read_snapshot(spark, t).select(id_col),
+            id_col,
+            "left_anti",
+        ).localCheckpoint(eager=True)
+        if frame.isEmpty():
+            return cur
+    return snapshot.append_snapshot(frame, t, stats_col=id_col)
 
 
 def takedown(spark: SparkSession, ids, stores) -> dict[str, int]:
@@ -1824,18 +1806,17 @@ def purge_retracted(
         raise snapshot.SnapshotError(f"no snapshot table at {store_table}")
     if tb is None:
         return cur, 0
-    removed = 0
+    base_rows = 0
 
     def fold(base: DataFrame) -> DataFrame:
-        nonlocal removed  # of the attempt that commits (the last one)
+        nonlocal base_rows  # of the attempt that commits (the last one)
+        base_rows = base.count()
         live = base.join(F.broadcast(tb), id_col, "left_anti")
-        if rebuild_fn is not None:
-            live = rebuild_fn(live)
-        live = live.localCheckpoint(eager=True)
-        removed = base.count() - live.count()
-        return live
+        return live if rebuild_fn is None else rebuild_fn(live)
 
-    return snapshot.rewrite_snapshot(spark, store_table, fold), removed
+    v = snapshot.rewrite_snapshot(spark, store_table, fold)
+    kept = snapshot.read_snapshot(spark, store_table, v).count()
+    return v, base_rows - kept
 
 
 def purge_bm25_store(
@@ -2663,7 +2644,7 @@ def _advance_seed_projection(
         for r in keys.select("vec_id").distinct().collect()
     ]
     rows = _seed_projection_rows(spark, vec_store, keys, ids=ids)
-    snapshot.append_snapshot(rows, seed_store, stats_col="tb")
+    snapshot.append_snapshot(rows, seed_store)
 
 
 def publish_graph(

@@ -1269,6 +1269,41 @@ def test_agg_store_racing_first_ingests_of_one_batch_land_once(
     assert _read_view(spark, store) == {"a": (10, 1), "b": (5, 1)}
 
 
+def test_knn_stores_racing_first_ingests_both_land(
+    spark, tmp_path, monkeypatch
+):
+    """The creation race on the k-NN graph ingest's three stores: batch
+    b runs to completion just before batch a's first commit (its
+    payload twin). a's payload, graph and vector commits all rebase as
+    appends, so every store keeps both batches' rows (a full-overwrite
+    create would drop b's payloads and bucket rows)."""
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    a = emb.filter("vec_id < 60 AND vec_id % 2 = 0")
+    b = emb.filter("vec_id < 60 AND vec_id % 2 = 1")
+    vstore = str(tmp_path / "vecs")
+    gstore = str(tmp_path / "graph")
+    pstore = str(tmp_path / "payload")
+
+    def ingest(batch):
+        incremental.ingest_knn_graph(
+            spark, vstore, gstore, batch, k=3, payload_store=pstore
+        )
+
+    raced = _race_next_commit(monkeypatch, lambda: ingest(b))
+    ingest(a)
+    assert raced == [pstore]
+
+    def ids(store, col):
+        return {
+            r[0] for r in snapshot.read_snapshot(spark, store)
+            .select(col).distinct().collect()
+        }
+
+    assert ids(pstore, "vec_id") == set(range(60))
+    assert ids(vstore, "vec_id") == set(range(60))
+    assert {u % 2 for u in ids(gstore, "u")} == {0, 1}
+
+
 def test_store_rewrites_record_the_written_schema(spark, tmp_path):
     """A fold compaction or retraction purge commits the rewritten
     frame's schema into the new manifest — equal to the written files'
