@@ -55,8 +55,3 @@ def require_not_null(df: DataFrame, *cols: str) -> DataFrame:
 def parse_timestamp(df: DataFrame, col: str) -> DataFrame:
     """F1: ``to_timestamp`` in place (01:55, 03:78, 04:50)."""
     return df.withColumn(col, F.to_timestamp(F.col(col)))
-
-
-def parse_date(df: DataFrame, col: str) -> DataFrame:
-    """F2: ``to_date`` in place (05:57,64)."""
-    return df.withColumn(col, F.to_date(F.col(col)))

@@ -417,17 +417,6 @@ def read_curated(
     return spec.finalize(merged)
 
 
-def compact_curated_store(
-    spark: SparkSession, store_table: str, table: str
-) -> int:
-    """Fold the store's partial history to one row per live key (see
-    ``incremental.compact_agg_store``) — reads unchanged."""
-    spec = SPECS[table]
-    return incremental.compact_agg_store(
-        spark, store_table, list(spec.keys), spec.sum_cols
-    )
-
-
 def read_curated_at(
     spark: SparkSession, store_table: str, table: str, version: int
 ) -> DataFrame:

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import bounded_call
+
 #: integer rank lattice: 1.0 of PageRank mass = 10^12 units
 RANK_SCALE = 10**12
 
@@ -547,6 +549,11 @@ def pagerank_delta(
     # contract meanwhile. The verdict is enforced by _check_flags()
     # before anything materializes or returns. InheritableThread keeps
     # the caller's job group/description on the guard job's UI rows.
+    # The guard is collected through bounded_call on purpose: its legs
+    # are frontier-sized or scans of cached inputs (above), so
+    # adaptive planning only adds stage-barrier jobs (measured at
+    # sf0.01: ns_graph_pagerank_incr runs 22–24 jobs with the guard
+    # planned non-adaptively, 40 with it planned adaptively).
     from pyspark import InheritableThread
 
     _guard: dict = {}
@@ -554,7 +561,8 @@ def pagerank_delta(
     def _run_guards() -> None:
         try:
             _guard["flags"] = {
-                r["flag"]: int(r["c"]) for r in flags_df.collect()
+                r["flag"]: int(r["c"])
+                for r in bounded_call(DataFrame.collect, flags_df)
             }
         except BaseException as exc:  # re-raised on the caller thread
             _guard["err"] = exc
@@ -595,27 +603,21 @@ def pagerank_delta(
 
     base = ((DAMP_DEN - DAMP_NUM) * RANK_SCALE) // (DAMP_DEN * n)
     r0 = RANK_SCALE // n
-    aff = changed
-    ds = None  # Δs_{i-1}
-    delta_state = None
     try:
         # the rounds build contract-bounded frames only — construct
-        # them non-adaptively so the per-round lazy checkpoints stop
-        # executing stage chains at plan-compile time (bounded.py;
-        # every deferred stage pipelines inside the one eager
-        # delta_state materialization below)
-        from .bounded import bounded_plan
-
-        with bounded_plan(e_old.sparkSession):
-            delta_state, ds = _pr_delta_rounds(
-                iterations, p1, dl, e_old, state, changed, aff,
-                ds, delta_state, base, r0, wsrc, frontier_cap,
-                _check_flags,
-                e_old_unpersist=lambda: [
-                    fr.unpersist(blocking=False)
-                    for fr in (e_old, old_nodes, state)
-                ],
-            )
+        # them non-adaptively (session.bounded_call) so the per-round
+        # lazy checkpoints stop executing stage chains at plan-compile
+        # time; every deferred stage pipelines inside the one eager
+        # delta_state materialization below
+        delta_state, ds = bounded_call(
+            _pr_delta_rounds,
+            iterations, p1, dl, e_old, state, changed, base, r0, wsrc,
+            frontier_cap, _check_flags,
+            e_old_unpersist=lambda: [
+                fr.unpersist(blocking=False)
+                for fr in (e_old, old_nodes, state)
+            ],
+        )
     except FrontierExplosionError:
         raise
     except Exception:
@@ -656,13 +658,17 @@ def pagerank_delta(
 
 
 def _pr_delta_rounds(
-    iterations, p1, dl, e_old, state, changed, aff, ds,
-    delta_state, base, r0, wsrc, frontier_cap, _check_flags,
-    e_old_unpersist,
+    iterations, p1, dl, e_old, state, changed, base, r0, wsrc,
+    frontier_cap, _check_flags, e_old_unpersist,
 ):
     """The per-round delta propagation of :func:`pagerank_delta` —
-    split out so the caller can bracket ALL round construction with
-    the guard-first error handling."""
+    split out so the caller can build ALL rounds through
+    ``session.bounded_call`` inside the guard-first error handling.
+    Returns ``(delta_state, ds)``: the signed per-iteration state rows
+    and the last round's Δs."""
+    aff = changed
+    ds = None  # Δs_{i-1}
+    delta_state = None
     # The whole round is ONE union + ONE per-src window pass + ONE
     # node aggregate (r14): the per-edge contribution
     # (85·(base+s)) div (100·d) is a PER-SRC CONSTANT, so the former

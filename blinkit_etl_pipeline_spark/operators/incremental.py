@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import ISIN_PUSHDOWN_MAX
 from . import snapshot
 from .dedup import band_frame, minhash_signatures
 
@@ -2768,16 +2769,10 @@ def _default_file_target(table: str) -> None:
 
 
 #: max literal values worth pushing as an IN-list into the scan —
-#: beyond this the predicate bloats the plan more than it prunes
-# Spark/parquet-mr build a pushed IN as a LEFT-DEEP OR tree and
-# evaluate it recursively: at the JVM default ~1m thread stack the
-# task overflows somewhere in (1024, 2048] values (measured, r13 —
-# the sf0.1 bench hit it via a takedown closure). 768 keeps 25%
-# margin below the measured-safe 1024 on a VANILLA session (the
-# driver's correctness gate does not use session.py's -Xss8m);
-# beyond ~hundreds of values the page-pruning win over the manifest
-# file pruning is marginal anyway, and callers' joins stay exact.
-_ISIN_PUSHDOWN_MAX = 768
+#: beyond this the predicate bloats the plan more than it prunes; the
+#: same number is the session's parquet in-filter threshold
+#: (``session.ISIN_PUSHDOWN_MAX`` documents the stack-depth bound)
+_ISIN_PUSHDOWN_MAX = ISIN_PUSHDOWN_MAX
 
 
 def _pruned_read_ids(
@@ -2798,14 +2793,11 @@ def _pruned_read_ids(
     ids = sorted({int(i) for i in ids})
     df = snapshot.read_snapshot_pruned(spark, table, ids)
     if 0 < len(ids) <= _ISIN_PUSHDOWN_MAX:
-        # above the default parquet in-filter threshold (10!) Spark
-        # pushes only min..max — useless for spread probes; raise it
-        # so the IN-list reaches the scan as value predicates and the
-        # sorted files' page/row-group indexes actually skip
-        spark.conf.set(
-            "spark.sql.parquet.pushdown.inFilterThreshold",
-            str(_ISIN_PUSHDOWN_MAX),
-        )
+        # get_session raises the parquet in-filter threshold to the
+        # same cap, so the IN-list reaches the scan as value predicates
+        # and the sorted files' page/row-group indexes skip; a session
+        # at Spark's default threshold (10) pushes only min..max —
+        # fewer skips, same rows
         df = df.filter(F.col(col).isin(ids))
     return df
 

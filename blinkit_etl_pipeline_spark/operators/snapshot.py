@@ -66,6 +66,11 @@ independent of the store's history). Content-preserving rewrites
 :func:`rollback_snapshot` restores the target version's set, so a
 rolled-back batch can be ingested again; a full-overwrite
 :func:`write_snapshot` resets it to the caller's id (or empty).
+Unsupported: stores written before manifests carried ``batch_ids``,
+which keep their batch ids as row data (a ``batch_id`` column plus
+marker rows). They are not migrated; their manifests read as an empty
+set, so a redelivery into one lands again and its marker rows are
+counted as data. Rebuild such a store from its source.
 
 Scope (honest): local/posix paths (os.link exclusivity; S3 would need
 conditional PUT, as early Delta did), one clustering key for file

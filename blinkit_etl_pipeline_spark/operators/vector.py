@@ -41,6 +41,8 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import bounded_call
+
 #: Quantization scale (power of two: ``x * QSCALE`` never rounds).
 QSCALE = 1 << 20
 
@@ -426,16 +428,14 @@ def _mmr_candidates(
     sims) happens once; the greedy selection loop downstream only ever
     touches these |Q|·C-sized frames.
 
-    bounded_plan (r14): both checkpoints' outputs are contract-bounded
-    (|Q|·C and |Q|·C²), so their toRdd AQE barriers defer into the
-    caller's materialization; the pair self-join build side is
+    Built through ``session.bounded_call``: both checkpoints' outputs
+    are contract-bounded (|Q|·C and |Q|·C²), so planned non-adaptively
+    their stages defer into the caller's materialization instead of
+    running as toRdd barriers; the pair self-join build side is
     broadcast-hinted (bounded by contract) since without AQE's runtime
     rewrite it would plan as a SortMergeJoin.
     """
-    from .bounded import bounded_plan
-
-    with bounded_plan(emb.sparkSession):
-        return _mmr_candidates_bounded(emb, query_ids, cand)
+    return bounded_call(_mmr_candidates_bounded, emb, query_ids, cand)
 
 
 def _mmr_candidates_bounded(
@@ -544,17 +544,14 @@ def mmr_topk(
 def _mmr_select(
     cands: DataFrame, psims: DataFrame, k: int, lam: float
 ) -> DataFrame:
-    # bounded_plan (r14, VERDICT r13 #4): every loop frame is
-    # contract-bounded (|Q|·C), so each round's lazy checkpoint paid
-    # an AQE getFinalPhysicalPlan() barrier with nothing to adapt;
-    # non-adaptive construction defers the round stages into the one
-    # final materialization. ms is broadcast-hinted (|Q|·C rows by
-    # contract) — without AQE's runtime rewrite the unhinted join
+    # session.bounded_call: every loop frame is contract-bounded
+    # (|Q|·C), so under AQE each round's lazy checkpoint would pay a
+    # getFinalPhysicalPlan() barrier with nothing to adapt; planned
+    # non-adaptively in a per-call session, the round stages defer into
+    # the one final materialization. ms is broadcast-hinted (|Q|·C rows
+    # by contract) — without AQE's runtime rewrite the unhinted join
     # would fall back to SortMergeJoin.
-    from .bounded import bounded_plan
-
-    with bounded_plan(cands.sparkSession):
-        return _mmr_select_bounded(cands, psims, k, lam)
+    return bounded_call(_mmr_select_bounded, cands, psims, k, lam)
 
 
 def _mmr_select_bounded(
@@ -3106,8 +3103,6 @@ def graph_search_rounds(
     selectivity; a deployment passes ids or an attribute-derived
     frame — at extreme cardinalities evaluate the predicate on the
     corpus frame's own attribute columns instead)."""
-    from .bounded import bounded_plan
-
     qsrc = queries_e if queries_e is not None else e
     # Materialize the PROBE-SIZED frames once (r13, guide §2.4/§5):
     # without these leaves, every round's state checkpoint re-executed
@@ -3117,18 +3112,23 @@ def graph_search_rounds(
     # seed probe + one qe derivation per walk; rounds touch only
     # frontier-sized leaves + the one designed ce probe stream each.
     #
-    # bounded_plan (r14, VERDICT r13 #4): every frame the loop builds
-    # is contract-bounded (|Q|·beam·k) and every join explicitly
+    # session.bounded_call: every frame the loop builds is
+    # contract-bounded (|Q|·beam·k) and every join explicitly
     # broadcast-hinted, so adaptive replanning has nothing to adapt —
     # but under AQE each lazy checkpoint's toRdd runs
     # getFinalPhysicalPlan(), EXECUTING that round's stages as a
-    # blocking driver barrier (~0.5-0.9 s/round measured). Non-adaptive
-    # construction defers all round stages into the caller's one
-    # materialization job, where they pipeline.
-    with bounded_plan(e.sparkSession):
-        return _graph_search_rounds_bounded(
-            e, edges, seeds, k, beam, rounds, qsrc, undirected, allowed
-        )
+    # blocking driver barrier (~0.5-0.9 s/round measured). Planned
+    # non-adaptively in a per-call session, all round stages defer into
+    # the caller's one materialization job, where they pipeline. The
+    # one corpus-sized frame, the undirected edge fold, keeps the
+    # caller's shuffle partition count.
+    fold_parts = None if undirected else int(
+        e.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    return bounded_call(
+        _graph_search_rounds_bounded,
+        e, edges, seeds, k, beam, rounds, qsrc, fold_parts, allowed,
+    )
 
 
 def _graph_search_rounds_bounded(
@@ -3139,7 +3139,7 @@ def _graph_search_rounds_bounded(
     beam: int,
     rounds: int,
     qsrc: DataFrame,
-    undirected: bool,
+    fold_parts: int | None,
     allowed: DataFrame | None,
 ) -> DataFrame:
     seeds = seeds.select("query_id", "neighbor_id").localCheckpoint(
@@ -3162,7 +3162,7 @@ def _graph_search_rounds_bounded(
         F.col("qvec").alias("_gcv"),
         F.col("qq").alias("_gcq"),
     )
-    if undirected:
+    if fold_parts is None:
         und = edges.select("u", "v")
     else:
         und = (
@@ -3170,6 +3170,7 @@ def _graph_search_rounds_bounded(
             .union(
                 edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
+            .repartition(fold_parts, "u", "v")
             .distinct()
             .localCheckpoint(eager=False)
         )

@@ -1,12 +1,11 @@
-"""Window-function surface: ranking + top-k per group (SURVEY.md §2.7).
+"""Window-function surface: deterministic ranking (SURVEY.md §2.7).
 
 The reference imports ``Window`` in three scripts but never uses it —
 the ranking intent surfaces as ORDER BY in its SQL. This module is the
 minimal deliberate window surface: deterministic ranking (row_number
-with a total tiebreak; rank/dense_rank over the semantic ordering) and
-top-k extraction.
+with a total tiebreak; rank/dense_rank over the semantic ordering).
 
-Scale note: a per-group top-k through ``row_number`` compiles to
+Scale note: a per-group top-k filter on ``row_number`` compiles to
 ``WindowGroupLimit`` (partial top-k before the shuffle, Spark 3.5+) —
 the window shuffles each group once, never globally sorts.
 """
@@ -39,20 +38,4 @@ def with_ranks(
         df.withColumn("row_num", F.row_number().over(total))
         .withColumn("rnk", F.rank().over(semantic))
         .withColumn("dense_rnk", F.dense_rank().over(semantic))
-    )
-
-
-def topk_per_group(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_cols: Sequence[Column],
-    k: int,
-    tiebreak_cols: Sequence[Column] = (),
-) -> DataFrame:
-    """Keep the top ``k`` rows per group under a deterministic order."""
-    w = Window.partitionBy(*partition_cols).orderBy(*order_cols, *tiebreak_cols)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
     )

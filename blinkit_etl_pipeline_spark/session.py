@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the per-call session for contract-bounded
+loop frames.
 
 Scale-oriented defaults (designed for a multi-executor cluster, tested on
 local[N]):
@@ -11,13 +12,37 @@ local[N]):
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC parquet timestamps).
 - Arrow enabled for the (rare) Pandas-UDF paths.
+- Parquet IN-list pushdown up to ``ISIN_PUSHDOWN_MAX`` values. Like every
+  setting here it is made once, when the session is built; no operator
+  changes a session's conf at run time.
+
+The iterative operators' round loops (pagerank delta, graph walks, MMR)
+build their contract-bounded frames through :func:`bounded_call`, which
+plans them non-adaptively in a clone of the caller's session; the
+caller's session conf is never changed.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+#: static shuffle partition count for the exchanges of contract-bounded
+#: frames (|Q|·beam·k, |Q|·C, frontier caps): single-digit partitions
+#: suffice at ANY corpus size
+BOUNDED_SHUFFLE_PARTITIONS = 4
+
+#: max literal values pushed into a parquet scan as an IN-list (the
+#: session's ``spark.sql.parquet.pushdown.inFilterThreshold``; above
+#: it Spark pushes only min..max). Spark/parquet-mr build a pushed IN
+#: as a LEFT-DEEP OR tree and evaluate it recursively: at the JVM
+#: default ~1m thread stack the task overflows somewhere in
+#: (1024, 2048] values (measured; the sf0.1 bench hit it via a
+#: takedown closure). 768 keeps 25% margin below the measured-safe
+#: 1024 even without the -Xss8m below; beyond ~hundreds of values the
+#: page-pruning win over manifest file pruning is marginal anyway.
+ISIN_PUSHDOWN_MAX = 768
 
 
 def default_parallelism() -> int:
@@ -57,6 +82,10 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.parquet.pushdown.inFilterThreshold",
+            str(ISIN_PUSHDOWN_MAX),
+        )
         # local[N] runs everything in the driver JVM, whose default 1g
         # heap OOMs under 32 concurrent tasks + broadcast builds well
         # before the box's RAM is used; on a real cluster the
@@ -68,21 +97,18 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
         )
         # catalog state (bucketed tables, derby metastore) out of the repo
         .config("spark.sql.warehouse.dir", "/tmp/blinkit-spark-warehouse")
-        # -Xss8m: the r13 IN-list scan pushdown (_pruned_read_ids,
-        # capped at _ISIN_PUSHDOWN_MAX=768 values — see
-        # tests/test_incremental.py::test_pruned_read_ids_id_list_sizes)
-        # makes Spark/parquet-mr build and evaluate the pushed
-        # predicate as a LEFT-DEEP OR tree, recursively — at the JVM
-        # default ~1m thread stack the task thread overflows somewhere
-        # in (1024, 2048] values (measured; bench r13 hit it at sf0.1
-        # via publish_graph_incremental's takedown closure). The 768
-        # cap alone keeps a VANILLA session (the driver's correctness
-        # gate) safe; 8m is headroom for future cap raises (~10× the
-        # measured-safe depth). local[N] tasks run on driver JVM
-        # threads, and a real cluster overflows identically in
-        # executor threads — so BOTH options carry it (r14, VERDICT
-        # r13 #7; the executor option is inert on local[N] and
-        # inherited by executors on any master).
+        # -Xss8m: headroom for the pushed IN-lists above
+        # (ISIN_PUSHDOWN_MAX documents the stack depth they need; the
+        # 768 cap alone keeps the default ~1m stack safe, 8m allows
+        # ~10× deeper — see tests/test_incremental.py::
+        # test_pruned_read_ids_id_list_sizes). A session not built
+        # here keeps Spark's default
+        # inFilterThreshold of 10, which only narrows pushdown to
+        # min..max and never changes results. local[N] tasks run on
+        # driver JVM threads, and a real cluster overflows identically
+        # in executor threads — so BOTH options carry it (the executor
+        # option is inert on local[N] and inherited by executors on any
+        # master).
         .config(
             "spark.driver.extraJavaOptions",
             "-Dderby.system.home=/tmp/blinkit-derby -Xss8m",
@@ -97,3 +123,87 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def bounded_call(fn, *args, **kwargs):
+    """Run ``fn(*args, **kwargs)`` — the construction of an iterative
+    operator's contract-bounded loop frames — in a clone of the
+    caller's session with AQE off and ``BOUNDED_SHUFFLE_PARTITIONS``
+    static shuffle partitions.
+
+    Why no AQE: the round loops (pagerank delta's frontier
+    propagation, the graph-walk expansion rounds, the MMR greedy
+    selection) build frames whose sizes are bounded by operator
+    contract — frontier caps, |Q|·beam·k and |Q|·C pools —
+    independent of corpus size. Under AQE even a LAZY
+    ``localCheckpoint(eager=False)`` is not lazy: ``Dataset.rdd`` on an
+    adaptive plan runs ``getFinalPhysicalPlan()``, which EXECUTES every
+    upstream query stage before returning the RDD, so each round's
+    plan-compile blocks on a chain of stage-barrier jobs whose
+    replanning has nothing to adapt (OPTIMIZATION_r14.md, "The
+    per-checkpoint toRdd floor": 0.75 s per checkpoint with AQE vs
+    0.27 s without). Planned non-adaptively, the deferred stages
+    pipeline inside the caller's one final materialization. That holds
+    at ANY scale, which is exactly when adaptive replanning is pure
+    overhead; the corpus-sized plans around these frames keep AQE.
+
+    Why a static partition count: without AQE's runtime coalescing,
+    exchanges fall back to ``spark.sql.shuffle.partitions``, sized for
+    corpus work, and every bounded distinct or window would launch that
+    many near-empty tasks. Bounded row counts need single-digit
+    partitions; partitioning never changes the exact-integer folds or
+    per-key window ranks. A corpus-sized frame built inside ``fn`` must
+    therefore set its own partition count (``repartition(n, ...)``).
+
+    Broadcast rule: without AQE's runtime join rewrite an unhinted join
+    plans as a SortMergeJoin, and checkpoint leaves carry no stats — so
+    every join inside ``fn`` broadcast-hints its bounded side.
+
+    Why a clone: Catalyst plans each query against its own session's
+    conf, and ``cloneSession`` copies the caller's current runtime conf
+    (about 1 ms; a whole call with its rebinds, about 15 ms on 4
+    vCPUs). The two settings land on the clone only, so a plan
+    built on another thread meanwhile (another walk of a beam sweep, an
+    unrelated query in a shared serving session) keeps the caller's
+    conf, and overlapping calls each get their own clone: there is
+    nothing to lock, count or restore. DataFrame arguments are rebound
+    to the clone by their analyzed plans; returned frames, alone or in
+    a tuple, are rebound to the caller's session, so the caller's final
+    materialization plans adaptively as before. Other values pass
+    through unchanged."""
+    caller = next(
+        a for a in (*args, *kwargs.values()) if isinstance(a, DataFrame)
+    ).sparkSession
+    jclone = caller._jsparkSession.cloneSession()
+    jclone.conf().set("spark.sql.adaptive.enabled", "false")
+    jclone.conf().set(
+        "spark.sql.shuffle.partitions", str(BOUNDED_SHUFFLE_PARTITIONS)
+    )
+    # A wrapper copied from the caller's, not SparkSession(sc, jclone):
+    # that constructor also rebinds the process-global RDD.toDF to the
+    # new session.
+    clone = object.__new__(type(caller))
+    clone.__dict__.update(
+        {
+            k: caller.__dict__[k]
+            for k in ("_sc", "_jsc", "_jvm", "_profiler_collector")
+        },
+        _jsparkSession=jclone,
+    )
+    out = fn(
+        *(_rebind(a, clone) for a in args),
+        **{k: _rebind(v, clone) for k, v in kwargs.items()},
+    )
+    if isinstance(out, tuple):
+        return tuple(_rebind(o, caller) for o in out)
+    return _rebind(out, caller)
+
+
+def _rebind(x, session: SparkSession):
+    """``x`` re-planned in ``session`` if it is a DataFrame, else ``x``."""
+    if not isinstance(x, DataFrame):
+        return x
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, x._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, session)

@@ -38,11 +38,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import graph, incremental, snapshot
 from ..operators.ivm import COUNT_COL
-from .file_source import run_available_now
 
 _EDGE_KEYS = ["src", "dst"]
 _STATE_KEYS = ["node", "it"]
@@ -183,33 +181,6 @@ def apply_edge_batch(
         _EDGE_KEYS,
         {},
         batch_id=batch_id,
-    )
-
-
-def run_pagerank_ingest(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    edge_store: str,
-    state_store: str,
-    *,
-    iterations: int = 8,
-    timeout_sec: int = 300,
-) -> StreamingQuery:
-    """Drain available signed edge files into the maintained PageRank;
-    returns after ``Trigger.AvailableNow`` completes."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_edge_batch(
-            batch_df.sparkSession,
-            edge_store,
-            state_store,
-            batch_df,
-            f"epoch-{batch_id}",
-            iterations,
-        )
-
-    return run_available_now(
-        stream_df, checkpoint_dir, process, timeout_sec=timeout_sec
     )
 
 

@@ -3347,3 +3347,22 @@ def test_pruned_read_ids_id_list_sizes(spark, tmp_path):
     got_many = incremental._pruned_read_ids(spark, store, many, "u")
     have = {r["u"] for r in got_many.collect()}
     assert set(many) <= have
+
+
+def test_pruned_read_ids_leaves_session_conf_alone(spark, tmp_path):
+    """The IN-list pushdown threshold is a session setting made once in
+    get_session; a pruned read must not change it, or its value would
+    depend on which call ran first."""
+    store = str(tmp_path / "pruned_ids_conf")
+    snapshot.write_snapshot(
+        spark.range(100).select(F.col("id").alias("u")), store, stats_col="u"
+    )
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        got = incremental._pruned_read_ids(spark, store, [3, 50], "u")
+        assert sorted(r["u"] for r in got.collect()) == [3, 50]
+        assert spark.conf.get(key) == "10"
+    finally:
+        spark.conf.set(key, saved)
