@@ -13,7 +13,7 @@ comparator lines up with the oracle's ``date_trunc`` arithmetic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 SESSION_GAP_MINUTES = 30
@@ -397,10 +397,11 @@ def ewma_anomaly(events: DataFrame) -> DataFrame:
 
 def ewma_flags(hourly: DataFrame) -> DataFrame:
     """The EWMA flagging pass alone, over a prepared ``(event_type,
-    hour, n)`` frame — shared by the batch query and the streaming
-    store-fed twin (streaming/anomaly_ingest.py), whose hourly counts
-    are maintained incrementally and fold additively, so the streamed
-    flags equal the batch answer for ANY arrival order."""
+    hour, n)`` frame — shared by the batch query and the store-fed
+    twin (:func:`ingest_ewma_hourly` + :func:`ewma_flags_from_store`),
+    whose hourly counts are maintained incrementally and fold
+    additively, so the maintained flags equal the batch answer for ANY
+    arrival order."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("hour")
@@ -421,3 +422,41 @@ def ewma_flags(hourly: DataFrame) -> DataFrame:
             (xd > 2 * F.col("pred_q")) | (2 * xd < F.col("pred_q"))
         ).alias("anomaly"),
     )
+
+
+#: keys of the hourly-count agg store behind :func:`ewma_flags_from_store`
+_EWMA_HOURLY_KEYS = ["event_type", "hour"]
+
+
+def ingest_ewma_hourly(
+    spark: SparkSession, store_table: str, events: DataFrame, *, batch_id: str
+) -> int:
+    """Fold an event batch into the hourly-count agg store: one
+    ``n = 1`` delta per event, keyed by ``(event_type, hour)`` — work ∝
+    the batch, never ∝ history — committed as ``batch_id`` (the agg
+    store's batch-grained redelivery guard). Counts fold ADDITIVELY, so
+    unlike the SCD2 fold any arrival order gives the batch answer. A
+    file-drop feed passes this to ``streaming.file_source.
+    run_available_now`` with ``batch_id=f"epoch-{epoch}"``."""
+    from . import incremental
+
+    deltas = events.select(
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
+    )
+    return incremental.ingest_agg_deltas(
+        spark, store_table, deltas, _EWMA_HOURLY_KEYS,
+        {"n": F.lit(1).cast("long")}, batch_id=batch_id,
+    )
+
+
+def ewma_flags_from_store(spark: SparkSession, store_table: str) -> DataFrame:
+    """Current anomaly flags from the maintained hourly counts —
+    merge-on-read of the store (keys × batches rows) + the bounded
+    EWMA window pass; equals :func:`ewma_anomaly` over every ingested
+    event."""
+    from . import incremental
+
+    hourly = incremental.read_agg_store(
+        spark, store_table, _EWMA_HOURLY_KEYS, ["n"]
+    )
+    return ewma_flags(hourly.select("event_type", "hour", "n"))

@@ -1165,7 +1165,9 @@ def ingest_bigram_postings(
     appends ONE stats partial (``doc_id IS NULL, c12 = batch's total
     bigram count``) in the same atomic commit, so the corpus bigram
     total ``B`` is answerable from partials instead of a corpus-linear
-    fold."""
+    fold. Fed together with the unigram store from one drop stream,
+    each store keeps its own guard: a crash between the two ingests
+    replays safely (the committed store skips, the other catches up)."""
     from ..functions.text import bigram_frame
 
     rows = bigram_frame(new_docs.dropDuplicates(["doc_id"]))
@@ -2157,8 +2159,10 @@ def ingest_agg_deltas(
     append is the same atomic CAS commit every index store uses.
     ``sums`` maps output column → int64-quantized measure (quantize
     BEFORE the sum — see ivm module doc); a ``__sign`` column (+1
-    insert / −1 delete) makes deletes exact negations. Returns the
-    committed store version."""
+    insert / −1 delete) makes deletes exact negations. The guard is
+    the batch id, not content: a byte-copied delta file redropped
+    under a new name IS a new delta (feeds identify deltas by offset).
+    Returns the committed store version."""
     from . import ivm
 
     return _ingest_rows(
@@ -3492,6 +3496,15 @@ def ingest_hll_registers(
     )
 
 
+def _hll_fold(regs: DataFrame, group_cols: list[str]) -> DataFrame:
+    """The register store's fold: max rank per (group, bucket). Reads
+    and compaction share it, so compaction can never diverge from the
+    read."""
+    return regs.groupBy(*group_cols, "bucket").agg(
+        F.max("m_rank").alias("m_rank")
+    )
+
+
 def hll_distinct_from_store(
     spark: SparkSession, store_table: str, group_cols: list[str]
 ) -> DataFrame:
@@ -3504,11 +3517,7 @@ def hll_distinct_from_store(
     oracle)."""
     from . import sketch
 
-    regs = (
-        snapshot.read_snapshot(spark, store_table)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("m_rank").alias("m_rank"))
-    )
+    regs = _hll_fold(snapshot.read_snapshot(spark, store_table), group_cols)
     return sketch.hll_estimate_from_registers(regs, list(group_cols))
 
 
@@ -3531,17 +3540,12 @@ def hll_cumulative_from_store(
     evidence)."""
     from . import sketch
 
-    regs = (
-        snapshot.read_snapshot(spark, store_table)
-        .groupBy(date_col, "bucket")
-        .agg(F.max("m_rank").alias("m_rank"))
-    )
+    regs = _hll_fold(snapshot.read_snapshot(spark, store_table), [date_col])
     days = regs.select(date_col).distinct()
-    merged = (
+    merged = _hll_fold(
         regs.withColumnRenamed(date_col, "__reg_day")
-        .join(days, F.col("__reg_day") <= F.col(date_col))
-        .groupBy(date_col, "bucket")
-        .agg(F.max("m_rank").alias("m_rank"))
+        .join(days, F.col("__reg_day") <= F.col(date_col)),
+        [date_col],
     )
     return sketch.hll_estimate_from_registers(merged, [date_col])
 
@@ -3552,10 +3556,7 @@ def compact_hll_store(
     """Fold the register history to one row per (group, bucket) —
     lossless by the max semilattice (see :func:`compact_agg_store`)."""
     return snapshot.rewrite_snapshot(
-        spark, store_table,
-        lambda base: base.groupBy(*group_cols, "bucket").agg(
-            F.max("m_rank").alias("m_rank")
-        ),
+        spark, store_table, lambda base: _hll_fold(base, group_cols)
     )
 
 
@@ -3591,16 +3592,22 @@ def ingest_cms_cells(
     )
 
 
+def _cms_fold(cells: DataFrame) -> DataFrame:
+    """The counter store's fold: Σ counter per (seed, cell), with
+    zero-folded cells (fully-retracted values) dropped. Reads and
+    compaction share it."""
+    return (
+        cells.groupBy("seed", "cell")
+        .agg(F.sum("counter").cast("bigint").alias("counter"))
+        .filter(F.col("counter") != 0)
+    )
+
+
 def cms_cells_from_store(spark: SparkSession, store_table: str) -> DataFrame:
     """The live sketch: Σ counters per (seed, cell) over the partial
     history (≤ d·w·batches rows pre-compaction, corpus-independent);
     zero-folded cells (fully-retracted values) drop out."""
-    cells = (
-        snapshot.read_snapshot(spark, store_table)
-        .groupBy("seed", "cell")
-        .agg(F.sum("counter").cast("bigint").alias("counter"))
-    )
-    return cells.filter(F.col("counter") != 0)
+    return _cms_fold(snapshot.read_snapshot(spark, store_table))
 
 
 def cms_probe_from_store(
@@ -3619,12 +3626,7 @@ def cms_probe_from_store(
 def compact_cms_store(spark: SparkSession, store_table: str) -> int:
     """Fold the counter history to ≤ d·w live rows — lossless by
     counter linearity (see :func:`compact_agg_store`)."""
-    return snapshot.rewrite_snapshot(
-        spark, store_table,
-        lambda base: base.groupBy("seed", "cell")
-        .agg(F.sum("counter").cast("bigint").alias("counter"))
-        .filter(F.col("counter") != 0),
-    )
+    return snapshot.rewrite_snapshot(spark, store_table, _cms_fold)
 
 
 # ---------------------------------------------------------------------------
@@ -3651,11 +3653,19 @@ def ingest_drift_buckets(
     versions is a subtraction — no corpus rescans, ever. ``buckets``
     carries ``(feature, bucket, cnt)``; signed ``cnt`` retracts
     exactly (the ivm delete contract)."""
-    folded = buckets.groupBy("feature", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
     return _ingest_rows(
-        spark, store_table, folded, None, batch_id=batch_id
+        spark, store_table, _drift_fold(buckets), None, batch_id=batch_id
+    )
+
+
+def _drift_fold(counts: DataFrame) -> DataFrame:
+    """The bucket-count store's fold: Σ cnt per (feature, bucket),
+    with zero-folded buckets dropped. Ingest, reads and compaction
+    share it."""
+    return (
+        counts.groupBy("feature", "bucket")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .filter(F.col("cnt") != 0)
     )
 
 
@@ -3665,12 +3675,7 @@ def drift_counts_from_store(
     """The folded histogram as of ``version`` (default latest):
     ``(feature, bucket, cnt)`` with fully-retracted buckets absorbed
     by the ≠0 filter."""
-    base = snapshot.read_snapshot(spark, store_table, version)
-    return (
-        base.groupBy("feature", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-    )
+    return _drift_fold(snapshot.read_snapshot(spark, store_table, version))
 
 
 def drift_from_store(
@@ -3710,15 +3715,10 @@ def drift_pair_from_store(
     ``buckets`` hook) share one read path with the PSI gauge."""
     ref = drift_counts_from_store(spark, store_table, ref_version)
     cur = drift_counts_from_store(spark, store_table, version)
-    arrivals = (
+    arrivals = _drift_fold(
         cur.unionByName(
-            ref.select(
-                "feature", "bucket", (-F.col("cnt")).alias("cnt")
-            )
+            ref.select("feature", "bucket", (-F.col("cnt")).alias("cnt"))
         )
-        .groupBy("feature", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .filter(F.col("cnt") != 0)
     )
     return ref.select(
         "feature", "bucket", F.lit(False).alias("is_cur"), "cnt"
@@ -3738,12 +3738,7 @@ def compact_drift_store(spark: SparkSession, store_table: str) -> int:
     (`snapshot.read_snapshot(…, ref_version)` still works until
     :func:`snapshot.expire_snapshots` vacuums it; ingest compaction
     keeps the newest :data:`COMPACT_KEEP_VERSIONS`)."""
-    return snapshot.rewrite_snapshot(
-        spark, store_table,
-        lambda base: base.groupBy("feature", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .filter(F.col("cnt") != 0),
-    )
+    return snapshot.rewrite_snapshot(spark, store_table, _drift_fold)
 
 
 def ivf_occupancy_partial(

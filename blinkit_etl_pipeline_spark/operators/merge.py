@@ -148,6 +148,13 @@ def merge_into_partitioned(
     default-partition directory (``__HIVE_DEFAULT_PARTITION__``), the
     same layout ``partitionBy`` writes, and match via null-safe
     equality.
+
+    As a CDC sink (a change-file feed drained by
+    ``streaming.file_source.run_available_now``): re-applying a batch
+    converges to the same table (replace and delete are idempotent,
+    inserts replace their key), so a replayed epoch is harmless.
+    ``version_col`` picks the newest of several changes to one key
+    within a batch; across batches, later epochs win by construction.
     """
     partition_cols = list(partition_cols)
     touched = [

@@ -121,7 +121,9 @@ def ingest_release(
     bigram postings, drift-histogram partials), each under its own
     redelivery guard, so a replayed drop is a no-op in all four and a
     partially-seen batch indexes only its fresh docs everywhere.
-    Returns store → committed version.
+    Returns store → committed version. Publishing stays an explicit
+    act (:func:`publish_release`): a corpus version is pinned
+    deliberately, not per ingested drop.
 
     The drift partials (r13, VERDICT r12 #5) are the token-mass
     histogram of the drop's FRESH docs only (the same doc_id guard

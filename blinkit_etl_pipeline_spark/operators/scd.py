@@ -19,9 +19,11 @@ current as new change batches arrive.
   ≡ build(feed₁ ∪ feed₂)`` for any batch split that preserves each
   key's observation order (see the :func:`scd2_apply` contract for
   the one out-of-order edge compression makes irreducible).
-- :func:`scd2_apply_partitioned` / ``streaming/scd_ingest.py`` — the
+- :func:`scd2_apply_partitioned` / :func:`scd2_apply_snapshot` — the
   deployment shape: hash-bucketed dim on disk, copy-on-write of only
-  the touched buckets, streamed via foreachBatch.
+  the touched buckets; a change-file feed streams into
+  :func:`scd2_apply_snapshot` through
+  ``streaming.file_source.run_available_now``.
 
 Scale shape (100 TB framing): one shuffle per build, on the dimension
 key (window ``lag``/``lead`` + two project/filter passes share the

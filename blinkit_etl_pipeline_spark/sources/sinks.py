@@ -37,14 +37,12 @@ def write_partitioned(
     path: str,
     partition_cols: tuple[str, ...] = ("year", "month", "day"),
     *,
-    mode: str = "overwrite",
-    compression: str = "snappy",
-    repartition_first: bool = True,
     max_records_per_file: int | None = DEFAULT_MAX_RECORDS_PER_FILE,
     sort_cols: Sequence[str] | None = None,
 ) -> None:
-    """S5: partitioned parquet sink (reference 01:96-101, 03:117-122)."""
-    if repartition_first and partition_cols:
+    """S5: partitioned parquet sink (reference 01:96-101, 03:117-122):
+    overwrite, snappy, repartitioned by the partition columns first."""
+    if partition_cols:
         df = df.repartition(*partition_cols)
     if sort_cols:
         # prefix with the partition columns: FileFormatWriter requires
@@ -52,22 +50,22 @@ def write_partitioned(
         # its own (unstable) sort, destroying the sort_cols clustering
         df = df.sortWithinPartitions(*partition_cols, *sort_cols)
     writer = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .partitionBy(*partition_cols)
         .format("parquet")
-        .option("compression", compression)
+        .option("compression", "snappy")
     )
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(int(max_records_per_file)))
     writer.save(path)
 
 
-def write_curated(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """S6: unpartitioned curated sink (reference 03:143-146).
+def write_curated(df: DataFrame, path: str) -> None:
+    """S6: unpartitioned curated sink (reference 03:143-146), overwrite.
 
     Curated aggregates are small; coalesce to one file for cheap reads.
     """
-    df.coalesce(1).write.mode(mode).format("parquet").save(path)
+    df.coalesce(1).write.mode("overwrite").format("parquet").save(path)
 
 
 def zorder_value(cols: Sequence[Column], bits: int = 21) -> Column:

@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from .. import runner
-from ..operators import curated
 from .file_source import run_available_now
 
 #: source prefix → the job whose transform and stores it drives (the
@@ -56,10 +55,6 @@ SOURCE_JOBS: dict[str, str] = {
     "inventory": runner.JOB_INVENTORY,
     "feedback": runner.JOB_FEEDBACK,
 }
-
-#: canonical store layout — shared with the batch runner
-store_path = curated.store_path
-
 
 def run_curated_maintenance(
     spark: SparkSession,

@@ -21,6 +21,7 @@ At scale: ``maxFilesPerTrigger`` bounds micro-batch size;
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,29 @@ def stream_files(
     return reader.load(path)
 
 
+def _drain(writer, checkpoint_dir: str, timeout_sec: int) -> StreamingQuery:
+    """Start ``writer`` as a checkpointed ``Trigger.AvailableNow`` query
+    and wait for it to drain. A query still running after
+    ``timeout_sec`` is stopped (no straggler leaks into the session)
+    and reported as a ``TimeoutError``: a partial drain is not done."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        # the checkpoint's commit log names each finished epoch
+        commits = os.path.join(checkpoint_dir, "commits")
+        names = os.listdir(commits) if os.path.isdir(commits) else []
+        last = max((int(f) for f in names if f.isdigit()), default=None)
+        raise TimeoutError(
+            f"stream at checkpoint {checkpoint_dir} did not drain within "
+            f"{timeout_sec}s; last committed epoch: {last}"
+        )
+    return q
+
+
 def run_available_now(
     stream_df: DataFrame,
     checkpoint_dir: str,
@@ -53,19 +77,31 @@ def run_available_now(
     *,
     timeout_sec: int = 300,
 ) -> StreamingQuery:
-    """Drain all available files through ``process_batch``, then stop.
+    """Drain all available files through ``process_batch(batch_df,
+    epoch)``, then stop. Every file-drop ingest is this call with the
+    store's batch function as ``process_batch``, e.g.
+    ``lambda df, e: incremental.ingest_pq_codes(df.sparkSession, store,
+    df, codebook)``. Raises ``TimeoutError`` if the drain does not
+    finish within ``timeout_sec``.
 
-    Exactly-once per file across invocations via the checkpoint.
+    Exactly-once per file, across invocations and crashes:
+
+    - the checkpoint delivers each file to one epoch, and a crash
+      replays the same epoch id with the same files;
+    - batch-keyed stores (agg/curated, HLL, CMS, drift) must take
+      ``batch_id=f"epoch-{epoch}"``, so the manifest's committed batch
+      ids turn a replay into a no-op;
+    - id-keyed stores (LSH, PQ, SQ8, BM25/bigram, span, k-NN,
+      tombstones) absorb a replay through their id guard, which also
+      catches a byte-copied redrop under a new file name;
+    - SCD2 and MERGE absorb a replay by construction (re-applying a
+      batch converges to the same table).
     """
-    q = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_df.writeStream.foreachBatch(process_batch),
+        checkpoint_dir,
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()  # don't leak a straggler query into the session
-    return q
 
 
 def stream_to_memory(
@@ -78,14 +114,10 @@ def stream_to_memory(
 ) -> StreamingQuery:
     """Run a streaming aggregate into an in-memory table (smoke/driver
     checks; real deployments use a parquet/Delta sink)."""
-    q = (
+    return _drain(
         agg_df.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
+        timeout_sec,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()  # don't leak a straggler query into the session
-    return q

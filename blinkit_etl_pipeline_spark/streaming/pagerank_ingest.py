@@ -3,7 +3,7 @@ per-iteration rank-mass state in the persisted agg store.
 
 The streaming twin of ``operators/graph.py::pagerank_delta``, composing
 it with the IVM delta store (``operators/incremental.py::
-ingest_agg_deltas``) the way ``agg_ingest.py`` maintains revenue: two
+ingest_agg_deltas``) the way the curated stores maintain revenue: two
 snapshot tables hold the whole state —
 
 - **edge store**: signed (src, dst) multiplicity partials; the live
@@ -17,8 +17,8 @@ Batch order matters INSIDE an epoch: state deltas commit BEFORE edge
 deltas, and every apply starts by asking the stores which commits of
 this epoch already exist (``snapshot.has_batch`` — each manifest lists
 its committed batch ids, compaction carries them forward, and the
-check reads no store data). Unlike the additive ingests (agg_ingest,
-lsh_ingest), the delta computation READS the stores it maintains, so a
+check reads no store data). Unlike the additive ingests (agg deltas,
+LSH signatures), the delta computation READS the stores it maintains, so a
 replay against already-updated stores would compute garbage (and trip
 the over-delete guard); the up-front check turns every replay into
 exactly the remaining commits: edges-present → no-op; state-present →

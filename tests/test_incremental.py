@@ -106,13 +106,24 @@ def test_streaming_lsh_ingest_detects_cross_drop_dups(spark, tmp_path):
     import glob as _glob
     import shutil
 
-    from blinkit_etl_pipeline_spark.streaming import file_source, lsh_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     raw = tmp_path / "raw"
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "store")
     log = str(tmp_path / "pairs")
+
+    def process(batch_df, epoch):
+        # the pair log is an idempotent per-epoch hive partition: a
+        # replayed epoch overwrites ITS OWN directory with identical
+        # pairs (the batch_id column comes back from the directory name)
+        incremental.ingest_and_find_dups(
+            batch_df.sparkSession, store, batch_df,
+            on_pairs=lambda pairs: pairs.write.mode("overwrite").parquet(
+                f"{log}/batch_id={epoch}"
+            ),
+        )
 
     def drop(rows, stage, tag):
         _docs(spark, rows).coalesce(1).write.parquet(str(tmp_path / stage))
@@ -124,12 +135,12 @@ def test_streaming_lsh_ingest_detects_cross_drop_dups(spark, tmp_path):
          "s1", "d1")
     schema = spark.read.parquet(str(raw)).schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    lsh_ingest.run_lsh_ingest(stream, ckpt, store, log)
+    file_source.run_available_now(stream, ckpt, process)
     assert spark.read.parquet(log).count() == 0  # no dups yet
 
     drop([(10, BASE + " tonight")], "s2", "d2")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    lsh_ingest.run_lsh_ingest(stream, ckpt, store, log)
+    file_source.run_available_now(stream, ckpt, process)
     pairs = {(r["doc_a"], r["doc_b"])
              for r in spark.read.parquet(log).collect()}
     assert (1, 10) in pairs
@@ -138,7 +149,7 @@ def test_streaming_lsh_ingest_detects_cross_drop_dups(spark, tmp_path):
     # it, the store's doc_id guard must
     shutil.copy(str(raw / "d2.parquet"), str(raw / "d2_copy.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    lsh_ingest.run_lsh_ingest(stream, ckpt, store, log)
+    file_source.run_available_now(stream, ckpt, process)
     assert spark.read.parquet(log).count() == len(pairs)  # unchanged
 
 
@@ -216,13 +227,18 @@ def test_streaming_pq_ingest_matches_batch_adc_topk(spark, tmp_path):
 
     from blinkit_etl_pipeline_spark.operators import vector
     from blinkit_etl_pipeline_spark.plans.codebook import PQ_CODEBOOK
-    from blinkit_etl_pipeline_spark.streaming import file_source, pq_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     raw = tmp_path / "raw"
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "codestore")
+
+    def process(batch_df, epoch):
+        incremental.ingest_pq_codes(
+            batch_df.sparkSession, store, batch_df, PQ_CODEBOOK
+        )
 
     def drop(lo, hi, tag):
         emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) \
@@ -234,10 +250,10 @@ def test_streaming_pq_ingest_matches_batch_adc_topk(spark, tmp_path):
     drop(20, 35, "d2")
     schema = emb.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    pq_ingest.run_pq_ingest(stream, ckpt, store, PQ_CODEBOOK)
+    file_source.run_available_now(stream, ckpt, process)
     drop(35, 50, "d3")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    pq_ingest.run_pq_ingest(stream, ckpt, store, PQ_CODEBOOK)
+    file_source.run_available_now(stream, ckpt, process)
 
     from blinkit_etl_pipeline_spark.operators import snapshot
 
@@ -257,7 +273,7 @@ def test_streaming_pq_ingest_matches_batch_adc_topk(spark, tmp_path):
     # byte-copied redelivery under a new name: vec_id guard catches it
     shutil.copy(str(raw / "d2.parquet"), str(raw / "d2_again.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    pq_ingest.run_pq_ingest(stream, ckpt, store, PQ_CODEBOOK)
+    file_source.run_available_now(stream, ckpt, process)
     assert snapshot.read_snapshot(spark, store).count() == 50
 
 
@@ -327,13 +343,16 @@ def test_streaming_bm25_ingest_matches_batch_bydoc(spark, tmp_path):
         bm25_bydoc_topk,
         bm25_store_topk,
     )
-    from blinkit_etl_pipeline_spark.streaming import bm25_ingest, file_source
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     raw = tmp_path / "raw"
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "bm25store")
+
+    def process(batch_df, epoch):
+        incremental.ingest_bm25_postings(batch_df.sparkSession, store, batch_df)
 
     def drop(lo, hi, tag):
         docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
@@ -345,10 +364,10 @@ def test_streaming_bm25_ingest_matches_batch_bydoc(spark, tmp_path):
     drop(30, 60, "d2")
     schema = docs.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_bm25_ingest(stream, ckpt, store)
+    file_source.run_available_now(stream, ckpt, process)
     drop(60, 90, "d3")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_bm25_ingest(stream, ckpt, store)
+    file_source.run_available_now(stream, ckpt, process)
 
     union = docs.filter(F.col("doc_id") < 90)
     postings = snapshot.read_snapshot(spark, store)
@@ -359,7 +378,7 @@ def test_streaming_bm25_ingest_matches_batch_bydoc(spark, tmp_path):
     # byte-copied redelivery: doc_id guard keeps the index unchanged
     shutil.copy(str(raw / "d2.parquet"), str(raw / "d2_again.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_bm25_ingest(stream, ckpt, store)
+    file_source.run_available_now(stream, ckpt, process)
     again = sorted(map(tuple, bm25_store_topk(
         snapshot.read_snapshot(spark, store), range(3), topk=10).collect()))
     assert again == want
@@ -643,7 +662,7 @@ def test_streaming_span_ingest_matches_batch_on_real_docs(spark, tmp_path):
     import shutil
 
     from blinkit_etl_pipeline_spark.operators.dedup import span_dedup
-    from blinkit_etl_pipeline_spark.streaming import file_source, span_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
         .select("doc_id", "text")
@@ -660,13 +679,18 @@ def test_streaming_span_ingest_matches_batch_on_real_docs(spark, tmp_path):
         shutil.copy(src, str(raw / f"{tag}.parquet"))
 
     k = 8
+
+    def process(batch_df, epoch):
+        incremental.ingest_and_find_dup_spans(
+            batch_df.sparkSession, store, batch_df, k=k,
+            on_spans=lambda df: seen.extend(df.collect()),
+        )
+
     drop(0, 25, "d1")
     drop(25, 50, "d2")
     schema = docs.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    span_ingest.run_span_ingest(
-        stream, ckpt, store, k=k,
-        on_spans=lambda df: seen.extend(df.collect()))
+    file_source.run_available_now(stream, ckpt, process)
 
     union = docs.filter(F.col("doc_id") < 50)
     got = {r["doc_id"]: (r["spans_removed"], r["tokens_removed"])
@@ -681,9 +705,7 @@ def test_streaming_span_ingest_matches_batch_on_real_docs(spark, tmp_path):
     shutil.copy(str(raw / "d1.parquet"), str(raw / "d1_again.parquet"))
     before = len(seen)
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    span_ingest.run_span_ingest(
-        stream, ckpt, store, k=k,
-        on_spans=lambda df: seen.extend(df.collect()))
+    file_source.run_available_now(stream, ckpt, process)
     assert len(seen) == before
     assert snapshot.current_version(store) == v
 
@@ -868,7 +890,7 @@ def test_streaming_sq8_ingest_matches_inline_tier(spark, tmp_path):
     import shutil
 
     from blinkit_etl_pipeline_spark.operators import vector
-    from blinkit_etl_pipeline_spark.streaming import file_source, sq8_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     union = emb.filter(F.col("vec_id") < 50)
@@ -877,6 +899,11 @@ def test_streaming_sq8_ingest_matches_inline_tier(spark, tmp_path):
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "sq8store")
+
+    def process(batch_df, epoch):
+        incremental.ingest_sq8_codes(
+            batch_df.sparkSession, store, batch_df, stats=stats
+        )
 
     def drop(lo, hi, tag):
         emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) \
@@ -888,7 +915,7 @@ def test_streaming_sq8_ingest_matches_inline_tier(spark, tmp_path):
     drop(30, 50, "d2")
     schema = emb.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    sq8_ingest.run_sq8_ingest(stream, ckpt, store, stats=stats)
+    file_source.run_available_now(stream, ckpt, process)
     assert snapshot.read_snapshot(spark, store).count() == 50
     qids = range(4)
     got = sorted(map(tuple, incremental.sq8_store_probe(
@@ -899,7 +926,7 @@ def test_streaming_sq8_ingest_matches_inline_tier(spark, tmp_path):
     # byte-copied redelivery
     shutil.copy(str(raw / "d1.parquet"), str(raw / "d1_again.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    sq8_ingest.run_sq8_ingest(stream, ckpt, store, stats=stats)
+    file_source.run_available_now(stream, ckpt, process)
     assert snapshot.read_snapshot(spark, store).count() == 50
 
 
@@ -909,10 +936,7 @@ def test_streaming_retract_ingest(spark, tmp_path):
     import glob as _glob
     import shutil
 
-    from blinkit_etl_pipeline_spark.streaming import (
-        file_source,
-        retract_ingest,
-    )
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     store = str(tmp_path / "sig")
     docs = _docs(spark, [
@@ -927,10 +951,14 @@ def test_streaming_retract_ingest(spark, tmp_path):
     src = _glob.glob(str(tmp_path / "t1" / "part-*.parquet"))[0]
     shutil.copy(src, str(raw / "t1.parquet"))
     ckpt = str(tmp_path / "ckpt")
+
+    def process(batch_df, epoch):
+        incremental.retract_docs(batch_df.sparkSession, store, batch_df)
+
     stream = file_source.stream_files(
         spark, str(raw), ids.schema, fmt="parquet"
     )
-    retract_ingest.run_retract_ingest(stream, ckpt, store)
+    file_source.run_available_now(stream, ckpt, process)
     live = {r["doc_id"] for r in
             incremental.read_store_live(spark, store)
             .select("doc_id").distinct().collect()}
@@ -943,7 +971,7 @@ def test_streaming_retract_ingest(spark, tmp_path):
     stream = file_source.stream_files(
         spark, str(raw), ids.schema, fmt="parquet"
     )
-    retract_ingest.run_retract_ingest(stream, ckpt, store)
+    file_source.run_available_now(stream, ckpt, process)
     assert snapshot.current_version(
         incremental._tombstone_table(store)
     ) == v_before
@@ -1388,7 +1416,7 @@ def test_streaming_agg_ingest_maintains_view(spark, tmp_path):
     import glob as _glob
     import shutil
 
-    from blinkit_etl_pipeline_spark.streaming import agg_ingest, file_source
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     raw = tmp_path / "raw"
     raw.mkdir()
@@ -1404,12 +1432,19 @@ def test_streaming_agg_ingest_maintains_view(spark, tmp_path):
         shutil.copy(src, str(raw / f"{tag}.parquet"))
 
     sums = {"amt": F.col("amount_q")}
+
+    def process(batch_df, epoch):
+        incremental.ingest_agg_deltas(
+            batch_df.sparkSession, store, batch_df, ["cat"], sums,
+            batch_id=f"epoch-{epoch}",
+        )
+
     drop([("a", 100, 1), ("b", 30, 1)], "d1")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    agg_ingest.run_agg_ingest(stream, ckpt, store, ["cat"], sums)
+    file_source.run_available_now(stream, ckpt, process)
     drop([("a", 50, 1), ("b", 30, -1)], "d2")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    agg_ingest.run_agg_ingest(stream, ckpt, store, ["cat"], sums)
+    file_source.run_available_now(stream, ckpt, process)
     view = {
         r["cat"]: (r["amt"], r["__pcount"])
         for r in incremental.read_agg_store(
@@ -1419,7 +1454,7 @@ def test_streaming_agg_ingest_maintains_view(spark, tmp_path):
     assert view == {"a": (150, 2)}  # b fully retracted
     # no new files → no new epochs → unchanged
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    agg_ingest.run_agg_ingest(stream, ckpt, store, ["cat"], sums)
+    file_source.run_available_now(stream, ckpt, process)
     assert incremental.read_agg_store(
         spark, store, ["cat"], ["amt"]
     ).count() == 1
@@ -1474,7 +1509,7 @@ def test_keywords_and_pmi_from_store_match_batch(spark, tmp_path):
         pmi_collocations,
         tfidf_keywords,
     )
-    from blinkit_etl_pipeline_spark.streaming import bm25_ingest, file_source
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     raw = tmp_path / "raw"
@@ -1482,6 +1517,11 @@ def test_keywords_and_pmi_from_store_match_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     pstore = str(tmp_path / "postings")
     bstore = str(tmp_path / "bigrams")
+
+    def process(batch_df, epoch):
+        sess = batch_df.sparkSession
+        incremental.ingest_bm25_postings(sess, pstore, batch_df)
+        incremental.ingest_bigram_postings(sess, bstore, batch_df)
 
     def drop(lo, hi, tag):
         docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
@@ -1493,10 +1533,10 @@ def test_keywords_and_pmi_from_store_match_batch(spark, tmp_path):
     drop(30, 60, "d2")
     schema = docs.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_collocation_ingest(stream, ckpt, pstore, bstore)
+    file_source.run_available_now(stream, ckpt, process)
     drop(60, 90, "d3")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_collocation_ingest(stream, ckpt, pstore, bstore)
+    file_source.run_available_now(stream, ckpt, process)
 
     union = docs.filter(F.col("doc_id") < 90)
 
@@ -1517,7 +1557,7 @@ def test_keywords_and_pmi_from_store_match_batch(spark, tmp_path):
     # byte-copied redelivery: both stores' doc guards keep them unchanged
     shutil.copy(str(raw / "d2.parquet"), str(raw / "d2_again.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    bm25_ingest.run_collocation_ingest(stream, ckpt, pstore, bstore)
+    file_source.run_available_now(stream, ckpt, process)
     assert rows(
         keywords_from_store(snapshot.read_snapshot(spark, pstore), k=5)
     ) == want_kw
@@ -1635,7 +1675,7 @@ def test_streaming_knn_graph_store_equals_batch_seeds(spark, tmp_path):
     import shutil
 
     from blinkit_etl_pipeline_spark.operators import vector
-    from blinkit_etl_pipeline_spark.streaming import file_source, knn_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     raw = tmp_path / "raw"
@@ -1643,6 +1683,11 @@ def test_streaming_knn_graph_store_equals_batch_seeds(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     vstore = str(tmp_path / "vecs")
     gstore = str(tmp_path / "graph")
+
+    def process(batch_df, epoch):
+        incremental.ingest_knn_graph(
+            batch_df.sparkSession, vstore, gstore, batch_df, k=5
+        )
 
     def drop(pred, tag):
         emb.filter(pred).coalesce(1).write.parquet(str(tmp_path / tag))
@@ -1654,12 +1699,12 @@ def test_streaming_knn_graph_store_equals_batch_seeds(spark, tmp_path):
     stream = file_source.stream_files(
         spark, str(raw), emb.schema, fmt="parquet"
     )
-    knn_ingest.run_knn_ingest(stream, ckpt, vstore, gstore, k=5)
+    file_source.run_available_now(stream, ckpt, process)
     drop(F.col("vec_id") % 3 == 2, "d3")
     stream = file_source.stream_files(
         spark, str(raw), emb.schema, fmt="parquet"
     )
-    knn_ingest.run_knn_ingest(stream, ckpt, vstore, gstore, k=5)
+    file_source.run_available_now(stream, ckpt, process)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
@@ -1673,7 +1718,7 @@ def test_streaming_knn_graph_store_equals_batch_seeds(spark, tmp_path):
     stream = file_source.stream_files(
         spark, str(raw), emb.schema, fmt="parquet"
     )
-    knn_ingest.run_knn_ingest(stream, ckpt, vstore, gstore, k=5)
+    file_source.run_available_now(stream, ckpt, process)
     assert rows(incremental.knn_graph_from_store(spark, gstore, k=5)) == want
 
     # compaction: reads unchanged, rows bounded by k per node
@@ -1924,7 +1969,7 @@ def test_streaming_hll_ingest_equals_batch(spark, tmp_path):
     import shutil
 
     from blinkit_etl_pipeline_spark.operators import sketch
-    from blinkit_etl_pipeline_spark.streaming import file_source, hll_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     ev = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -1934,6 +1979,12 @@ def test_streaming_hll_ingest_equals_batch(spark, tmp_path):
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     store = str(tmp_path / "hll")
+
+    def process(batch_df, epoch):
+        incremental.ingest_hll_registers(
+            batch_df.sparkSession, store, batch_df, ["event_type"],
+            "user_id", batch_id=f"epoch-{epoch}",
+        )
 
     def drop(pred, tag):
         ev.filter(pred).coalesce(1).write.parquet(str(tmp_path / tag))
@@ -1947,32 +1998,26 @@ def test_streaming_hll_ingest_equals_batch(spark, tmp_path):
     stream = file_source.stream_files(
         spark, str(raw), ev.schema, fmt="parquet"
     )
-    hll_ingest.run_hll_ingest(
-        stream, ckpt, store, ["event_type"], "user_id"
-    )
+    file_source.run_available_now(stream, ckpt, process)
     drop(F.col("event_id") % 3 == 1, "d2")
     drop(F.col("event_id") % 3 == 2, "d3")
     stream = file_source.stream_files(
         spark, str(raw), ev.schema, fmt="parquet"
     )
-    hll_ingest.run_hll_ingest(
-        stream, ckpt, store, ["event_type"], "user_id"
-    )
+    file_source.run_available_now(stream, ckpt, process)
     want = rows(sketch.hll_distinct(ev, ["event_type"], "user_id"))
     assert rows(
-        hll_ingest.distinct_from_store(spark, store, ["event_type"])
+        incremental.hll_distinct_from_store(spark, store, ["event_type"])
     ) == want
     # replayed sweep with nothing new: checkpoint absorbs it
     v = snapshot.current_version(store)
     stream = file_source.stream_files(
         spark, str(raw), ev.schema, fmt="parquet"
     )
-    hll_ingest.run_hll_ingest(
-        stream, ckpt, store, ["event_type"], "user_id"
-    )
+    file_source.run_available_now(stream, ckpt, process)
     assert snapshot.current_version(store) == v
     assert rows(
-        hll_ingest.distinct_from_store(spark, store, ["event_type"])
+        incremental.hll_distinct_from_store(spark, store, ["event_type"])
     ) == want
 
 

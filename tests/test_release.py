@@ -209,16 +209,16 @@ def test_streaming_release_ingest_matches_batch(spark, tmp_path):
     import glob as _glob
     import shutil
 
-    from blinkit_etl_pipeline_spark.streaming import (
-        file_source,
-        release_ingest,
-    )
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     raw = tmp_path / "raw"
     raw.mkdir()
     ckpt = str(tmp_path / "ckpt")
     root = str(tmp_path / "rel")
+
+    def process(batch_df, epoch):
+        release.ingest_release(batch_df.sparkSession, root, batch_df)
 
     def drop(lo, hi, tag):
         docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
@@ -230,10 +230,10 @@ def test_streaming_release_ingest_matches_batch(spark, tmp_path):
     drop(25, 50, "d2")
     schema = docs.schema
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    release_ingest.run_release_ingest(stream, ckpt, root)
+    file_source.run_available_now(stream, ckpt, process)
     drop(50, 60, "d3")
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    release_ingest.run_release_ingest(stream, ckpt, root)
+    file_source.run_available_now(stream, ckpt, process)
 
     union = docs.filter(F.col("doc_id") < 60)
     want = _rows(_batch_model(union))
@@ -242,7 +242,7 @@ def test_streaming_release_ingest_matches_batch(spark, tmp_path):
     # byte-copied redelivery: all three doc_id guards absorb it
     shutil.copy(str(raw / "d2.parquet"), str(raw / "d2_again.parquet"))
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    release_ingest.run_release_ingest(stream, ckpt, root)
+    file_source.run_available_now(stream, ckpt, process)
     assert _rows(_read(spark, root)) == want
 
     # the verdict store composes with streamed stores: first cached
@@ -253,7 +253,7 @@ def test_streaming_release_ingest_matches_batch(spark, tmp_path):
     vstore = release.stores(root)["verdicts"]
     v0 = snapshot.current_version(vstore)
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
-    release_ingest.run_release_ingest(stream, ckpt, root)
+    file_source.run_available_now(stream, ckpt, process)
     assert _rows(_read_cached(spark, root)) == want
     assert snapshot.current_version(vstore) == v0
 

@@ -190,10 +190,12 @@ def test_streaming_scd2_ingest_equals_batch_build(spark, tmp_path):
     a mid-stream version sees that version's complete dimension after
     further streamed applies land."""
     from blinkit_etl_pipeline_spark.operators import snapshot
-    from blinkit_etl_pipeline_spark.operators.scd import scd2_build
-    from blinkit_etl_pipeline_spark.streaming.scd_ingest import (
-        read_dim,
-        run_scd2_ingest,
+    from blinkit_etl_pipeline_spark.operators.scd import (
+        scd2_apply_snapshot,
+        scd2_build,
+    )
+    from blinkit_etl_pipeline_spark.streaming.file_source import (
+        run_available_now,
     )
 
     rows = [
@@ -215,35 +217,38 @@ def test_streaming_scd2_ingest_equals_batch_build(spark, tmp_path):
     dim_table = str(tmp_path / "dim")
     ckpt = str(tmp_path / "ckpt")
 
-    def stream_of(path):
-        return (
+    def sweep(path, ckpt_dir, **kw):
+        stream = (
             spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )
+        run_available_now(
+            stream, ckpt_dir,
+            lambda df, epoch: scd2_apply_snapshot(
+                df.sparkSession, dim_table, df, "k", "a", "ts", "tb", **kw
+            ),
+            timeout_sec=120,
+        )
 
-    # sweep 1: only drop0 is visible — one committed version
-    run_scd2_ingest(
-        stream_of(str(raw / "drop0")), ckpt + "0", dim_table,
-        "k", "a", "ts", "tb", n_buckets=4, timeout_sec=120,
-    )
+    # sweep 1: only drop0 is visible — one committed version, which
+    # pins the store's bucket count at 4
+    sweep(str(raw / "drop0"), ckpt + "0", n_buckets=4)
     v_mid = snapshot.current_version(dim_table)
     want_mid = _rows(scd2_build(first, "k", "a", "ts", "tb"))
-    pinned = read_dim(spark, dim_table, v_mid)  # resolved NOW
+    pinned = snapshot.read_snapshot(spark, dim_table, v_mid)  # resolved NOW
     assert _rows(pinned) == want_mid
     # sweep 2: the remaining drops stream in (separate checkpoint —
-    # drop0 redelivers too; the fold absorbs it by construction)
-    run_scd2_ingest(
-        stream_of(str(raw / "drop*")), ckpt + "1", dim_table,
-        "k", "a", "ts", "tb", n_buckets=4, timeout_sec=120,
-    )
-    assert _rows(read_dim(spark, dim_table)) == _rows(
+    # drop0 redelivers too; the fold absorbs it by construction),
+    # without naming the bucket count: the store's pinned 4 is used
+    sweep(str(raw / "drop*"), ckpt + "1")
+    assert _rows(snapshot.read_snapshot(spark, dim_table)) == _rows(
         scd2_build(feed, "k", "a", "ts", "tb")
     )
     # MVCC: the pre-resolved frame and the pinned version still read
     # the COMPLETE mid-stream dimension (no bucket ever went missing)
     assert _rows(pinned) == want_mid
-    assert _rows(read_dim(spark, dim_table, v_mid)) == want_mid
+    assert _rows(snapshot.read_snapshot(spark, dim_table, v_mid)) == want_mid
 
 
 def test_apply_out_of_order_compression_loss_is_the_documented_one(spark):
@@ -344,10 +349,13 @@ def test_streaming_ewma_ingest_equals_batch_any_order(spark, tmp_path):
     batch answer for ANY arrival order (no in-order contract here)."""
     import datetime as dt
 
-    from blinkit_etl_pipeline_spark.operators.events import ewma_anomaly
-    from blinkit_etl_pipeline_spark.streaming.anomaly_ingest import (
+    from blinkit_etl_pipeline_spark.operators.events import (
+        ewma_anomaly,
         ewma_flags_from_store,
-        run_ewma_ingest,
+        ingest_ewma_hourly,
+    )
+    from blinkit_etl_pipeline_spark.streaming.file_source import (
+        run_available_now,
     )
 
     base = dt.datetime(2024, 1, 1)
@@ -374,7 +382,13 @@ def test_streaming_ewma_ingest_equals_batch_any_order(spark, tmp_path):
         .parquet(str(raw / "drop*"))
     )
     store = str(tmp_path / "store")
-    run_ewma_ingest(stream, str(tmp_path / "ckpt"), store, timeout_sec=120)
+    run_available_now(
+        stream, str(tmp_path / "ckpt"),
+        lambda df, epoch: ingest_ewma_hourly(
+            df.sparkSession, store, df, batch_id=f"epoch-{epoch}"
+        ),
+        timeout_sec=120,
+    )
     got = sorted(
         map(tuple, ewma_flags_from_store(spark, store).collect())
     )

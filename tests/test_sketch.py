@@ -296,7 +296,7 @@ def test_bkq_store_twin_equals_batch_any_order(spark, tmp_path):
     import datetime as _dt
 
     from blinkit_etl_pipeline_spark.operators import incremental
-    from blinkit_etl_pipeline_spark.streaming import bkq_ingest
+    from blinkit_etl_pipeline_spark.streaming import file_source
 
     rows = []
     for d in range(4):
@@ -315,8 +315,12 @@ def test_bkq_store_twin_equals_batch_any_order(spark, tmp_path):
         .parquet(str(raw / "drop*"))
     )
     store = str(tmp_path / "store")
-    bkq_ingest.run_bkq_ingest(
-        stream, str(tmp_path / "ckpt"), store, k=32, timeout_sec=120
+    file_source.run_available_now(
+        stream, str(tmp_path / "ckpt"),
+        lambda df, epoch: incremental.ingest_bkq_sketch(
+            df.sparkSession, store, df, "day", "event_id", "value", k=32
+        ),
+        timeout_sec=120,
     )
     want = sorted(
         map(tuple, sketch.bkq_cumulative_quantiles(
@@ -324,7 +328,8 @@ def test_bkq_store_twin_equals_batch_any_order(spark, tmp_path):
         ).collect())
     )
     got = sorted(
-        map(tuple, bkq_ingest.quantiles_from_store(spark, store).collect())
+        map(tuple, incremental.bkq_store_cumulative_quantiles(
+            spark, store).collect())
     )
     assert got == want
     # redelivery of a full drop: h-guard absorbs it
@@ -333,7 +338,8 @@ def test_bkq_store_twin_equals_batch_any_order(spark, tmp_path):
         spark, store, drop0, "day", "event_id", "value"
     )
     assert sorted(
-        map(tuple, bkq_ingest.quantiles_from_store(spark, store).collect())
+        map(tuple, incremental.bkq_store_cumulative_quantiles(
+            spark, store).collect())
     ) == want
     # k mismatch fails loudly
     import pytest as _pytest
@@ -346,7 +352,8 @@ def test_bkq_store_twin_equals_batch_any_order(spark, tmp_path):
     # fold compaction: answers unchanged, rows bounded by k per day
     incremental.compact_bkq_store(spark, store)
     assert sorted(
-        map(tuple, bkq_ingest.quantiles_from_store(spark, store).collect())
+        map(tuple, incremental.bkq_store_cumulative_quantiles(
+            spark, store).collect())
     ) == want
     n = snapshot.read_snapshot(spark, store).count()
     assert n <= 32 * 4
@@ -582,7 +589,6 @@ def test_rebuild_bkq_store_migrates_pre_regime_store(spark, tmp_path):
     import pytest
 
     from blinkit_etl_pipeline_spark.operators import incremental, snapshot
-    from blinkit_etl_pipeline_spark.streaming import bkq_ingest
 
     store = str(tmp_path / "bkq")
     with pytest.raises(snapshot.SnapshotError, match="nothing to migrate"):
@@ -621,7 +627,8 @@ def test_rebuild_bkq_store_migrates_pre_regime_store(spark, tmp_path):
         )
     )
     got = sorted(
-        map(tuple, bkq_ingest.quantiles_from_store(spark, store).collect())
+        map(tuple, incremental.bkq_store_cumulative_quantiles(
+            spark, store).collect())
     )
     assert got == want
     # a second interrupted-migration attempt trips the backup guard

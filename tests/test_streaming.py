@@ -8,6 +8,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from blinkit_etl_pipeline_spark import runner
 from blinkit_etl_pipeline_spark.operators import events as batch_events
 from blinkit_etl_pipeline_spark.sources.testdata import register_base
 from blinkit_etl_pipeline_spark.streaming import file_source, windows
@@ -68,6 +69,42 @@ def test_file_stream_incremental_exactly_once(spark, tmp_path):
     stream = file_source.stream_files(spark, str(raw), schema, fmt="parquet")
     file_source.run_available_now(stream, ckpt, process)
     assert sum(seen) == ev.count()
+
+
+def test_available_now_timeout_raises_instead_of_reporting_done(
+    spark, tmp_path
+):
+    """A drain that outlives ``timeout_sec`` is stopped AND reported:
+    three one-file triggers behind a 3 s batch function cannot finish
+    in 1 s, so the call must raise (naming the checkpoint) rather than
+    return as if every epoch had run."""
+    import time
+
+    import pytest
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    df = spark.createDataFrame([(i,) for i in range(3)], "x long")
+    for i in range(3):
+        df.filter(F.col("x") == i).coalesce(1).write.parquet(
+            str(raw / f"drop{i}")
+        )
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(raw / "drop*"))
+    )
+    epochs: list[int] = []
+
+    def process(batch_df, epoch):
+        epochs.append(epoch)
+        time.sleep(3)
+
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(TimeoutError, match="ckpt"):
+        file_source.run_available_now(stream, ckpt, process, timeout_sec=1)
+    assert len(epochs) < 3
+    assert not any(q.isActive for q in spark.streams.active)
 
 
 def test_stream_tumbling_matches_batch(spark, tmp_path):
@@ -361,7 +398,6 @@ def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
     import os
 
     from blinkit_etl_pipeline_spark.operators import merge as merge_ops
-    from blinkit_etl_pipeline_spark.streaming import merge_sink
 
     table = str(tmp_path / "cdc_table")
     base = spark.createDataFrame(
@@ -394,9 +430,14 @@ def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
         fmt="parquet", max_files_per_trigger=1,
     )
     ckpt = str(tmp_path / "cdc_ckpt")
-    merge_sink.stream_merge_into_partitioned(
-        stream, table, ckpt, ["k"], ["part"], delete_col="is_delete"
-    )
+
+    def process(batch_df, epoch):
+        merge_ops.merge_into_partitioned(
+            batch_df.sparkSession, table, batch_df, ["k"], ["part"],
+            delete_col="is_delete",
+        )
+
+    file_source.run_available_now(stream, ckpt, process)
 
     for rows in batches:
         merge_ops.merge_into_partitioned(
@@ -413,9 +454,7 @@ def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
         spark, str(raw), spark.createDataFrame([], schema).schema,
         fmt="parquet",
     )
-    merge_sink.stream_merge_into_partitioned(
-        stream2, table, ckpt, ["k"], ["part"], delete_col="is_delete"
-    )
+    file_source.run_available_now(stream2, ckpt, process)
     assert sorted(map(tuple, spark.read.parquet(table).collect())) == got
 
 
@@ -635,7 +674,7 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
     def versions():
         return {
             t: snapshot.current_version(
-                curated_ingest.store_path(stores, t)
+                runner.curated_store_path(stores, t)
             )
             for t in dropped_tables
         }
@@ -665,14 +704,14 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
         [marketing_roi.marketing_kpis(mk1.unionByName(mk2))],
     )
     got_campaign = curated.read_curated(
-        spark, curated_ingest.store_path(stores, "campaign_summary"),
+        spark, runner.curated_store_path(stores, "campaign_summary"),
         "campaign_summary",
     )
     assert rows(got_campaign) == rows(want_campaign)
     assert rows(
         curated.read_curated(
             spark,
-            curated_ingest.store_path(stores, "delivery_partner"),
+            runner.curated_store_path(stores, "delivery_partner"),
             "delivery_partner",
         )
     ) == rows(curated.curated_delta_view("delivery_partner", [orders]))
@@ -684,7 +723,7 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
     for t in ("category_impact", "product_discrepancies"):
         assert rows(
             curated.read_curated(
-                spark, curated_ingest.store_path(stores, t), t
+                spark, runner.curated_store_path(stores, t), t
             )
         ) == rows(curated.curated_delta_view(t, [recon])), t
     # a third sweep with nothing new: checkpoints absorb it
@@ -696,7 +735,7 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
     # redelivered batch id at the operator level: the store guard eats it
     curated.ingest_curated_deltas(
         spark,
-        curated_ingest.store_path(stores, "delivery_partner"),
+        runner.curated_store_path(stores, "delivery_partner"),
         "delivery_partner",
         orders,
         batch_id="orders-epoch-0",
@@ -704,7 +743,7 @@ def test_curated_maintenance_routes_drops(spark, tmp_path):
     assert rows(
         curated.read_curated(
             spark,
-            curated_ingest.store_path(stores, "delivery_partner"),
+            runner.curated_store_path(stores, "delivery_partner"),
             "delivery_partner",
         )
     ) == rows(curated.curated_delta_view("delivery_partner", [orders]))
@@ -898,12 +937,12 @@ def test_curated_maintenance_feedback_route(spark, tmp_path):
         customers=customers, orders_dim=orders, timeout_sec=120,
     )
     v1 = snapshot.current_version(
-        curated_ingest.store_path(stores, "area_feedback")
+        runner.curated_store_path(stores, "area_feedback")
     )
     assert v1 is not None
     for other in ("campaign_summary", "delivery_partner"):
         assert snapshot.current_version(
-            curated_ingest.store_path(stores, other)
+            runner.curated_store_path(stores, other)
         ) is None
     fb2.coalesce(1).write.parquet(str(raw / "feedback" / "drop2"))
     curated_ingest.run_curated_maintenance(
@@ -928,7 +967,7 @@ def test_curated_maintenance_feedback_route(spark, tmp_path):
     )
     got = curated.read_curated(
         spark,
-        curated_ingest.store_path(stores, "area_feedback"),
+        runner.curated_store_path(stores, "area_feedback"),
         "area_feedback",
     )
     assert rows(got) == rows(want)
