@@ -126,24 +126,27 @@ def ingest_and_find_dups(
     return result["pairs"], version
 
 
-def overlap_store_ops(thunks):
+def overlap_store_ops(spark: SparkSession, thunks):
     """Run INDEPENDENT store operations concurrently and return their
     results in ``thunks`` order (guide §2.6: actions are only
     sequential because driver code calls them sequentially — a
     multi-store ingest/takedown fans out to DISTINCT store tables, so
     each op's tail back-fills task slots the others free). Workers run
-    under ``pyspark.inheritable_thread_target`` so job group/
-    description local properties propagate. Only safe when the ops
-    touch disjoint tables: the snapshot layer's CAS is per-table, and
-    nothing in the ingest lifecycle shares mutable driver state."""
+    under ``pyspark.inheritable_thread_target(spark)``, so the job
+    group/description local properties AND the session's
+    ``addTag`` tags propagate (tag-based cancellation reaches them).
+    Only safe when the ops touch disjoint tables: the snapshot layer's
+    CAS is per-table, and nothing in the ingest lifecycle shares
+    mutable driver state."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futs = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futs = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]
 
 
@@ -360,9 +363,10 @@ def rebuild_ivfpq_store(
     keep reading the old files untouched — MVCC isolation, the same
     guarantee every store rewrite here gives — while new probes prune
     by the NEW lists. Retracted ids stay retracted (tombstones
-    honored). The rewrite asserts the version it read (optimistic
-    CAS): a concurrent ingest landing mid-rebuild would interleave
-    codes from two codebooks, so the conflict raises loudly — quiesce
+    honored). The rewrite (:func:`snapshot.rewrite_snapshot`) asserts
+    the version it read: a concurrent ingest landing mid-rebuild would
+    interleave codes from two codebooks, so instead of rebasing the
+    re-encode refuses a newer base and the conflict raises — quiesce
     ingests around a rebuild (the Delta OPTIMIZE convention) or replay
     the lost batch after it. Old files are reclaimed later by
     ``snapshot.expire_snapshots`` / ``expire_orphans``."""
@@ -377,20 +381,16 @@ def rebuild_ivfpq_store(
         corpus_emb.dropDuplicates(["vec_id"]), pq_codebook, dim=dim,
         ivf_codebook=ivf_codebook,
     )
-    codes = _exclude_tombstoned(
-        spark, store_table, codes, "vec_id"
-    ).localCheckpoint(eager=True)
-    files = snapshot._write_data_files(codes, store_table, "centroid_id")
-    # record the rewrite's schema like every other committer — a
-    # schemaless manifest would fall back to single-footer inference
-    # and restart the evolution chain on the next append (r10 review)
-    return snapshot._commit(
-        store_table,
-        files,
-        stats_col="centroid_id",
-        expected_version=version,
-        schema=codes.schema.json(),
-    )
+
+    def reencode(base: DataFrame) -> DataFrame:
+        # refuse, never rebase: a base newer than the one read above
+        # would mix codes from two codebooks
+        now = snapshot.current_version(store_table)
+        if now != version:
+            raise snapshot.CommitConflictError(store_table, now)
+        return _exclude_tombstoned(spark, store_table, codes, "vec_id")
+
+    return snapshot.rewrite_snapshot(spark, store_table, reencode)
 
 
 def maintain_ivfpq_codebook(
@@ -1721,7 +1721,7 @@ def takedown(spark: SparkSession, ids, stores) -> dict[str, int]:
     tables), so they run OVERLAPPED (r14, guide §2.6) — the fan-out
     wall is the slowest store, not the sum."""
     stores = list(stores)
-    versions = overlap_store_ops([
+    versions = overlap_store_ops(spark, [
         (lambda t=t, c=c: retract_docs(spark, t, ids, id_col=c))
         for t, c in stores
     ])
@@ -2627,27 +2627,18 @@ def _advance_seed_projection(
         return
     if old_vv == cur_vv:
         return
-    try:
-        old_m = snapshot.read_manifest(vec_store, old_vv)
-    except Exception:
+    keys = snapshot.appended_rows(spark, vec_store, old_vv)
+    if keys is None:  # vacuumed manifest, or compaction rewrote the store
         _write_seed_projection(spark, vec_store, seed_store)
         return
-    cur_m = snapshot.read_manifest(vec_store)
-    old_paths = {e["path"] for e in old_m["files"]}
-    cur_paths = {e["path"] for e in cur_m["files"]}
-    if not old_paths <= cur_paths:  # compaction rewrote the store
-        _write_seed_projection(spark, vec_store, seed_store)
-        return
-    added = sorted(cur_paths - old_paths)
-    if not added:
-        return
-    keys = snapshot._read_files(spark, cur_m, added)
     # the drop's ids, collected — bounded like the incremental
     # publish's affected set (the same drop, already collected there)
     ids = [
         int(r["vec_id"])
         for r in keys.select("vec_id").distinct().collect()
     ]
+    if not ids:
+        return
     rows = _seed_projection_rows(spark, vec_store, keys, ids=ids)
     snapshot.append_snapshot(rows, seed_store)
 
@@ -2756,8 +2747,9 @@ def publish_graph(
 #: row-targeted file granularity for the corpus-scale vector stores
 #: (r13, VERDICT r12 #1/#3): files-per-commit proportional to rows so
 #: manifest pruning opens O(probe) files at any corpus size — see
-#: snapshot._write_data_files. ~128k rows/file keeps a 2M-vector
-#: store's bucket/payload/graph/published tables at 15-160 files.
+#: the snapshot layer's data-file writer. ~128k rows/file keeps a
+#: 2M-vector store's bucket/payload/graph/published tables at 15-160
+#: files.
 _TARGET_FILE_ROWS = 131_072
 
 
@@ -2921,25 +2913,15 @@ def publish_graph_incremental(
         cur_gv, cur_tv,
     ) and (seed_store is None or state.get("vec_version") == cur_vv):
         return snapshot.current_version(pub_store)  # nothing moved
-    try:
-        old_m = snapshot.read_manifest(graph_store, state["graph_version"])
-    except Exception:
-        return publish_graph(
-            spark, graph_store, vec_store, pub_store, k=k,
-            seed_store=seed_store,
-        )
-    cur_m = snapshot.read_manifest(graph_store)
-    old_paths = {e["path"] for e in old_m["files"]}
-    cur_paths = {e["path"] for e in cur_m["files"]}
-    if not old_paths <= cur_paths:  # compaction rewrote history
-        return publish_graph(
-            spark, graph_store, vec_store, pub_store, k=k,
-            seed_store=seed_store,
-        )
-    added = sorted(cur_paths - old_paths)
     affected = set()
-    if added:
-        adf = snapshot._read_files(spark, cur_m, added).select("u").distinct()
+    if state["graph_version"] != cur_gv:
+        adf = snapshot.appended_rows(spark, graph_store, state["graph_version"])
+        if adf is None:  # vacuumed manifest, or compaction rewrote history
+            return publish_graph(
+                spark, graph_store, vec_store, pub_store, k=k,
+                seed_store=seed_store,
+            )
+        adf = adf.select("u").distinct()
         # cheap cardinality guard BEFORE any driver collect: a large
         # drop's affected set (its old-mate fan-out) can be corpus-
         # scale, where the one-shot fold is the cheaper plan anyway

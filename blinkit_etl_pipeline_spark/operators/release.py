@@ -149,7 +149,7 @@ def ingest_release(
     # the four appends touch DISJOINT stores and all derive from the
     # two checkpointed frames above — overlapped (r14, guide §2.6) the
     # drop's ingest wall is the slowest store's append, not the sum
-    av, uv, bv, bid = incremental.overlap_store_ops([
+    av, uv, bv, bid = incremental.overlap_store_ops(spark, [
         lambda: incremental._ingest_rows(
             spark, s["attrs"], attrs_frame(docs), "doc_id"
         ),
@@ -476,29 +476,6 @@ def _parse_sig(sig: str) -> dict[str, str]:
     return dict(p.split("=", 1) for p in sig.split(";"))
 
 
-def _appended_rows(
-    spark: SparkSession, table: str, old_version: int
-) -> DataFrame | None:
-    """Rows in files appended to ``table`` since ``old_version`` —
-    None when the diff is unavailable (vacuumed manifest, compaction
-    rewrote history), in which case the caller falls back to the
-    always-correct full path. The graph-publish manifest-diff
-    machinery, shared shape."""
-    try:
-        old_m = snapshot.read_manifest(table, old_version)
-    except Exception:
-        return None
-    cur_m = snapshot.read_manifest(table)
-    old_paths = {e["path"] for e in old_m["files"]}
-    cur_paths = {e["path"] for e in cur_m["files"]}
-    if not old_paths <= cur_paths:
-        return None
-    added = sorted(cur_paths - old_paths)
-    if not added:
-        return snapshot.read_snapshot(spark, table).limit(0)
-    return snapshot._read_files(spark, cur_m, added)
-
-
 def release_read_drift_gated(
     spark: SparkSession,
     root: str,
@@ -605,9 +582,9 @@ def release_read_drift_gated(
         old_bv = int(old_f["bigram"])
     except (KeyError, ValueError):
         return _full()
-    new_attrs = _appended_rows(spark, s["attrs"], old_av)
-    new_post = _appended_rows(spark, s["unigram"], old_uv)
-    new_big = _appended_rows(spark, s["bigram"], old_bv)
+    new_attrs = snapshot.appended_rows(spark, s["attrs"], old_av)
+    new_post = snapshot.appended_rows(spark, s["unigram"], old_uv)
+    new_big = snapshot.appended_rows(spark, s["bigram"], old_bv)
     if new_attrs is None or new_post is None or new_big is None:
         return _full()  # compaction/vacuum broke the diff
     new_lab = (

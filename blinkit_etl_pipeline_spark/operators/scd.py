@@ -19,11 +19,13 @@ current as new change batches arrive.
   ≡ build(feed₁ ∪ feed₂)`` for any batch split that preserves each
   key's observation order (see the :func:`scd2_apply` contract for
   the one out-of-order edge compression makes irreducible).
-- :func:`scd2_apply_partitioned` / :func:`scd2_apply_snapshot` — the
-  deployment shape: hash-bucketed dim on disk, copy-on-write of only
-  the touched buckets; a change-file feed streams into
-  :func:`scd2_apply_snapshot` through
-  ``streaming.file_source.run_available_now``.
+- :func:`scd2_apply_snapshot` — the deployment shape: a hash-bucketed
+  dim in a snapshot-store table, copy-on-write of only the touched
+  buckets through the snapshot layer's one rewrite loop, CAS commits,
+  MVCC reads; a change-file feed streams into it through
+  ``streaming.file_source.run_available_now``. The dim is read through
+  its manifest (``snapshot.read_snapshot``), not as a bare
+  ``__bucket=N/`` directory tree.
 
 Scale shape (100 TB framing): one shuffle per build, on the dimension
 key (window ``lag``/``lead`` + two project/filter passes share the
@@ -157,159 +159,6 @@ def scd2_lookup(dim: DataFrame, at: Column) -> DataFrame:
     )
 
 
-def _heal_bucket_swaps(path: str) -> None:
-    """Roll an interrupted bucket swap forward or backward so a crash
-    never leaves a bucket with the old data deleted and the new data
-    absent (the non-atomic-overwrite durability gap: delete-then-write
-    loses the bucket's ENTIRE history — including keys not in the
-    batch — and redelivery rebuilds only from the batch's own rows).
-
-    Swap protocol per bucket (see :func:`scd2_apply_partitioned`):
-    write ``.new-__bucket=T`` (Spark job, ends with ``_SUCCESS``) →
-    rename live dir to ``.old-__bucket=T`` → rename ``.new`` to live →
-    delete ``.old``. Spark's file index skips dot-prefixed dirs, so
-    readers never see the staging names. Crash states are unambiguous:
-
-    - ``.old`` present + live present  → crash after the forward
-      rename; live IS the new data → drop ``.old``.
-    - ``.old`` present + live missing → crash inside the swap; the
-      ``.new`` dir was fully committed (``_SUCCESS``) before the swap
-      began → roll FORWARD (rename ``.new`` to live); if ``.new`` is
-      absent/incomplete, roll back (rename ``.old`` to live).
-    - ``.new`` present otherwise → pre-swap leftover; drop it (no live
-      data was touched; the interrupted batch gets redelivered).
-
-    Local-posix rename semantics; an HDFS/object-store deployment runs
-    the identical protocol through ``FileSystem.rename`` (same
-    same-directory atomic rename contract).
-
-    Concurrent-READER caveat: between the two swap renames a reader's
-    partition discovery can see the bucket absent (a microsecond
-    window, but real) — a batch session racing the writer may read a
-    dim missing one bucket. This is strictly better than the previous
-    delete-then-write (whose window spanned the whole bucket rewrite
-    job), and acceptable under the module's single-writer +
-    read-mostly contract; a deployment needing stronger read isolation
-    uses :func:`scd2_apply_snapshot` (r9), which publishes the dim
-    through the snapshot store's CAS manifests — readers resolve a
-    version once and never see a bucket absent.
-    """
-    import os
-    import shutil
-
-    if not os.path.isdir(path):
-        return
-    for name in os.listdir(path):
-        if not name.startswith(".old-__bucket="):
-            continue
-        live_name = name[len(".old-"):]
-        live = os.path.join(path, live_name)
-        old = os.path.join(path, name)
-        new = os.path.join(path, ".new-" + live_name)
-        if os.path.isdir(live):
-            shutil.rmtree(old)
-        elif os.path.isdir(new) and os.path.exists(
-            os.path.join(new, "_SUCCESS")
-        ):
-            os.rename(new, live)
-            shutil.rmtree(old)
-        else:
-            os.rename(old, live)
-    for name in os.listdir(path):
-        if name.startswith(".new-__bucket="):
-            shutil.rmtree(os.path.join(path, name))
-
-
-def scd2_apply_partitioned(
-    spark,
-    path: str,
-    batch: DataFrame,
-    key: str,
-    attr: str,
-    ts: str,
-    tiebreak: str,
-    n_buckets: int = 64,
-) -> list[int]:
-    """Copy-on-write :func:`scd2_apply` against a hive-partitioned
-    dimension on disk — the deployment shape: the dim is bucketed by
-    ``hash(key) % n_buckets`` (immutable per key, so a key's versions
-    always live in one partition), and a change batch rewrites ONLY the
-    buckets its keys hash into. The untouched dimension never moves —
-    at 100 TB a CDC batch touching 3 buckets costs 3 partition jobs,
-    not a table rewrite. Explicit per-bucket replacement (a bucket
-    whose merge result is empty still gets cleared, no
-    dynamic-overwrite resurrection), committed through an atomic
-    staged-rename swap: each bucket's new contents land in a
-    dot-prefixed staging dir first, then swap into place with two
-    renames — the live dir is never in a deleted-but-not-rewritten
-    state, and :func:`_heal_bucket_swaps` (run on every call, before
-    the dim read) rolls any interrupted swap forward/backward (r7
-    ADVICE: the previous delete-then-write overwrite could lose a
-    bucket's entire history, including keys NOT in the batch, to a
-    mid-write crash).
-
-    Redelivery-idempotent BY CONSTRUCTION (not by guard): re-applying
-    a batch re-presents observations that compress into the versions
-    they already created (see :func:`scd2_apply`). A nonexistent
-    ``path`` bootstraps from the first batch; the bootstrap write is
-    ``mode("overwrite")`` so a crash that left a partial/unreadable
-    output dir (e.g. only ``_temporary``) is healed by the replay
-    instead of wedging it on errorifexists (r7 review finding).
-    Returns touched buckets.
-    """
-    from pyspark.errors import AnalysisException
-
-    from .merge import _escape_partition_value
-
-    def bcol() -> F.Column:
-        return F.pmod(
-            F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)
-        ).cast("int")
-
-    bb = batch.withColumn("__bucket", bcol())
-    touched = sorted(
-        int(r["__bucket"]) for r in bb.select("__bucket").distinct().collect()
-    )
-    if not touched:
-        return []
-    _heal_bucket_swaps(path)
-    try:
-        dim = spark.read.parquet(path)
-    except AnalysisException:
-        # fresh table (path missing) OR a crashed bootstrap's partial
-        # dir (schema inference fails): both bootstrap from the batch
-        full = scd2_build(bb.drop("__bucket"), key, attr, ts, tiebreak)
-        full.withColumn("__bucket", bcol()).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(path)
-        return touched
-    base = dim.filter(F.col("__bucket").isin(touched)).drop("__bucket")
-    new = scd2_apply(base, bb.drop("__bucket"), key, attr, ts, tiebreak)
-    new = new.withColumn("__bucket", bcol())
-    # break lineage from the path being overwritten
-    new = new.localCheckpoint(eager=True)
-    import os
-    import shutil
-
-    for t in touched:
-        esc = _escape_partition_value(t)
-        live = os.path.join(path, f"__bucket={esc}")
-        stage = os.path.join(path, f".new-__bucket={esc}")
-        trash = os.path.join(path, f".old-__bucket={esc}")
-        # stage the full new bucket FIRST (crash here: live untouched,
-        # stale stage healed on the next call), then swap with two
-        # renames — the heal protocol covers every intermediate state
-        new.filter(F.col("__bucket") == t).drop("__bucket").write.mode(
-            "overwrite"
-        ).parquet(stage)
-        if os.path.isdir(live):
-            os.rename(live, trash)
-        os.rename(stage, live)
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-    return touched
-
-
 def scd2_apply_snapshot(
     spark,
     table: str,
@@ -320,38 +169,28 @@ def scd2_apply_snapshot(
     tiebreak: str,
     n_buckets: int | None = None,
 ) -> list[int]:
-    """MVCC variant of :func:`scd2_apply_partitioned` (VERDICT r8 task
-    #3): the bucketed dimension lives in a snapshot-store table whose
-    manifest tags every data file with its bucket, and each batch
-    commits ``untouched buckets' files (by reference) + the touched
-    buckets' fresh files`` as ONE CAS manifest version. Readers
-    resolve a manifest once and scan immutable files, so a concurrent
-    reader NEVER sees a bucket absent (the rename-swap variant's
-    documented microsecond window) — it sees the pre-commit version
-    until the commit lands, and can pin any historical version (time
-    travel), the Iceberg/Delta read-isolation model. Commit conflicts
-    rebase: the apply recomputes against the winner's manifest
-    (bounded ``COMMIT_RETRIES``), so two writers folding different
-    batches both land, serialized.
+    """Copy-on-write :func:`scd2_apply` against a bucketed dimension on
+    disk — the deployment shape. The dim is bucketed by
+    ``hash(key) % n_buckets`` (immutable per key, so a key's versions
+    always live in one bucket) in a snapshot-store table whose manifest
+    tags every file with its bucket; a change batch reads and rewrites
+    ONLY the buckets its keys hash into, and commits them plus the
+    untouched buckets' files (by reference) as ONE CAS version
+    (:func:`snapshot.rewrite_buckets`). Readers resolve a manifest once,
+    so they never see a bucket absent and can pin any version (time
+    travel). A conflict re-runs the apply on the winner, so concurrent
+    writers (and racing creators of a missing table) all land.
 
     Same maintenance semantics as :func:`scd2_apply` (per-key rebuild
-    of touched keys, redelivery-idempotent by construction); the
-    bucket count is a write-once FORMAT property — bucket assignment
-    is immutable per key, so a store built with one count can never be
-    appended with another (the ``ingest_bkq_sketch`` k-pin
-    convention). Cost per batch: read touched buckets' files only
-    (manifest-level pruning — untouched buckets never leave disk),
-    one partitioned write of the touched buckets, one manifest link.
+    of touched keys, redelivery-idempotent by construction: re-applied
+    observations compress into the versions they already created).
+    The bucket count is a write-once FORMAT property — a store built
+    with one count can never be appended with another (the
+    ``ingest_bkq_sketch`` k-pin convention); ``None`` uses the store's
+    pinned count (64 for a new store).
 
     Returns the touched bucket ids.
     """
-    import glob as _glob
-    import json as _json
-    import os
-    import uuid as _uuid
-
-    from pyspark.sql.types import StructType
-
     from . import snapshot
 
     pinned = snapshot.table_properties(table).get("scd2_buckets")
@@ -369,86 +208,22 @@ def scd2_apply_snapshot(
             F.xxhash64(F.col(key).cast("string")), F.lit(buckets)
         ).cast("int")
 
-    def write_bucket_files(df: DataFrame) -> list[dict]:
-        commit_id = _uuid.uuid4().hex[:12]
-        out_dir = os.path.join(table, snapshot.DATA_DIR, commit_id)
-        df.write.partitionBy("__bucket").parquet(out_dir)
-        entries = []
-        for f in sorted(
-            _glob.glob(os.path.join(out_dir, "__bucket=*", "*.parquet"))
-        ):
-            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-            entries.append({"path": f, "bucket": b})
-        return entries
-
-    bb = batch.withColumn("__bucket", bcol())
     touched = sorted(
-        int(r["__bucket"]) for r in bb.select("__bucket").distinct().collect()
+        int(r["b"]) for r in batch.select(bcol().alias("b")).distinct().collect()
     )
     if not touched:
         return []
-    last_err: Exception | None = None
-    for _ in range(snapshot.COMMIT_RETRIES):
-        version = snapshot.current_version(table)
-        if version is None:
-            full = scd2_build(bb.drop("__bucket"), key, attr, ts, tiebreak)
-            schema = full.schema.json()
-            files = write_bucket_files(full.withColumn("__bucket", bcol()))
-            try:
-                snapshot._commit(
-                    table,
-                    files,
-                    stats_col=None,
-                    expected_version=0,
-                    schema=schema,
-                )
-                return touched
-            except snapshot.CommitConflictError as e:
-                last_err = e  # a racing creator won — rebase as apply
-                continue
-        manifest = snapshot.read_manifest(table, version)
-        untagged = [e["path"] for e in manifest["files"] if "bucket" not in e]
-        if untagged:
-            # a table created by write_snapshot/append_snapshot has no
-            # bucket tags: 'not in touched' would KEEP every file while
-            # the rebuild reads NONE of them — old history and a fresh
-            # contradictory history for every batch key would coexist
-            # silently (r9 review). Refuse loudly instead.
-            raise snapshot.SnapshotError(
-                f"table at {table} has {len(untagged)} manifest entries "
-                "without bucket tags — not an scd2_apply_snapshot store; "
-                "bootstrap a new table with scd2_apply_snapshot instead "
-                f"(first untagged: {untagged[0]})"
-            )
-        keep = [
-            e for e in manifest["files"] if e.get("bucket") not in touched
-        ]
-        base_paths = [
-            e["path"] for e in manifest["files"] if e.get("bucket") in touched
-        ]
-        if base_paths:
-            base = snapshot._read_files(spark, manifest, base_paths)
-        else:
-            base = spark.createDataFrame(
-                [], StructType.fromJson(_json.loads(manifest["schema"]))
-            )
-        new = scd2_apply(base, bb.drop("__bucket"), key, attr, ts, tiebreak)
-        files = write_bucket_files(new.withColumn("__bucket", bcol()))
-        try:
-            snapshot._commit(
-                table,
-                keep + files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=version,
-                schema=manifest.get("schema"),
-            )
-            return touched
-        except snapshot.CommitConflictError as e:
-            last_err = e
-    raise snapshot.SnapshotError(
-        f"scd2_apply_snapshot: lost the commit race "
-        f"{snapshot.COMMIT_RETRIES} times at {table}"
-    ) from last_err
+
+    def rebuild(base: DataFrame | None) -> DataFrame:
+        dim = (
+            scd2_build(batch, key, attr, ts, tiebreak)
+            if base is None
+            else scd2_apply(base, batch, key, attr, ts, tiebreak)
+        )
+        return dim.withColumn(snapshot.BUCKET_COL, bcol())
+
+    snapshot.rewrite_buckets(spark, table, touched, rebuild)
+    return touched
 
 
 def _classify_changes(

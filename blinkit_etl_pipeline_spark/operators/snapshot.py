@@ -47,12 +47,16 @@ Writers: :func:`append_snapshot` is the one commit call of the
 incremental stores. On a missing table it creates version 1 through
 the atomic ``expected_version=0`` commit; a creator that loses that
 race rebases onto the winner as an append, so two first ingests both
-land (a full-overwrite :func:`write_snapshot` there would drop the
-winner's batch). :func:`rewrite_snapshot` is the one fold-rewrite
-loop: it reads the base at the manifest's version, replaces the rows
-with ``fold_fn(base)`` and commits under ``expected_version`` with the
-folded frame's schema, re-running the fold against the winner on a
-conflict. Every fold compaction and retraction purge goes through it.
+land. Every partial rewrite goes through ONE private loop,
+``_rewrite``: read only the entries to replace, write their
+replacement, commit it plus the untouched entries under
+``expected_version``, and re-run the step against the winner on a
+conflict. :func:`rewrite_snapshot` (fold compactions, retraction
+purges, the IVFPQ re-encode), :func:`compact_snapshot`,
+:func:`merge_snapshot` and :func:`rewrite_buckets` (the bucketed SCD2
+dimension) differ only in what they read and write. The last two also
+create a missing table through the atomic create; racing creators
+all land. How a table on disk changes is decided in this module only.
 
 Redelivery (exactly-once per batch): every manifest carries
 ``batch_ids``, the set of batch ids committed into that version — the
@@ -191,10 +195,13 @@ def _file_stats(path: str, stats_col: str | None) -> dict:
 def _write_data_files(
     df: DataFrame, table: str, stats_col: str | None,
     num_files: int | None = None,
+    bucket_col: str | None = None,
 ) -> list[dict]:
     """Write df as immutable parquet under data/<commit-uuid>/ and
     return manifest entries (path + key-range stats from footers).
-    ``num_files`` overrides the output file count (compaction)."""
+    ``num_files`` overrides the output file count (compaction);
+    ``bucket_col`` partitions the files by that column, which leaves
+    the rows, and tags each entry with its ``bucket``."""
     commit_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(table, DATA_DIR, commit_id)
     if num_files is None:
@@ -222,9 +229,21 @@ def _write_data_files(
         ).sortWithinPartitions(stats_col)
     elif num_files is not None:
         df = df.repartition(num_files)
-    df.write.parquet(out_dir)
-    files = sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
-    return [_file_stats(f, stats_col) for f in files]
+    if bucket_col is None:
+        df.write.parquet(out_dir)
+        return [
+            _file_stats(f, stats_col)
+            for f in sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
+        ]
+    df.write.partitionBy(bucket_col).parquet(out_dir)
+    pattern = os.path.join(out_dir, f"{bucket_col}=*", "*.parquet")
+    return [
+        {
+            **_file_stats(f, stats_col),
+            "bucket": int(os.path.basename(os.path.dirname(f)).split("=")[1]),
+        }
+        for f in sorted(glob.glob(pattern))
+    ]
 
 
 def _commit(
@@ -299,6 +318,17 @@ def _commit(
 COMMIT_RETRIES = 5
 
 
+def _commit_unconditional(table: str, files: list[dict], **kw) -> int:
+    """Commit content that does not depend on the base (overwrite,
+    rollback): a lost race only re-allocates the version number."""
+    for _ in range(COMMIT_RETRIES):
+        try:
+            return _commit(table, files, **kw)
+        except CommitConflictError:
+            continue
+    return _commit(table, files, **kw)
+
+
 def _schema_union(prev_json: str | None, df_schema) -> str:
     """Iceberg-style additive schema evolution: the version's schema is
     the previous schema plus any NEW columns the incoming frame adds
@@ -357,23 +387,13 @@ def write_snapshot(
     batch_id: str | None = None,
 ) -> int:
     """Create version 1 (or a full-overwrite new version) from ``df``.
-    The new version's batch-id set is ``[batch_id]`` (empty if None).
-
-    Content doesn't depend on the base, so a lost version race only
-    needs re-allocation — data files are written once."""
-    files = _write_data_files(df, table, stats_col)
-    schema = df.schema.json()
-    batch_ids = [] if batch_id is None else [batch_id]
-    for _ in range(COMMIT_RETRIES):
-        try:
-            return _commit(
-                table, files, stats_col=stats_col, schema=schema,
-                batch_ids=batch_ids,
-            )
-        except CommitConflictError:
-            continue
-    return _commit(
-        table, files, stats_col=stats_col, schema=schema, batch_ids=batch_ids
+    The new version's batch-id set is ``[batch_id]`` (empty if None)."""
+    return _commit_unconditional(
+        table,
+        _write_data_files(df, table, stats_col),
+        stats_col=stats_col,
+        schema=df.schema.json(),
+        batch_ids=[] if batch_id is None else [batch_id],
     )
 
 
@@ -436,35 +456,84 @@ def append_snapshot(
     raise last_err
 
 
-def rewrite_snapshot(spark: SparkSession, table: str, fold_fn) -> int:
-    """Replace the current version's rows with ``fold_fn(base)`` — the
-    one rewrite loop behind every fold compaction and retraction purge.
+def _read_entries(
+    spark: SparkSession, manifest: dict, entries: list[dict]
+) -> DataFrame:
+    """Scan ``entries`` under the version's recorded schema; an empty
+    list reads zero rows (LIMIT 0 folds to an empty relation)."""
+    paths = [e["path"] for e in (entries or manifest["files"])]
+    df = _read_files(spark, manifest, paths)
+    return df if entries else df.limit(0)
 
-    The base is read at the manifest's version and the rewrite commits
-    under ``expected_version``: a concurrent commit landing mid-rewrite
-    conflicts and the fold re-runs against the winner, so appended rows
-    are never dropped. The new version records the folded frame's
-    schema, keeps the table's stats_col, and carries the base's
-    batch-id set forward. ``fold_fn`` must be content-preserving for
-    every read the store serves (a merge-semilattice fold, a tombstone
-    purge); it may run more than once."""
+
+def _rewrite(
+    spark: SparkSession,
+    table: str,
+    select,
+    fn,
+    *,
+    creates: bool = False,
+    stats_col: str | None = None,
+    num_files: int | None = None,
+    bucket_col: str | None = None,
+) -> tuple[int, list[dict], list[dict]]:
+    """The one partial-rewrite loop (module docstring): the entries
+    ``select(manifest)`` picks are read and replaced by ``fn(rows)``;
+    the rest are carried by reference; the commit asserts the version
+    read, and a conflict re-runs the step on the winner (``select`` and
+    ``fn`` may run more than once; raising aborts). The new version
+    keeps stats_col and batch ids; its schema is ``fn``'s on a full
+    rewrite, else the additive union. With ``creates``, a missing table
+    is created from ``fn(None)`` (``expected_version=0``, clustered by
+    ``stats_col``). Returns ``(version, replaced, new entries)``."""
     last_err: CommitConflictError | None = None
     for _ in range(COMMIT_RETRIES):
-        manifest = read_manifest(table)
-        base = read_snapshot(spark, table, manifest["version"])
-        rows = fold_fn(base).localCheckpoint(eager=True)
-        files = _write_data_files(rows, table, manifest.get("stats_col"))
+        if creates and current_version(table) is None:
+            manifest = {"version": 0, "files": [], "stats_col": stats_col}
+            touched, rows = [], fn(None)
+        else:
+            manifest = read_manifest(table)
+            touched = select(manifest)
+            rows = fn(_read_entries(spark, manifest, touched))
+        replaced = {e["path"] for e in touched}
+        keep = [e for e in manifest["files"] if e["path"] not in replaced]
+        files = _write_data_files(
+            rows, table, manifest.get("stats_col"),
+            num_files=num_files, bucket_col=bucket_col,
+        )
+        stored = rows.drop(bucket_col) if bucket_col else rows
         try:
-            return _commit(
+            version = _commit(
                 table,
-                files,
+                keep + files,
                 stats_col=manifest.get("stats_col"),
                 expected_version=manifest["version"],
-                schema=rows.schema.json(),
+                schema=_schema_union(
+                    manifest.get("schema") if keep else None, stored.schema
+                ),
             )
         except CommitConflictError as e:
             last_err = e
+            continue
+        return version, touched, files
     raise last_err
+
+
+def rewrite_snapshot(spark: SparkSession, table: str, fold_fn) -> int:
+    """Replace the current version's rows with ``fold_fn(base)`` — every
+    fold compaction and retraction purge, through ``_rewrite``.
+
+    A concurrent commit landing mid-rewrite conflicts and the fold
+    re-runs against the winner, so appended rows are never dropped.
+    The new version records the folded frame's schema, keeps the
+    table's stats_col, and carries the base's batch-id set forward.
+    ``fold_fn`` must be content-preserving for every read the store
+    serves (a merge-semilattice fold, a tombstone purge); it may run
+    more than once, and may raise to refuse a base."""
+    return _rewrite(
+        spark, table, lambda m: m["files"],
+        lambda base: fold_fn(base).localCheckpoint(eager=True),
+    )[0]
 
 
 def read_snapshot(
@@ -520,12 +589,9 @@ def read_snapshot_pruned(
     file list when stats are absent."""
     manifest = read_manifest(table, version)
     entries = _pruned_entries(manifest, values)
-    if entries is None:
-        entries = manifest["files"]
-    if not entries:
-        # preserve schema: scan the full version, keep zero rows
-        return read_snapshot(spark, table, version).limit(0)
-    return _read_files(spark, manifest, [e["path"] for e in entries])
+    return _read_entries(
+        spark, manifest, manifest["files"] if entries is None else entries
+    )
 
 
 def rollback_snapshot(table: str, version: int) -> int:
@@ -573,24 +639,50 @@ def rollback_snapshot(table: str, version: int) -> int:
         entry = dict(e)
         entry["path"] = new_path
         files.append(entry)
-    for _ in range(COMMIT_RETRIES):
-        try:
-            return _commit(
-                table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                schema=manifest.get("schema"),
-                batch_ids=_batch_ids(manifest),
-            )
-        except CommitConflictError:
-            continue
-    return _commit(
+    return _commit_unconditional(
         table,
         files,
         stats_col=manifest.get("stats_col"),
         schema=manifest.get("schema"),
         batch_ids=_batch_ids(manifest),
     )
+
+
+def _key_range_entries(
+    spark: SparkSession, manifest: dict, updates: DataFrame, key: str
+) -> list[dict]:
+    """Entries whose manifest key range may hold one of ``updates``'
+    ``key`` values: the batch's distinct keys joined against a
+    broadcast one-row-per-FILE frame of ranges. Every entry when the
+    table has no single-column stats on ``key`` with a str/bool/int/
+    float type (correct, just unpruned)."""
+    entries = manifest["files"]
+    ktypes = {str: "string", bool: "boolean", int: "long", float: "double"}
+    ktype = ktypes.get(type(entries[0].get("min"))) if entries else None
+    if (
+        manifest.get("stats_col") != key
+        or ktype is None
+        or not all("min" in e for e in entries)
+    ):
+        return entries
+    ranges = spark.createDataFrame(
+        [(e["path"], e["min"], e["max"]) for e in entries],
+        f"path string, kmin {ktype}, kmax {ktype}",
+    )
+    hit = {
+        r["path"]
+        for r in updates.select(F.col(key).alias("__k"))
+        .distinct()
+        .join(
+            F.broadcast(ranges),
+            (F.col("__k") >= F.col("kmin")) & (F.col("__k") <= F.col("kmax")),
+            "inner",
+        )
+        .select("path")
+        .distinct()
+        .collect()
+    }
+    return [e for e in entries if e["path"] in hit]
 
 
 def merge_snapshot(
@@ -608,7 +700,10 @@ def merge_snapshot(
     manifest key range does not intersect the update batch's keys are
     carried by reference; matched-key semantics are
     :func:`operators.merge.merge_upsert` over ONLY the touched files'
-    rows. Inserts (keys matching no file) land in the new files.
+    rows. Inserts (keys matching no file) land in the new files. A
+    missing table is created from the batch's live rows, clustered by
+    ``keys[0]`` (``version_col`` is not stored); racing first merges
+    all land. A replayed CDC batch converges to the same table.
 
     Pruning needs single-column ``stats_col == keys[0]`` stats in the
     manifest with a str/bool/int/float key; without them every file is
@@ -620,80 +715,23 @@ def merge_snapshot(
     from .merge import merge_upsert
 
     keys = list(keys)
-    last_err: CommitConflictError | None = None
-    for _ in range(COMMIT_RETRIES):
-        try:
-            return _merge_once(
-                spark, table, updates, keys,
-                delete_col=delete_col, version_col=version_col,
-                merge_fn=merge_upsert,
-            )
-        except CommitConflictError as e:
-            # a merge's rewrite set depends on the base, so a conflict
-            # re-runs the whole merge against the winner's manifest; the
-            # failed attempt's data files are unreferenced (vacuumable)
-            last_err = e
-    raise last_err
 
+    def merged(base: DataFrame | None) -> DataFrame:
+        if base is None:
+            base = updates.drop(
+                *[c for c in (delete_col, version_col) if c]
+            ).limit(0)
+        return merge_upsert(
+            base, updates, keys, delete_col=delete_col, version_col=version_col
+        )
 
-def _merge_once(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    *,
-    delete_col: str | None,
-    version_col: str | None,
-    merge_fn,
-) -> tuple[int, list[str]]:
-    manifest = read_manifest(table)
-    stats_col = manifest.get("stats_col")
-    entries = manifest["files"]
-    if not entries:
-        raise SnapshotError(
-            f"version {manifest['version']} of {table} lists no files"
-        )
-    _KTYPES = {str: "string", bool: "boolean", int: "long", float: "double"}
-    ktype = _KTYPES.get(type(entries[0].get("min")))
-    if stats_col == keys[0] and ktype and all("min" in e for e in entries):
-        # tiny frame: one row per FILE — broadcast against update keys
-        ranges = spark.createDataFrame(
-            [(e["path"], e["min"], e["max"]) for e in entries],
-            f"path string, kmin {ktype}, kmax {ktype}",
-        )
-        touched_rows = (
-            updates.select(F.col(keys[0]).alias("__k"))
-            .distinct()
-            .join(
-                F.broadcast(ranges),
-                (F.col("__k") >= F.col("kmin"))
-                & (F.col("__k") <= F.col("kmax")),
-                "inner",
-            )
-            .select("path")
-            .distinct()
-            .collect()
-        )
-        touched = {r["path"] for r in touched_rows}
-    else:
-        touched = {e["path"] for e in entries}
-    untouched = [e for e in entries if e["path"] not in touched]
-    if touched:
-        base = _read_files(spark, manifest, sorted(touched))
-    else:
-        base = read_snapshot(spark, table).limit(0)
-    merged = merge_fn(
-        base, updates, keys, delete_col=delete_col, version_col=version_col
+    version, touched, _ = _rewrite(
+        spark, table,
+        lambda m: _key_range_entries(spark, m, updates, keys[0]),
+        merged,
+        creates=True, stats_col=keys[0],
     )
-    new_files = _write_data_files(merged, table, stats_col)
-    version = _commit(
-        table,
-        untouched + new_files,
-        stats_col=stats_col,
-        expected_version=manifest["version"],
-        schema=_schema_union(manifest.get("schema"), merged.schema),
-    )
-    return version, sorted(touched)
+    return version, sorted(e["path"] for e in touched)
 
 
 def compact_snapshot(
@@ -706,43 +744,76 @@ def compact_snapshot(
     Append-heavy tables (e.g. the incremental dedup signature store)
     otherwise accumulate one file set per batch forever — manifests,
     file listings, and per-file open costs grow without bound even
-    though the DATA stays metadata-sized. Compaction is CAS-committed
-    against the version it read (``expected_version``), so a concurrent
-    ingest landing mid-compaction conflicts and the compaction rebases
-    — appended signatures are never silently dropped. Old versions
-    (and their small files) remain time-travelable until
-    :func:`expire_snapshots` vacuums them.
+    though the DATA stays metadata-sized. A concurrent ingest landing
+    mid-compaction conflicts and the compaction re-runs on the winner
+    (``_rewrite``), so appended rows are never dropped. Old versions
+    remain time-travelable until :func:`expire_snapshots`.
 
     Returns ``(version, files_before, files_after)``; a store already
     at/below ``target_files`` is a no-op returning the current version.
     """
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    last_err: CommitConflictError | None = None
-    for _ in range(COMMIT_RETRIES):
-        manifest = read_manifest(table)
-        entries = manifest["files"]
-        if len(entries) <= target_files:
-            return manifest["version"], len(entries), len(entries)
-        # read under the RECORDED schema: bare inference samples one
-        # footer and could silently drop an evolved column from the
-        # compacted rewrite
-        df = _read_files(spark, manifest, [e["path"] for e in entries])
-        files = _write_data_files(
-            df, table, manifest.get("stats_col"), num_files=target_files
-        )
-        try:
-            version = _commit(
-                table,
-                files,
-                stats_col=manifest.get("stats_col"),
-                expected_version=manifest["version"],
-                schema=manifest.get("schema"),
+    manifest = read_manifest(table)
+    if len(manifest["files"]) <= target_files:
+        n = len(manifest["files"])
+        return manifest["version"], n, n
+    version, before, after = _rewrite(
+        spark, table, lambda m: m["files"], lambda rows: rows,
+        num_files=target_files,
+    )
+    return version, len(before), len(after)
+
+
+#: the bucket column of :func:`rewrite_buckets` frames
+BUCKET_COL = "__bucket"
+
+
+def rewrite_buckets(
+    spark: SparkSession, table: str, buckets, fn
+) -> int:
+    """Bucket-granular copy-on-write (the SCD2 dimension store): the
+    files tagged with one of ``buckets`` are replaced by ``fn(rows)``,
+    whose :data:`BUCKET_COL` partitions and tags the new files; other
+    buckets are carried by reference; a missing table is created from
+    ``fn(None)``. Refuses untagged entries, which it would keep while
+    rebuilding their keys. Returns the new version."""
+    buckets = set(buckets)
+
+    def select(manifest: dict) -> list[dict]:
+        untagged = [e["path"] for e in manifest["files"] if "bucket" not in e]
+        if untagged:
+            raise SnapshotError(
+                f"table at {table} has {len(untagged)} manifest entries "
+                "without bucket tags — not a bucketed store; bootstrap a "
+                f"new table instead (first untagged: {untagged[0]})"
             )
-            return version, len(entries), len(files)
-        except CommitConflictError as e:
-            last_err = e
-    raise last_err
+        return [e for e in manifest["files"] if e["bucket"] in buckets]
+
+    return _rewrite(
+        spark, table, select, fn, creates=True, bucket_col=BUCKET_COL
+    )[0]
+
+
+def appended_rows(
+    spark: SparkSession, table: str, old_version: int
+) -> DataFrame | None:
+    """Rows in the files appended to ``table`` since ``old_version`` —
+    None when the diff is unavailable (vacuumed manifest, or a rewrite
+    replaced files it listed): the caller takes its full path."""
+    try:
+        old_m = read_manifest(table, old_version)
+    except SnapshotError:
+        return None
+    cur_m = read_manifest(table)
+    old_paths = {e["path"] for e in old_m["files"]}
+    if not old_paths <= {e["path"] for e in cur_m["files"]}:
+        return None
+    added = sorted(
+        (e for e in cur_m["files"] if e["path"] not in old_paths),
+        key=lambda e: e["path"],
+    )
+    return _read_entries(spark, cur_m, added)
 
 
 PROPS_DIR = "props"

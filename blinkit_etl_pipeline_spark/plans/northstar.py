@@ -7574,7 +7574,7 @@ GROUP BY value, exact_count"""
 GS_CURVE_BEAMS = (4, 8, 16)
 
 
-def _parallel_points(point_fn, points):
+def _parallel_points(spark: SparkSession, point_fn, points):
     """Build independent sweep-point DataFrames from a small thread
     pool (guide §2.6 — overlap independent jobs): each point's
     construction interleaves its checkpoint jobs and driver planning
@@ -7583,17 +7583,18 @@ def _parallel_points(point_fn, points):
     caller unions them in that order, so output is bit-identical to
     the sequential loop).
 
-    Workers run under ``pyspark.inheritable_thread_target``: in
-    pinned-thread mode, job group / job description local properties
-    do NOT propagate to plain Python threads, so the sweep's
-    construction-time jobs would escape the bench's job labeling (and
-    any job-group cancellation). The wrapper captures the caller's
-    properties at submit time and applies them in the worker."""
+    Workers run under ``pyspark.inheritable_thread_target(spark)``:
+    in pinned-thread mode, job group / job description local
+    properties and session tags do NOT propagate to plain Python
+    threads, so the sweep's construction-time jobs would escape the
+    bench's job labeling (and any job-group or tag cancellation). The
+    wrapper captures the caller's properties and tags at wrap time and
+    applies them in the worker."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    fn = inheritable_thread_target(point_fn)
+    fn = inheritable_thread_target(spark)(point_fn)
     with ThreadPoolExecutor(max_workers=min(3, len(points))) as pool:
         return list(pool.map(fn, points))
 
@@ -7635,7 +7636,7 @@ def q_ann_graph_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # point's per-round checkpoint materializations back-fill the
     # others' driver planning stalls; union in beam order afterwards,
     # so the result is bit-identical to the sequential sweep
-    rows = _parallel_points(_point, GS_CURVE_BEAMS)
+    rows = _parallel_points(spark, _point, GS_CURVE_BEAMS)
     out = None
     for row in rows:
         out = row if out is None else out.unionByName(row)
@@ -7751,7 +7752,7 @@ def q_ann_graph_filtered_curve(
 
     # independent sweep points built concurrently (guide §2.6);
     # union in beam order → bit-identical to the sequential sweep
-    rows = _parallel_points(_point, GS_CURVE_BEAMS)
+    rows = _parallel_points(spark, _point, GS_CURVE_BEAMS)
     out = None
     for row in rows:
         out = row if out is None else out.unionByName(row)

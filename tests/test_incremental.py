@@ -3411,3 +3411,18 @@ def test_pruned_read_ids_leaves_session_conf_alone(spark, tmp_path):
         assert spark.conf.get(key) == "10"
     finally:
         spark.conf.set(key, saved)
+
+
+def test_overlapped_store_ops_inherit_session_tags(spark):
+    """A tag added before an overlapped fan-out is visible inside every
+    worker thunk, so tag-based cancellation (``interruptTag``) reaches
+    the overlapped store ops too."""
+    tag = "overlap-tag-probe"
+    spark.addTag(tag)
+    try:
+        seen = incremental.overlap_store_ops(spark, [
+            lambda: set(spark.getTags()) for _ in range(3)
+        ])
+    finally:
+        spark.removeTag(tag)
+    assert all(tag in tags for tags in seen), seen

@@ -1,10 +1,8 @@
-"""MERGE/upsert: relation semantics, latest-wins versions, and the
-file-level copy-on-write partitioned merge."""
+"""MERGE/upsert: relation semantics, latest-wins versions and the
+broadcast anti join. The table-level copy-on-write MERGE
+(``snapshot.merge_snapshot``) is tested in test_snapshot.py."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,85 +61,6 @@ def test_merge_upsert_broadcasts_update_keys(spark):
     assert "Exchange hashpartitioning" not in plan, plan[:3000]
 
 
-def test_merge_into_partitioned_rewrites_only_touched_partitions(
-    spark, tmp_path
-):
-    path = str(tmp_path / "cow_table")
-    base = spark.createDataFrame(
-        [(i, f"v{i}", i % 3) for i in range(30)],
-        "k bigint, v string, part int",
-    )
-    base.repartition("part").write.partitionBy("part").parquet(path)
-    before = {
-        p: sorted(
-            (os.path.basename(f), os.path.getmtime(f))
-            for f in glob.glob(f"{path}/part={p}/*.parquet")
-        )
-        for p in (0, 1, 2)
-    }
-
-    updates = spark.createDataFrame(
-        [(3, "V3", 0, False), (900, "new", 0, False), (6, None, 0, True)],
-        "k bigint, v string, part int, is_delete boolean",
-    )
-    touched = merge.merge_into_partitioned(
-        spark, path, updates, ["k"], ["part"], delete_col="is_delete"
-    )
-    assert touched == [(0,)]
-
-    after = {
-        p: sorted(
-            (os.path.basename(f), os.path.getmtime(f))
-            for f in glob.glob(f"{path}/part={p}/*.parquet")
-        )
-        for p in (0, 1, 2)
-    }
-    assert after[1] == before[1] and after[2] == before[2]  # untouched
-    assert after[0] != before[0]  # rewritten
-
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    expect = sorted(
-        [(i, f"v{i}", i % 3) for i in range(30) if i not in (3, 6)]
-        + [(3, "V3", 0), (900, "new", 0)]
-    )
-    assert got == expect
-
-
-def test_merge_into_partitioned_clears_fully_deleted_partitions(
-    spark, tmp_path
-):
-    """Deleting EVERY row of a partition must clear its files — a
-    dynamic-overwrite spelling would leave the old files in place and
-    resurrect the rows on the next read."""
-    path = str(tmp_path / "cow_del")
-    spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1)], "k bigint, v string, part int"
-    ).repartition("part").write.partitionBy("part").parquet(path)
-
-    updates = spark.createDataFrame(
-        [(1, None, 0, True)], "k bigint, v string, part int, is_delete boolean"
-    )
-    merge.merge_into_partitioned(
-        spark, path, updates, ["k"], ["part"], delete_col="is_delete"
-    )
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    assert got == [(2, "b", 1)]  # row 1 stays deleted, not resurrected
-
-
-def test_merge_into_partitioned_bootstraps_missing_table(spark, tmp_path):
-    path = str(tmp_path / "cow_fresh")
-    updates = spark.createDataFrame(
-        [(1, "a", 0, False), (2, None, 1, True), (3, "c", 1, False)],
-        "k bigint, v string, part int, is_delete boolean",
-    )
-    touched = merge.merge_into_partitioned(
-        spark, path, updates, ["k"], ["part"], delete_col="is_delete"
-    )
-    assert sorted(touched) == [(0,), (1,)]
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    assert got == [(1, "a", 0), (3, "c", 1)]  # deletes never insert
-
-
 def test_merge_upsert_equal_versions_tie_break_deterministically(spark):
     """A redelivered batch with duplicate (key, version) rows must keep
     the SAME row every run — ascending tie-break over the remaining
@@ -153,74 +72,3 @@ def test_merge_upsert_equal_versions_tie_break_deterministically(spark):
     for _ in range(3):
         out = merge.merge_upsert(target, dup, ["k"], version_col="ver")
         assert _rows(out) == [(1, "aaa")]
-
-
-def test_merge_into_partitioned_null_partition_values(spark, tmp_path):
-    """NULL partition values route to the Hive default-partition
-    directory and match via null-safe equality — a plain `==` clause
-    evaluates to NULL and silently vanishes the whole batch."""
-    path = str(tmp_path / "cow_null")
-    spark.createDataFrame(
-        [(1, "a", "x"), (2, "b", None), (3, "c", None)],
-        "k bigint, v string, part string",
-    ).write.partitionBy("part").parquet(path)
-
-    updates = spark.createDataFrame(
-        [(2, "B", None, False), (9, "new", None, False), (3, None, None, True)],
-        "k bigint, v string, part string, is_delete boolean",
-    )
-    touched = merge.merge_into_partitioned(
-        spark, path, updates, ["k"], ["part"], delete_col="is_delete"
-    )
-    assert touched == [(None,)]
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    assert got == [(1, "a", "x"), (2, "B", None), (9, "new", None)]
-    # layout parity with partitionBy's own NULL spelling
-    assert os.path.isdir(f"{path}/part=__HIVE_DEFAULT_PARTITION__")
-
-
-def test_merge_into_partitioned_detects_moved_keys(spark, tmp_path):
-    """check_moved_keys=True raises when an update's key already lives
-    in a partition outside the batch (a partition-moving update would
-    otherwise leave a stale duplicate)."""
-    path = str(tmp_path / "cow_moved")
-    spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1)], "k bigint, v string, part int"
-    ).write.partitionBy("part").parquet(path)
-
-    moved = spark.createDataFrame([(2, "B", 0)], "k bigint, v string, part int")
-    with pytest.raises(ValueError, match="moving"):
-        merge.merge_into_partitioned(
-            spark, path, moved, ["k"], ["part"], check_moved_keys=True
-        )
-    # a non-moving update under the same flag still merges
-    ok = spark.createDataFrame([(1, "A", 0)], "k bigint, v string, part int")
-    merge.merge_into_partitioned(
-        spark, path, ok, ["k"], ["part"], check_moved_keys=True
-    )
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    assert got == [(1, "A", 0), (2, "b", 1)]
-
-
-def test_merge_into_partitioned_escapes_special_partition_values(
-    spark, tmp_path
-):
-    """Partition values containing Hive-escaped characters (= / : %)
-    must merge into the SAME %XX-encoded directory partitionBy writes —
-    a raw f-string path would create a sibling directory and duplicate
-    the partition."""
-    path = str(tmp_path / "cow_esc")
-    spark.createDataFrame(
-        [(1, "a", "x=1/y:2"), (2, "b", "plain")],
-        "k bigint, v string, part string",
-    ).write.partitionBy("part").parquet(path)
-
-    updates = spark.createDataFrame(
-        [(1, "A", "x=1/y:2"), (9, "new", "x=1/y:2")],
-        "k bigint, v string, part string",
-    )
-    touched = merge.merge_into_partitioned(spark, path, updates, ["k"], ["part"])
-    assert touched == [("x=1/y:2",)]
-    assert os.path.isdir(f"{path}/part=x%3D1%2Fy%3A2")
-    got = _rows(spark.read.parquet(path).select("k", "v", "part"))
-    assert got == [(1, "A", "x=1/y:2"), (2, "b", "plain"), (9, "new", "x=1/y:2")]

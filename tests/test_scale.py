@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from blinkit_etl_pipeline_spark.operators import joins
-from blinkit_etl_pipeline_spark.sources import bucketing, metrics, sinks
+from blinkit_etl_pipeline_spark.sources import metrics, sinks
 from blinkit_etl_pipeline_spark.sources.testdata import register_blinkit
 
 from conftest import SF_SMOKE
@@ -22,12 +22,10 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     items = t["b_order_items"]
     orders = t["b_orders"]
 
-    bucketing.write_bucketed(items, "b_items_bkt", ["order_id"], num_buckets=4,
-                             sort_cols=["order_id"])
-    bucketing.write_bucketed(orders, "b_orders_bkt", ["order_id"], num_buckets=4,
-                             sort_cols=["order_id"])
-    left = bucketing.read_table(spark, "b_items_bkt")
-    right = bucketing.read_table(spark, "b_orders_bkt")
+    sinks.write_bucketed(items, "b_items_bkt", "order_id", n_buckets=4)
+    sinks.write_bucketed(orders, "b_orders_bkt", "order_id", n_buckets=4)
+    left = spark.table("b_items_bkt")
+    right = spark.table("b_orders_bkt")
 
     # force SMJ so the test asserts bucket co-location, not broadcast
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

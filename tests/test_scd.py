@@ -120,15 +120,13 @@ def test_lookup_point_in_time(spark):
     assert got == [(1, "A"), (2, "X")]
 
 
-def test_apply_partitioned_equals_full_build_in_order(spark, tmp_path):
+def test_apply_snapshot_equals_full_build_in_order(spark, tmp_path):
     """Per-key in-order delivery (the CDC contract): any batch split of
-    a feed with repeated/duplicate states folds to the full rebuild."""
+    a feed with repeated/duplicate states folds, through the bucketed
+    snapshot store, to the full rebuild."""
     import random
 
-    from blinkit_etl_pipeline_spark.operators.scd import (
-        scd2_apply_partitioned,
-        scd2_build,
-    )
+    from blinkit_etl_pipeline_spark.operators import snapshot
 
     rng = random.Random(7)
     rows = [
@@ -137,51 +135,52 @@ def test_apply_partitioned_equals_full_build_in_order(spark, tmp_path):
         for t in range(5)
     ]
     ordered = sorted(rows, key=lambda r: (r[2], r[3]))  # global ts order
-    path = str(tmp_path / "dim")
+    table = str(tmp_path / "dim")
     for i in range(0, len(ordered), 25):
-        scd2_apply_partitioned(
-            spark, path, _feed(spark, ordered[i : i + 25]),
+        scd.scd2_apply_snapshot(
+            spark, table, _feed(spark, ordered[i : i + 25]),
             "k", "a", "ts", "tb", n_buckets=8,
         )
-    got = spark.read.parquet(path).drop("__bucket")
-    full = scd2_build(_feed(spark, rows), "k", "a", "ts", "tb")
+    got = snapshot.read_snapshot(spark, table)
+    full = scd.scd2_build(_feed(spark, rows), "k", "a", "ts", "tb")
     assert _rows(got) == _rows(full)
 
-
-def test_apply_partitioned_rewrites_only_touched_buckets(spark, tmp_path):
-    import glob
+def test_apply_snapshot_rewrites_only_touched_buckets(spark, tmp_path):
+    """A batch rewrites only the buckets its keys hash into: every
+    other bucket's manifest entries keep identical paths across the
+    versions, and their files are not rewritten."""
     import os
 
-    from blinkit_etl_pipeline_spark.operators.scd import (
-        scd2_apply_partitioned,
-    )
+    from blinkit_etl_pipeline_spark.operators import snapshot
 
-    path = str(tmp_path / "dim")
-    scd2_apply_partitioned(
-        spark, path,
+    table = str(tmp_path / "dim")
+    scd.scd2_apply_snapshot(
+        spark, table,
         _feed(spark, [(k, "A", 0, k) for k in range(1, 30)]),
         "k", "a", "ts", "tb", n_buckets=8,
     )
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{path}/__bucket=*/*.parquet")
-    }
-    touched = scd2_apply_partitioned(
-        spark, path, _feed(spark, [(1, "B", 5, 99)]),
-        "k", "a", "ts", "tb", n_buckets=8,
+    m1 = snapshot.read_manifest(table)
+    mtimes = {e["path"]: os.path.getmtime(e["path"]) for e in m1["files"]}
+    touched = scd.scd2_apply_snapshot(
+        spark, table, _feed(spark, [(1, "B", 5, 99)]),
+        "k", "a", "ts", "tb",
     )
     assert len(touched) == 1
-    kept_dirs = [
-        p for p in before
-        if f"__bucket={touched[0]}/" not in p
-    ]
-    after = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{path}/__bucket=*/*.parquet")
-    }
-    for p in kept_dirs:
-        assert after[p] == before[p]  # untouched bucket files untouched
+    m2 = snapshot.read_manifest(table)
+    assert m2["version"] == m1["version"] + 1
 
+    def untouched(m):
+        return sorted(
+            (e["bucket"], e["path"]) for e in m["files"]
+            if e["bucket"] not in touched
+        )
+
+    assert untouched(m1)
+    assert untouched(m2) == untouched(m1)
+    for _, p in untouched(m2):
+        assert os.path.getmtime(p) == mtimes[p]
+    rewritten = {e["path"] for e in m2["files"] if e["bucket"] in touched}
+    assert rewritten and not rewritten & set(mtimes)
 
 def test_streaming_scd2_ingest_equals_batch_build(spark, tmp_path):
     """r10 (VERDICT r9 task #2): the streamed maintainer routes
@@ -326,24 +325,6 @@ def test_apply_equal_ts_string_tiebreaks_keep_original_order(spark):
     assert cur == ["B"]  # '000' < '0000' -> A opened first
 
 
-def test_apply_partitioned_bootstrap_replay_heals_partial_dir(spark, tmp_path):
-    """r7 review regression: a crashed bootstrap leaves an unreadable
-    dir; the replay must overwrite it, not wedge on errorifexists."""
-    import os
-
-    from blinkit_etl_pipeline_spark.operators.scd import (
-        scd2_apply_partitioned,
-    )
-
-    path = str(tmp_path / "dim")
-    os.makedirs(f"{path}/_temporary")  # simulate the crash artifact
-    batch = _feed(spark, [(1, "A", 0, 1), (2, "B", 5, 2)])
-    scd2_apply_partitioned(spark, path, batch, "k", "a", "ts", "tb",
-                           n_buckets=4)
-    got = spark.read.parquet(path)
-    assert got.count() == 2
-
-
 def test_streaming_ewma_ingest_equals_batch_any_order(spark, tmp_path):
     """Hourly counts fold additively: the store-fed flags equal the
     batch answer for ANY arrival order (no in-order contract here)."""
@@ -397,80 +378,6 @@ def test_streaming_ewma_ingest_equals_batch_any_order(spark, tmp_path):
     assert any(r[4] for r in got)  # the spike still flags
 
 
-def test_apply_partitioned_heals_interrupted_swap(spark, tmp_path):
-    """Crash-state recovery for the staged-rename bucket commit: a
-    crash between the two swap renames (live gone, .new fully staged)
-    must roll FORWARD — the bucket's full history, including keys NOT
-    in the crashed batch, survives. The old delete-then-write overwrite
-    lost it permanently (r7 ADVICE)."""
-    import os
-    import shutil
-
-    from blinkit_etl_pipeline_spark.operators.scd import (
-        scd2_apply_partitioned,
-        scd2_build,
-    )
-
-    path = str(tmp_path / "dim")
-    b1 = [(1, "A", 0, 1), (2, "X", 0, 2)]
-    b2 = [(1, "B", 10, 3)]
-    b3 = [(2, "Y", 20, 4)]
-    scd2_apply_partitioned(
-        spark, path, _feed(spark, b1), "k", "a", "ts", "tb", n_buckets=1
-    )
-    live = os.path.join(path, "__bucket=0")
-    saved = str(tmp_path / "saved")
-    shutil.copytree(live, saved)  # pre-b2 bucket contents
-    scd2_apply_partitioned(
-        spark, path, _feed(spark, b2), "k", "a", "ts", "tb", n_buckets=1
-    )
-    # reconstruct the exact mid-swap crash state: live renamed away
-    # (.old = pre-b2 data), .new = fully staged post-b2 data
-    os.rename(live, os.path.join(path, ".new-__bucket=0"))
-    os.rename(saved, os.path.join(path, ".old-__bucket=0"))
-    scd2_apply_partitioned(
-        spark, path, _feed(spark, b3), "k", "a", "ts", "tb", n_buckets=1
-    )
-    got = spark.read.parquet(path).drop("__bucket")
-    full = scd2_build(_feed(spark, b1 + b2 + b3), "k", "a", "ts", "tb")
-    assert _rows(got) == _rows(full)
-    assert not [
-        n for n in os.listdir(path) if n.startswith((".new-", ".old-"))
-    ]
-
-
-def test_apply_partitioned_heals_trailing_swap_states(spark, tmp_path):
-    """The two post-forward-rename crash states: (.old + live present)
-    drops the trash; a stale pre-swap .new (live present, no .old) is
-    discarded without touching live data."""
-    import os
-    import shutil
-
-    from blinkit_etl_pipeline_spark.operators.scd import (
-        scd2_apply_partitioned,
-        scd2_build,
-    )
-
-    path = str(tmp_path / "dim")
-    b1 = [(1, "A", 0, 1), (2, "X", 0, 2)]
-    b2 = [(1, "B", 10, 3)]
-    scd2_apply_partitioned(
-        spark, path, _feed(spark, b1), "k", "a", "ts", "tb", n_buckets=1
-    )
-    live = os.path.join(path, "__bucket=0")
-    shutil.copytree(live, os.path.join(path, ".old-__bucket=0"))
-    shutil.copytree(live, os.path.join(path, ".new-__bucket=0"))
-    scd2_apply_partitioned(
-        spark, path, _feed(spark, b2), "k", "a", "ts", "tb", n_buckets=1
-    )
-    got = spark.read.parquet(path).drop("__bucket")
-    full = scd2_build(_feed(spark, b1 + b2), "k", "a", "ts", "tb")
-    assert _rows(got) == _rows(full)
-    assert not [
-        n for n in os.listdir(path) if n.startswith((".new-", ".old-"))
-    ]
-
-
 def test_snapshot_store_mvcc_reader_isolation(spark, tmp_path):
     """r9 (VERDICT r8 task #3): the snapshot-backed apply gives
     concurrent readers MVCC isolation — a reader pinned to the
@@ -520,8 +427,7 @@ def test_snapshot_store_mvcc_reader_isolation(spark, tmp_path):
 
 def test_snapshot_store_bucket_pin_and_idempotent_redelivery(spark, tmp_path):
     """The bucket count is a write-once format property; redelivering
-    an applied batch is a no-op by compression (same contract as the
-    rename-swap variant)."""
+    an applied batch is a no-op by compression."""
     import pytest
 
     from blinkit_etl_pipeline_spark.operators import snapshot

@@ -190,6 +190,112 @@ def test_merge_snapshot_delete_and_versions(spark, tmp_path):
     assert S.read_snapshot(spark, t, version=1).filter("k = 1").count() == 1
 
 
+def test_merge_snapshot_deleting_every_row_of_a_file_leaves_none(
+    spark, tmp_path
+):
+    """A merge that deletes every row of a touched file rewrites it to
+    nothing: no row of that file survives, and untouched rows stay."""
+    t = str(tmp_path / "del_file")
+    S.ensure_table_properties(t, {"target_file_rows": 10})
+    S.write_snapshot(_mk(spark, 0, 30, "a"), t, stats_col="k")
+    m1 = S.read_manifest(t)
+    assert len(m1["files"]) > 1
+    first = min(m1["files"], key=lambda e: e["min"])
+    doomed = list(range(first["min"], first["max"] + 1))
+    upd = spark.createDataFrame(
+        [(k, None, True) for k in doomed],
+        "k bigint, v string, is_delete boolean",
+    )
+    _, rewritten = S.merge_snapshot(spark, t, upd, ["k"],
+                                    delete_col="is_delete")
+    assert first["path"] in rewritten
+    got = _rows(S.read_snapshot(spark, t))
+    assert got == [(k, "a") for k in range(30) if k not in doomed]
+
+
+def test_merge_snapshot_bootstraps_missing_table(spark, tmp_path):
+    """The first merge into a missing table creates it from the batch's
+    live rows — deletes never insert, ``version_col`` keeps the newest
+    change per key and is not stored — clustered by the first key."""
+    t = str(tmp_path / "fresh")
+    upd = spark.createDataFrame(
+        [(1, "a", False, 1), (2, None, True, 1), (3, "old", False, 1),
+         (3, "c", False, 2)],
+        "k bigint, v string, is_delete boolean, ver int",
+    )
+    v, rewritten = S.merge_snapshot(spark, t, upd, ["k"],
+                                    delete_col="is_delete",
+                                    version_col="ver")
+    assert (v, rewritten) == (1, [])
+    m = S.read_manifest(t)
+    assert m["stats_col"] == "k" and all("min" in e for e in m["files"])
+    cur = S.read_snapshot(spark, t)
+    assert cur.columns == ["k", "v"]
+    assert _rows(cur) == [(1, "a"), (3, "c")]
+
+
+def test_racing_first_merges_into_a_missing_table_both_land(
+    spark, tmp_path, monkeypatch
+):
+    """Two first merges race into a missing table: the competitor
+    creates version 1 while the first caller is writing its own
+    creation, whose ``expected_version=0`` commit then conflicts — it
+    re-runs as a merge into the winner, so both batches land."""
+    t = str(tmp_path / "merge_race")
+    first, second = _mk(spark, 0, 5, "a"), _mk(spark, 5, 10, "b")
+    real_write = S._write_data_files
+    raced = []
+
+    def write_after_competitor(*args, **kw):
+        if not raced:
+            raced.append(True)
+            S.merge_snapshot(spark, t, second, ["k"])  # wins version 1
+        return real_write(*args, **kw)
+
+    monkeypatch.setattr(S, "_write_data_files", write_after_competitor)
+    v, _ = S.merge_snapshot(spark, t, first, ["k"])
+    assert raced and v == 2
+    assert _rows(S.read_snapshot(spark, t)) == sorted(
+        [(i, "a") for i in range(5)] + [(i, "b") for i in range(5, 10)]
+    )
+
+
+def test_only_snapshot_module_touches_snapshot_internals():
+    """How a table on disk changes is decided in operators/snapshot.py:
+    no other package module references a ``snapshot._*`` name or runs
+    its own ``COMMIT_RETRIES`` loop."""
+    import ast
+    from pathlib import Path
+
+    package = Path(S.__file__).resolve().parents[1]
+    hits = []
+    for p in sorted(package.rglob("*.py")):
+        if p == Path(S.__file__).resolve():
+            continue
+        tree = ast.parse(p.read_text())
+        for node in ast.walk(tree):
+            where = f"{p.relative_to(package)}:{getattr(node, 'lineno', 0)}"
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "snapshot"
+                and node.attr.startswith("_")
+            ):
+                hits.append(f"{where} snapshot.{node.attr}")
+            elif (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").endswith("snapshot")
+                and any(a.name.startswith("_") for a in node.names)
+            ):
+                hits.append(f"{where} private import")
+            elif isinstance(node, (ast.For, ast.AsyncFor)) and any(
+                getattr(n, "id", getattr(n, "attr", None)) == "COMMIT_RETRIES"
+                for n in ast.walk(node.iter)
+            ):
+                hits.append(f"{where} COMMIT_RETRIES loop")
+    assert hits == []
+
+
 def test_expire_snapshots_vacuums_unreferenced_files(spark, tmp_path):
     t = str(tmp_path / "vac")
     S.write_snapshot(_mk(spark, 0, 100, "a"), t, stats_col="k")

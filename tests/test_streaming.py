@@ -392,22 +392,23 @@ def test_stream_stream_interval_join_matches_batch_range_join(spark, tmp_path):
 
 def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
     """Change files drained through the streaming MERGE sink must leave
-    the partitioned table exactly where applying the same batches
+    the snapshot table exactly where applying the same batches
     sequentially with the batch operator would — and a second drain
     with the same checkpoint must be a no-op (exactly-once)."""
     import os
 
-    from blinkit_etl_pipeline_spark.operators import merge as merge_ops
+    from blinkit_etl_pipeline_spark.operators import snapshot
 
     table = str(tmp_path / "cdc_table")
     base = spark.createDataFrame(
         [(i, f"v{i}", i % 2) for i in range(20)],
         "k bigint, v string, part int",
     )
-    base.repartition("part").write.partitionBy("part").parquet(table)
+    # both tables are created by their first MERGE (the bootstrap path)
+    snapshot.merge_snapshot(spark, table, base, ["k"])
     # mirror table for the sequential batch reference
     table_ref = str(tmp_path / "cdc_table_ref")
-    base.repartition("part").write.partitionBy("part").parquet(table_ref)
+    snapshot.merge_snapshot(spark, table_ref, base, ["k"])
 
     batches = [
         [(3, "B1", 1, False), (100, "new1", 0, False)],
@@ -432,21 +433,23 @@ def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
     ckpt = str(tmp_path / "cdc_ckpt")
 
     def process(batch_df, epoch):
-        merge_ops.merge_into_partitioned(
-            batch_df.sparkSession, table, batch_df, ["k"], ["part"],
+        snapshot.merge_snapshot(
+            batch_df.sparkSession, table, batch_df, ["k"],
             delete_col="is_delete",
         )
 
     file_source.run_available_now(stream, ckpt, process)
 
     for rows in batches:
-        merge_ops.merge_into_partitioned(
+        snapshot.merge_snapshot(
             spark, table_ref, spark.createDataFrame(rows, schema),
-            ["k"], ["part"], delete_col="is_delete",
+            ["k"], delete_col="is_delete",
         )
 
-    got = sorted(map(tuple, spark.read.parquet(table).collect()))
-    expect = sorted(map(tuple, spark.read.parquet(table_ref).collect()))
+    def read(t):
+        return sorted(map(tuple, snapshot.read_snapshot(spark, t).collect()))
+
+    got, expect = read(table), read(table_ref)
     assert got == expect and len(got) == 21  # 20 - 1 delete + 2 inserts
 
     # re-drain with the same checkpoint: no new files → table unchanged
@@ -455,7 +458,7 @@ def test_streaming_cdc_merge_matches_sequential_batch_merge(spark, tmp_path):
         fmt="parquet",
     )
     file_source.run_available_now(stream2, ckpt, process)
-    assert sorted(map(tuple, spark.read.parquet(table).collect())) == got
+    assert read(table) == got
 
 
 def test_streaming_funnel_converges_to_batch_depths(spark, tmp_path):
