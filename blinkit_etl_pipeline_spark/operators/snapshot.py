@@ -751,16 +751,29 @@ def compact_snapshot(
 
     Returns ``(version, files_before, files_after)``; a store already
     at/below ``target_files`` is a no-op returning the current version.
+
+    Refuses a bucketed store (:func:`rewrite_buckets`): its stored rows
+    no longer carry the bucket column, so the compacted files would be
+    untagged and every later bucketed write would refuse the table.
     """
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
+
+    def select(manifest: dict) -> list[dict]:
+        if any("bucket" in e for e in manifest["files"]):
+            raise SnapshotError(
+                f"table at {table} is a bucketed store (manifest entries "
+                "carry bucket tags); compaction would write untagged "
+                "files — rewrite it through rewrite_buckets instead"
+            )
+        return manifest["files"]
+
     manifest = read_manifest(table)
-    if len(manifest["files"]) <= target_files:
+    if len(select(manifest)) <= target_files:
         n = len(manifest["files"])
         return manifest["version"], n, n
     version, before, after = _rewrite(
-        spark, table, lambda m: m["files"], lambda rows: rows,
-        num_files=target_files,
+        spark, table, select, lambda rows: rows, num_files=target_files,
     )
     return version, len(before), len(after)
 

@@ -12,8 +12,8 @@ reference ``lambda/blinkit-etl-orchestrator.py``):
   ``ok`` / ``partial`` / ``failed``; catalog refresh happens if ≥1 job
   succeeded.
 - **C4 catalog refresh** (lambda:83-97): the Glue-crawler equivalent is
-  ``createOrReplaceTempView`` over each written curated table — instant,
-  no inference pass.
+  ``createOrReplaceTempView`` over each written curated table, read with
+  the schema it was written from — no inference pass, no Spark job.
 - **C5 job bracket** (01:21-22,108): no-op in plain Spark.
 
 What each of the five Glue-style jobs owns is declared once, in
@@ -243,8 +243,11 @@ def refresh_job(spec: JobSpec, spark: SparkSession, conf: RunnerConfig) -> int |
             )
         for c in spec.curated:
             path = f"{conf.out_dir}/curated/{c.name}"
-            sinks.write_curated(c.build(rows), path)
-            spark.read.parquet(path).createOrReplaceTempView(c.view)
+            out = c.build(rows)
+            sinks.write_curated(out, path)
+            # the written schema: a bare read runs a footer-schema job
+            # for the same schema (file sources read columns nullable)
+            spark.read.schema(out.schema).parquet(path).createOrReplaceTempView(c.view)
         return None if obs is None else metrics.get_count(obs)
     finally:
         if shared:

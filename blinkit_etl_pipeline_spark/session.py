@@ -16,6 +16,39 @@ local[N]):
   setting here it is made once, when the session is built; no operator
   changes a session's conf at run time.
 
+Compile cost. A batch refresh or a drop round runs ~200 distinct
+whole-stage plans over a few hundred rows each, so on a cold JVM the
+compilers, not the data, take most of the CPU: about 60 % of a cold
+perfbench iteration's CPU time was JIT compilation, summed over the
+compiler threads (4 vCPUs, all three workloads). Two settings cut it:
+
+- ``-XX:CICompilerCount`` (:func:`jit_compiler_threads`, one JIT thread
+  per four cores, at least 2). HotSpot's own choice at 4 vCPUs is 3
+  (one C1, two C2 threads), and the two C2 threads compete with the 4
+  task threads; a JFR recording of a batch_etl run put 46 s of C2 time
+  across Janino, Java serialization, Catalyst, Parquet and Scala, with
+  no single package dominating. With 2 threads (and the codegen cache
+  below), a cold perfbench iteration's CPU time fell from 65.1 to
+  53.3 s on batch_etl (also with ``runner``'s job-free view
+  registration), 53.2 → 43.0 s on incremental_drops and 62.6 → 53.1 s
+  on corpus_curation, and summed JIT time by a third or more (medians
+  of 10 alternating pairs); wall times moved by less than their
+  spread.
+  Measured only at 4 vCPUs; other core counts are not measured. Only
+  the driver carries the flag: on ``local[N]`` it is the only JVM, and
+  executor JIT on a cluster is not measured.
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``
+  (static; Spark's default is 100). The ~200 plan shapes of one batch
+  refresh thrash a 100-entry cache, so every warm refresh recompiled
+  ~186 classes; at 2000 a warm refresh compiles a handful. That serves
+  long-lived sessions (streaming, test suites, warm traced runs), not
+  the first, cold iteration.
+
+C1-only tiering (``-XX:TieredStopAtLevel=1``) is not used: it halved
+the cold iterations' CPU time, but a warm corpus_curation iteration
+went from 6.4 to 8.7 s, with ``operators.dedup`` self time 3.5 → 5.1 s,
+since C1 code is slower once the work is steady.
+
 The iterative operators' round loops (pagerank delta, graph walks, MMR)
 build their contract-bounded frames through :func:`bounded_call`, which
 plans them non-adaptively in a clone of the caller's session; the
@@ -45,8 +78,20 @@ BOUNDED_SHUFFLE_PARTITIONS = 4
 ISIN_PUSHDOWN_MAX = 768
 
 
+#: static ``spark.sql.codegen.cache.maxEntries``: above the ~200
+#: distinct whole-stage plans one batch refresh compiles (module doc)
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def jit_compiler_threads(cpus: int) -> int:
+    """The driver's ``-XX:CICompilerCount``: one JIT compiler thread per
+    four cores, and at least the two (one C1, one C2) tiered
+    compilation needs (module doc)."""
+    return max(2, cpus // 4)
 
 
 def default_driver_memory(ram_bytes: int | None) -> str:
@@ -111,8 +156,10 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
         # master).
         .config(
             "spark.driver.extraJavaOptions",
-            "-Dderby.system.home=/tmp/blinkit-derby -Xss8m",
+            "-Dderby.system.home=/tmp/blinkit-derby -Xss8m"
+            f" -XX:CICompilerCount={jit_compiler_threads(cpus)}",
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.executor.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_EXECUTOR_OPTS", "-Xss8m"),
@@ -123,6 +170,29 @@ def get_session(app_name: str = "blinkit_etl_pipeline_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_counters(spark: SparkSession) -> dict[str, int]:
+    """The driver JVM's cumulative compile, class-loading and GC cost
+    since it started, read over py4j: ``jit_ms`` (JIT compile time
+    summed over compiler threads), ``classes_loaded``, ``gc_ms``,
+    ``codegen_compiles`` (Janino compiles of generated classes — a
+    codegen cache hit is not one) and ``codegen_ms``. Diff two readings
+    for the cost of the work between them; on ``local[N]`` that is all
+    of it, executors run in this JVM."""
+    jvm = spark._jvm
+    beans = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "jit_ms": beans.getCompilationMXBean().getTotalCompilationTime(),
+        "classes_loaded": beans.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "gc_ms": sum(
+            gc.getCollectionTime() for gc in beans.getGarbageCollectorMXBeans()
+        ),
+        "codegen_compiles": compiles.METRIC_COMPILATION_TIME().getCount(),
+        "codegen_ms": codegen.compileTime() // 1_000_000,
+    }
 
 
 def bounded_call(fn, *args, **kwargs):

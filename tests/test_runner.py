@@ -71,6 +71,97 @@ def test_stack_size_on_both_sides(spark):
     assert "-Xss8m" in (conf.get("spark.executor.extraJavaOptions") or "")
 
 
+def test_jit_threads_and_codegen_cache_reach_the_jvm(spark):
+    """The running driver JVM has the derived compiler-thread count
+    (HotSpot's own choice at 4 cores is 3), and the session the
+    static codegen cache size."""
+    from blinkit_etl_pipeline_spark import session
+
+    jvm = spark._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    threads = session.jit_compiler_threads(session.default_parallelism())
+    assert hotspot.getVMOption("CICompilerCount").getValue() == str(threads)
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+
+
+#: Spark jobs of a batch refresh of all five jobs over the smoke data,
+#: once the source tables are registered: C4 starts none of them (a bare
+#: ``spark.read.parquet`` per curated view would add 6 schema jobs)
+WARM_BATCH_JOBS = 39
+
+
+def _counted_batch_run(spark, out):
+    """A batch refresh of all five jobs into ``out``: (report, Spark
+    jobs it started, JVM counter deltas)."""
+    from blinkit_etl_pipeline_spark import session
+
+    sc = spark.sparkContext
+    conf = runner.RunnerConfig(sf_dir=SF_SMOKE, out_dir=str(out))
+    group = f"batch-run-{out.name}"
+    before = session.jvm_counters(spark)
+    sc.setJobGroup(group, group, False)
+    try:
+        report = runner.run_jobs_sequential(spark, conf, list(runner.ALL_JOBS))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    after = session.jvm_counters(spark)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return report, jobs, {k: after[k] - before[k] for k in after}
+
+
+@pytest.fixture(scope="module")
+def warm_batch_run(spark, tmp_path_factory):
+    """The second of two batch refreshes into fresh directories:
+    (out_dir, report, Spark jobs, JVM counter deltas)."""
+    _counted_batch_run(spark, tmp_path_factory.mktemp("cold-batch"))
+    out = tmp_path_factory.mktemp("warm-batch")
+    return (out, *_counted_batch_run(spark, out))
+
+
+def test_warm_batch_run_hits_the_codegen_cache(warm_batch_run):
+    """A repeated refresh finds its ~150 generated classes in the
+    codegen cache instead of recompiling them."""
+    _, report, _, cost = warm_batch_run
+    assert report.overall == "ok", report.errors
+    assert cost["codegen_compiles"] <= 10, cost
+
+
+def test_view_registration_starts_no_job(spark, warm_batch_run):
+    """C4 registers each curated view without a schema-inference job,
+    and the view equals a bare read of the written table."""
+    out, report, jobs, _ = warm_batch_run
+    assert report.overall == "ok", report.errors
+    assert jobs == WARM_BATCH_JOBS
+    for spec in runner.JOB_TABLE:
+        for c in spec.curated:
+            bare = spark.read.parquet(str(out / "curated" / c.name))
+            view = spark.table(c.view)
+            assert view.schema == bare.schema, c.view
+            assert sorted(view.collect(), key=repr) == sorted(
+                bare.collect(), key=repr
+            ), c.view
+
+
+def test_jvm_counters_grow_with_work(spark):
+    from blinkit_etl_pipeline_spark import session
+
+    before = session.jvm_counters(spark)
+    # a plan shape no other test compiles
+    spark.range(50).selectExpr("id * 7919 % 13 AS jvm_counters_probe").collect()
+    after = session.jvm_counters(spark)
+    assert set(before) == {
+        "jit_ms", "classes_loaded", "gc_ms", "codegen_compiles", "codegen_ms"
+    }
+    assert all(after[k] >= before[k] for k in before)
+    assert after["codegen_compiles"] > before["codegen_compiles"]
+
+
 def test_driver_memory_default_fits_the_box():
     """The driver heap defaults to 16g, capped at three quarters of
     physical RAM (a 16g heap on a 15 GB box invites the OOM killer)."""

@@ -464,6 +464,37 @@ def test_snapshot_apply_refuses_untagged_store(spark, tmp_path):
         )
 
 
+def test_compaction_refuses_bucketed_store(spark, tmp_path):
+    """Compacting a bucketed SCD2 store would write untagged files
+    (stored rows drop the bucket column) and lock every later apply
+    out; compaction refuses it and the store stays appliable."""
+    import pytest
+
+    from blinkit_etl_pipeline_spark.operators import snapshot
+
+    table = str(tmp_path / "dim")
+    for step in range(3):
+        scd.scd2_apply_snapshot(
+            spark, table,
+            _feed(spark, [(k, "AB"[step % 2], step * 10 + k, step * 100 + k)
+                          for k in range(1, 9)]),
+            "k", "a", "ts", "tb", n_buckets=4,
+        )
+    before = snapshot.read_manifest(table)
+    with pytest.raises(snapshot.SnapshotError, match="rewrite_buckets"):
+        snapshot.compact_snapshot(spark, table, target_files=1)
+    assert snapshot.read_manifest(table)["version"] == before["version"]
+    scd.scd2_apply_snapshot(
+        spark, table, _feed(spark, [(1, "C", 99, 999)]), "k", "a", "ts", "tb"
+    )
+    current = {
+        r.k: r.state
+        for r in snapshot.read_snapshot(spark, table).collect()
+        if r.is_current
+    }
+    assert current[1] == "C" and len(current) == 8
+
+
 def test_scd2_changes_classification_and_store_twin(spark, tmp_path):
     """r9: the CDC-out feed classifies correctly — closing a current
     version emits an update pre/post pair, the new version an insert;
